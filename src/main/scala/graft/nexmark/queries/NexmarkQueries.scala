@@ -74,107 +74,95 @@ object NexmarkQueries {
               col("col.bidCount").as("bidCount"), col("col.maxPrice").as("maxPrice"))
   }
 
-  /** Q8 (J2 cogroup spec, NexmarkQuery8.java:106-153,541-568): per tumbling
-    * window, new persons joined to their new auctions; one output row per
-    * (window, person) carrying the latest-ingested auction's timestamps.
+  /** Persons co-grouped with one other per-person stream (auctions or bids)
+    * per (window, personId) in ONE stateful aggregation over the union of
+    * both inputs. When both sides share the group key, a join followed by
+    * a group-by is one co-grouped aggregation: one shuffle and one state
+    * store per partition, where a person agg → stream-stream join → agg
+    * chain keeps an agg store, the join's four stores and a second agg
+    * store, and commits all of them every micro-batch.
+    *
+    * Each input is watermarked BEFORE the union, so the global watermark is
+    * the min of the two per-input watermarks, as in a join: a window closes
+    * only once both sides have passed it, and neither side's rows are
+    * judged late against the other side's event time. `win` maps the
+    * unioned event time to the window key (tumbling, sliding or session).
+    * Each row carries `eventTime`, `personId`, `isPerson` and those of
+    * `cols` its input has (the rest are null); `aggs` pick a side with
+    * `isPerson`. Only keys with a person row and an other row survive —
+    * the inner-join semantics.
     */
-  def q8NewUsers(persons: Dataset[Person], auctions: Dataset[Auction],
-                 windowDur: String, wm: String = "2 seconds"): DataFrame = {
-    val p = watermarked(persons.toDF, wm)
-      .select(window(col("eventTime"), windowDur).as("win"), col("personId"),
-              col("timestamp").as("personCreation"),
-              col("ingestionTimestamp").as("personIngestion"))
-      // ValueState<person> keeps one person per key (NexmarkQuery8.java:621-627)
-      .groupBy(col("win"), col("personId"))
-      .agg(max(col("personCreation")).as("personCreation"),
-           max(col("personIngestion")).as("personIngestion"))
-    val a = watermarked(auctions.toDF, wm)
-      .select(window(col("eventTime"), windowDur).as("win"),
-              col("personId"),
-              col("timestamp").as("auctionCreation"),
-              col("ingestionTimestamp").as("auctionIngestion"))
-    p.join(a, Seq("win", "personId"))
-      // JoiningNewUsersWithAuctionsCoGroupFunction picks the auction with
-      // max ingestion time (NexmarkQuery8.java:118-147)
-      .groupBy(col("win"), col("personId"), col("personCreation"), col("personIngestion"))
-      .agg(max_by(col("auctionCreation"), struct(col("auctionIngestion"), col("auctionCreation"))).as("auctionCreation"),
-           max(col("auctionIngestion")).as("auctionIngestion"))
-      .select(unix_millis(col("win.start")).as("windowStartMs"), col("personId"),
+  private def perPersonWindows(persons: DataFrame, other: DataFrame, cols: Seq[String],
+                               win: Column => Column, wm: String)(aggs: Column*): DataFrame = {
+    def side(df: DataFrame, isPerson: Boolean): DataFrame = {
+      val w = watermarked(df, wm)
+      w.select(Seq(col("eventTime"), col("personId")) ++
+        cols.filter(w.columns.contains).map(col) :+ lit(isPerson).as("isPerson"): _*)
+    }
+    side(persons, isPerson = true)
+      .unionByName(side(other, isPerson = false), allowMissingColumns = true)
+      .groupBy(win(col("eventTime")).as("win"), col("personId"))
+      .agg(max(col("isPerson")).as("hasPerson"), max(!col("isPerson")).as("hasOther") +: aggs: _*)
+      .filter(col("hasPerson") && col("hasOther"))
+  }
+
+  /** Q8 (J2 cogroup spec, NexmarkQuery8.java:106-153,541-568): per window,
+    * new persons joined to their new auctions; one output row per
+    * (window, person) carrying the person's latest stamps (ValueState keeps
+    * one person per key, :621-627) and the latest-ingested auction's
+    * (JoiningNewUsersWithAuctionsCoGroupFunction, :118-147; ties on
+    * ingestion → the later creation). Built as one union aggregate
+    * ([[perPersonWindows]]); `startCol` names the window-start column.
+    */
+  private def newUsers(persons: Dataset[Person], auctions: Dataset[Auction], win: Column => Column,
+                       wm: String, startCol: String = "windowStartMs"): DataFrame = {
+    val isPerson = col("isPerson")
+    def auction(c: Column) = when(!isPerson, c)
+    perPersonWindows(persons.toDF, auctions.toDF, Seq("timestamp", "ingestionTimestamp"), win, wm)(
+      max(when(isPerson, col("timestamp"))).as("personCreation"),
+      max(when(isPerson, col("ingestionTimestamp"))).as("personIngestion"),
+      max_by(auction(col("timestamp")),
+             auction(struct(col("ingestionTimestamp"), col("timestamp")))).as("auctionCreation"),
+      max(auction(col("ingestionTimestamp"))).as("auctionIngestion"))
+      .select(unix_millis(col("win.start")).as(startCol), col("personId"),
               col("personCreation"), col("personIngestion"),
               col("auctionCreation"), col("auctionIngestion"))
   }
 
+  /** Q8 with tumbling windows (window-type 0). */
+  def q8NewUsers(persons: Dataset[Person], auctions: Dataset[Auction],
+                 windowDur: String, wm: String = "2 seconds"): DataFrame =
+    newUsers(persons, auctions, window(_, windowDur), wm)
+
   /** Q8 window-type switch (NexmarkQuery8.java:541-554: 0=tumbling,
-    * 1=sliding, 2=session). Sliding: same join keyed on every overlapping
-    * window. Session: both streams unioned per person build shared session
-    * windows (the keyed-session cogroup semantics), then persons join
-    * auctions within their session.
+    * 1=sliding, 2=session). Sliding: the same union aggregate keyed on
+    * every overlapping window.
     */
   def q8NewUsersSliding(persons: Dataset[Person], auctions: Dataset[Auction],
                         windowDur: String, slide: String,
-                        wm: String = "2 seconds"): DataFrame = {
-    val p = watermarked(persons.toDF, wm)
-      .select(window(col("eventTime"), windowDur, slide).as("win"), col("personId"),
-              col("timestamp").as("personCreation"),
-              col("ingestionTimestamp").as("personIngestion"))
-      .groupBy(col("win"), col("personId"))
-      .agg(max(col("personCreation")).as("personCreation"),
-           max(col("personIngestion")).as("personIngestion"))
-    val a = watermarked(auctions.toDF, wm)
-      .select(window(col("eventTime"), windowDur, slide).as("win"),
-              col("personId"),
-              col("timestamp").as("auctionCreation"),
-              col("ingestionTimestamp").as("auctionIngestion"))
-    p.join(a, Seq("win", "personId"))
-      .groupBy(col("win"), col("personId"), col("personCreation"), col("personIngestion"))
-      .agg(max_by(col("auctionCreation"), struct(col("auctionIngestion"), col("auctionCreation"))).as("auctionCreation"),
-           max(col("auctionIngestion")).as("auctionIngestion"))
-      .select(unix_millis(col("win.start")).as("windowStartMs"), col("personId"),
-              col("personCreation"), col("personIngestion"),
-              col("auctionCreation"), col("auctionIngestion"))
-  }
+                        wm: String = "2 seconds"): DataFrame =
+    newUsers(persons, auctions, window(_, windowDur, slide), wm)
 
+  /** Session: both streams per person build SHARED session windows (the
+    * reference cogroups both streams into the same keyed session windows);
+    * only sessions with a person and an auction emit.
+    */
   def q8NewUsersSession(persons: Dataset[Person], auctions: Dataset[Auction],
-                        gap: String, wm: String = "2 seconds"): DataFrame = {
-    // shared sessions from the UNION of both streams per person (the
-    // reference cogroups both streams into the same keyed session windows)
-    val p = persons.toDF.select(col("personId"), col("timestamp"),
-      col("ingestionTimestamp"), lit(true).as("isPerson"))
-    val a = auctions.toDF.select(col("personId"), col("timestamp"),
-      col("ingestionTimestamp"), lit(false).as("isPerson"))
-    val u = watermarked(p.unionByName(a), wm)
-    val sessions = u
-      .groupBy(session_window(col("eventTime"), gap).as("win"), col("personId"))
-      .agg(
-        max(when(col("isPerson"), col("timestamp"))).as("personCreation"),
-        max(when(col("isPerson"), col("ingestionTimestamp"))).as("personIngestion"),
-        max_by(when(!col("isPerson"), col("timestamp")),
-               struct(when(!col("isPerson"), col("ingestionTimestamp")),
-                      when(!col("isPerson"), col("timestamp")))).as("auctionCreation"),
-        max(when(!col("isPerson"), col("ingestionTimestamp"))).as("auctionIngestion"))
-      // J2 semantics: only sessions containing >= 1 person and >= 1 auction
-      .filter(col("personCreation").isNotNull && col("auctionIngestion").isNotNull)
-    sessions.select(unix_millis(col("win.start")).as("sessionStartMs"), col("personId"),
-      col("personCreation"), col("personIngestion"),
-      col("auctionCreation"), col("auctionIngestion"))
-  }
+                        gap: String, wm: String = "2 seconds"): DataFrame =
+    newUsers(persons, auctions, session_window(_, gap), wm, "sessionStartMs")
 
   /** Q11 (J3, NexmarkQuery11File.java:397-457): persons ⋈ bids on personId
-    * (bidder activity per window).
+    * (bidder activity per window): per (window, person) with at least one
+    * person event, the bid count, max bid and last bid time — one union
+    * aggregate ([[perPersonWindows]]) instead of a person agg → join → agg.
     */
   def q11BidderActivity(persons: Dataset[Person], bids: Dataset[Bid],
                         windowDur: String, wm: String = "2 seconds"): DataFrame = {
-    val p = watermarked(persons.toDF, wm)
-      .select(window(col("eventTime"), windowDur).as("win"), col("personId"))
-      .groupBy(col("win"), col("personId")).agg(count(lit(1)).as("personEvents"))
-    val b = watermarked(bids.toDF, wm)
-      .select(window(col("eventTime"), windowDur).as("win"),
-              col("personId"), col("bid"), col("timestamp"))
-    p.join(b, Seq("win", "personId"))
-      .groupBy(col("win"), col("personId"))
-      .agg(count(lit(1)).as("bidCount"),
-           max(col("bid")).as("maxBid"),
-           max(col("timestamp")).as("lastBidTimestamp"))
+    def bid(c: String) = when(!col("isPerson"), col(c))
+    perPersonWindows(persons.toDF, bids.toDF, Seq("bid", "timestamp"), window(_, windowDur), wm)(
+      count(bid("bid")).as("bidCount"),
+      max(bid("bid")).as("maxBid"),
+      max(bid("timestamp")).as("lastBidTimestamp"))
       .select(unix_millis(col("win.start")).as("windowStartMs"), col("personId"),
               col("bidCount"), col("maxBid"), col("lastBidTimestamp"))
   }

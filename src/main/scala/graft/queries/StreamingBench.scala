@@ -198,11 +198,10 @@ object StreamingBench extends QueryModule {
     *
     * shuffle.partitions is pinned to the source parallelism for the run:
     * every stateful operator creates one state store PER shuffle partition
-    * and commits each of them EVERY micro-batch, so a 3-stateful-operator
-    * pipeline (agg → join → agg) at 32 partitions × 7 batches pays ~700
-    * state commits of pure overhead. Sizing stores to the actual
-    * parallelism is the same knob a cluster deployment tunes (state store
-    * count ≈ cores, not default-200). Restored after the run so batch
+    * and commits each of them EVERY micro-batch: ~220 commits of pure
+    * overhead per operator at 32 partitions × 7 batches. Sizing stores to
+    * the actual parallelism is the same knob a cluster deployment tunes
+    * (state store count ≈ cores, not default-200). Restored after the run so batch
     * queries in the same session keep their own setting.
     */
   private def runToParquet(spark: SparkSession, df: DataFrame, name: String,
@@ -562,7 +561,7 @@ object StreamingBench extends QueryModule {
   /** Q11 session windows over a generated bid stream — the heaviest
     * stateful aggregation (merging session state, not fixed panes):
     * rounds out the streaming surface next to the fixed-window agg (Q5),
-    * the stream-stream join (Q8) and arbitrary state (QX).
+    * the two-stream windowed union aggregate (Q8) and arbitrary state (QX).
     * sf0.1 → 1,000,000 bids, 5 s gap.
     */
   def streamQ11Sessions(spark: SparkSession, dir: String): DataFrame = {

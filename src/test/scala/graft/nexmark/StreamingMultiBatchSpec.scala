@@ -341,8 +341,9 @@ class StreamingMultiBatchSpec extends SparkSpec {
   }
 
   test("windowed stream-stream join (q8 new users): 1-batch output == 4-batch output") {
-    // chained stateful shape: person-window agg → join → argmax agg; the
-    // person stream doubles as the auction stream's seller space
+    // one union aggregate per (window, person) over both streams, closed
+    // by the min of their watermarks; the person stream doubles as the
+    // auction stream's seller space
     def q8(batches: Int) =
       runTwo(batches, "q8", aRows = 2000L, aEps = 4L, bRows = 2000L, bEps = 4L) {
         (auctions, _) =>
