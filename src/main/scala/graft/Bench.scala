@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: one JSON line with per-query wall seconds at
   * SPARK_GRAFT_SF_DIR. A warmup pass at the smallest SF first loads
@@ -29,7 +28,6 @@ object Bench {
     // work, not pipeline work — skip them so bench numbers stay pure
     System.setProperty("graft.stream.dumpInputs", "false")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     // a typo'd filter silently benching nothing would read as a 0-second
     // run — same loud guard as Verify
@@ -37,23 +35,7 @@ object Bench {
       val unknown = o -- SparkEntry.queries.keySet
       require(unknown.isEmpty, s"unknown query names in SPARK_GRAFT_ONLY: ${unknown.mkString(",")}")
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // SPARK_GRAFT_SHUFFLE (measurement-only; driver leaves it unset →
-      // partitions = cpus as always): decouples shuffle partition count
-      // from thread count for decade-up probes, where 32 partitions over
-      // 10³× data under-partitions exactly what cluster.conf's 2000
-      // partitions are sized for (r15: s_cosine_cc's 600 M bucket rows
-      // hit per-task execution-memory exhaustion at 32 partitions)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.spark.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.bench()
     val queries = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
 
     def sweep(): Unit = {
@@ -77,7 +59,7 @@ object Bench {
     // sees the same steady-state JVM the entries do.
     def ambientProbe(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0, 2000, 1, cpus.toInt).selectExpr("sum(id * 2 + 1) as s").collect()
+      spark.range(0, 2000, 1, GraftSession.Cpus).selectExpr("sum(id * 2 + 1) as s").collect()
       (System.nanoTime() - t0) / 1e9
     }
     val ambient = (1 to 3).map(_ => ambientProbe()).sorted.apply(1)

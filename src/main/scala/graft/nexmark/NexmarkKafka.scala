@@ -1,48 +1,17 @@
 package graft.nexmark
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.streaming.DataStreamWriter
-import graft.nexmark.codec.{BinaryCodec, TaggedCodec}
+import graft.nexmark.codec.TaggedCodec
 import graft.nexmark.sink.Murmur3Partitioner
 
-/** Kafka wiring (SURVEY §2.1 S4, §2.2 K4). The decode/encode kernels are
-  * unit-tested locally (BinaryCodecSpec/TaggedCodecSpec); these functions
-  * supply the Spark topology around them and require a reachable broker —
-  * the zero-egress build environment has none, so they are exercised only
-  * through their frame-level codecs (the reference's test suite ran its
-  * Kafka paths against an external broker too, NexmarkSuite.java:136-164).
-  *
-  * Bounded-stream termination: the reference's `isEndOfStream` backlog
-  * check (PersonDeserializationSchema.java:102-104) has no Spark analog;
-  * `Trigger.AvailableNow` is the equivalent (SURVEY §7.4.5).
+/** Kafka producer wiring (SURVEY §2.2 K4). The encode kernels are
+  * unit-tested locally (BinaryCodecSpec/TaggedCodecSpec) and the producer
+  * projection is exercised broker-less (BrokerlessPipelineSpec); the
+  * Kafka sink itself needs a broker and the `spark-sql-kafka` connector,
+  * which the build does not ship.
   */
 object NexmarkKafka {
-
-  private def rawValues(spark: SparkSession, servers: String, topic: String): Dataset[Array[Byte]] = {
-    import spark.implicits._
-    spark.readStream
-      .format("kafka")
-      .option("kafka.bootstrap.servers", servers)
-      .option("subscribe", topic)
-      .option("startingOffsets", "earliest")
-      .load()
-      .select("value").as[Array[Byte]]
-  }
-
-  /** S4: 8 KiB-framed typed topics (nexmark_persons/auctions/bids). */
-  def personsFromKafka(spark: SparkSession, servers: String, topic: String = "nexmark_persons"): Dataset[Person] =
-    NexmarkSources.personsFromFrames(rawValues(spark, servers, topic), System.currentTimeMillis())
-  def auctionsFromKafka(spark: SparkSession, servers: String, topic: String = "nexmark_auctions"): Dataset[Auction] =
-    NexmarkSources.auctionsFromFrames(rawValues(spark, servers, topic), System.currentTimeMillis())
-  def bidsFromKafka(spark: SparkSession, servers: String, topic: String = "nexmark_bids"): Dataset[Bid] =
-    NexmarkSources.bidsFromFrames(rawValues(spark, servers, topic), System.currentTimeMillis())
-
-  /** Unified `nexmark-events` topic consumer (tag-framed records). */
-  def eventsFromKafka(spark: SparkSession, servers: String, topic: String = "nexmark-events"): Dataset[Event] = {
-    import spark.implicits._
-    rawValues(spark, servers, topic).map(TaggedCodec.decode)
-  }
 
   /** K4: the producer's exact output projection — `key` (8-byte BE
     * partition key), `value` (tagged wire bytes), `partition` (murmur3

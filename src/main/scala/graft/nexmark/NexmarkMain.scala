@@ -1,6 +1,6 @@
 package graft.nexmark
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 import graft.nexmark.queries.{NexmarkQueries, NexmarkStateful}
 import graft.nexmark.sink.LatencySink
@@ -30,15 +30,7 @@ object NexmarkMain {
     val runSeconds = args.lift(1).map(_.toInt).getOrElse(10)
     val rowsPerBatch = args.lift(2).map(_.toInt).getOrElse(50000)
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName(s"nexmark$flag")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.spark.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     import spark.implicits._
 
     // anchor event time at the run's wall clock (the reference stamps
@@ -170,7 +162,7 @@ object NexmarkMain {
       case "--q5" => // DSv2 source: one strided generator per subtask
         NexmarkQueries.q5HotAuctions(
           NexmarkSources.bidStreamDsv2(spark, cfg,
-            parallelism = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt,
+            parallelism = graft.GraftSession.Cpus,
             rows = rowsPerBatch.toLong * runSeconds * 10,
             rowsPerBatch = rowsPerBatch.toLong), "5 seconds")
       case "--q5s" =>

@@ -399,9 +399,10 @@ object Similarity extends QueryModule {
     * because each band is probed at TWO buckets (see below), so part of
     * the candidate-mass budget is spent on probes instead of bands; the
     * index itself (corpus postings = bands × N rows) SHRINKS by the same
-    * factor. Chosen from the `graft.tools.RangeMpProbe` sweep at sf0.1:
-    * 54 × 2 = 0.856 recall / 34.5% mass (the target band); 64 × 2 = 0.897
-    * / 39.0%; 32 × 4-probe = 0.880 / 39.0%; 27 × 4 = 0.832 / 34.8%. */
+    * factor. Chosen from the band × probe sweep at sf0.1 (BASELINE.md
+    * §Round-15: multi-probe radius search): 54 × 2 = 0.856 recall / 34.5%
+    * mass (the target band); 64 × 2 = 0.897 / 39.0%; 32 × 4-probe = 0.880
+    * / 39.0%; 27 × 4 = 0.832 / 34.8%. */
   private val RangeMpBands = 54
 
   /** `s_range_lsh_mp`: MULTI-PROBE radius search — [[rangeLsh]]'s honest
@@ -422,26 +423,21 @@ object Similarity extends QueryModule {
     * alone, so [[RangeMpBands]] = 54 bands × 2 probes reach 0.856 macro
     * recall at 34.5% candidate mass — vs the 64 single-probe bands' 0.708
     * at ~23% — from a SMALLER index (full sweep table in the
-    * [[RangeMpBands]] doc and BASELINE.md, measured by
-    * `graft.tools.RangeMpProbe`).
+    * [[RangeMpBands]] doc and BASELINE.md §Round-15).
     *
     * Scale shape identical to [[rangeLsh]]: corpus postings are per-row
     * map work (the posting table a 100 TB store would bucket once);
     * probes multiply only the QUERY side (Q × bands × 2 rows, broadcast),
     * and verify touches candidates only.
     */
-  def rangeLshMp(spark: SparkSession, dir: String): DataFrame =
-    rangeLshMpCore(spark, dir, RangeMpBands, doubleFlip = false)
-
-  private[graft] def rangeLshMpCore(spark: SparkSession, dir: String,
-                                    nBands: Int, doubleFlip: Boolean): DataFrame = {
+  def rangeLshMp(spark: SparkSession, dir: String): DataFrame = {
     val e = vecs(spark, dir)
-    val pairs = rangeLshPairs.take(nBands)
+    val pairs = rangeLshPairs.take(RangeMpBands)
     val bands = e.select(col("vec_id"),
       posexplode(array(bandKeyCols(pairs): _*)).as(Seq("band", "bkey")))
     // query side: the per-band comparator coordinates as ONE folded
     // literal (bands × bits × (weight, 1-based i1, 1-based i2)) consumed
-    // by HOFs — NOT `nBands` unrolled struct expressions, whose generated
+    // by HOFs — NOT one unrolled struct expression per band, whose generated
     // code blows Janino's 64 KB method limit and drops the whole stage to
     // interpreted fallback. The HOFs run on Q × bands rows only.
     val coords = typedlit(pairs.map(_._2.map { case (w, i1, i2) => (w, i1 + 1, i2 + 1) }))
@@ -452,24 +448,13 @@ object Similarity extends QueryModule {
         "aggregate(pairs, 0, (a, p) -> a + CASE WHEN element_at(emb, p._2) > element_at(emb, p._3) THEN p._1 ELSE 0 END)"))
       .withColumn("m", expr(
         "transform(pairs, p -> abs(element_at(emb, p._2) - element_at(emb, p._3)))"))
-      // weakest-margin bit selection: argmin by (margin, bit index) twice —
+      // weakest-margin bit selection: argmin by (margin, bit index) —
       // array_position picks the FIRST occurrence of the min, which IS the
       // lowest-index tie-break, identically in DuckDB's list_indexof
       .withColumn("j1", array_position(col("m"), array_min(col("m"))))
-      .withColumn("m2", expr(
-        "transform(m, (x, i) -> CASE WHEN i = j1 - 1 THEN CAST('Infinity' AS DOUBLE) ELSE x END)"))
-      .withColumn("j2", array_position(col("m2"), array_min(col("m2"))))
       .withColumn("w1", expr("shiftleft(1, cast(j1 - 1 as int))"))
-      .withColumn("w2", expr("shiftleft(1, cast(j2 - 1 as int))"))
       .select(col("query_id"), col("band"),
-        explode(
-          if (doubleFlip)
-            array(col("bkey"), col("bkey").bitwiseXOR(col("w1")),
-              col("bkey").bitwiseXOR(col("w2")),
-              col("bkey").bitwiseXOR(col("w1")).bitwiseXOR(col("w2")))
-          else
-            array(col("bkey"), col("bkey").bitwiseXOR(col("w1")))
-        ).as("bkey"))
+        explode(array(col("bkey"), col("bkey").bitwiseXOR(col("w1")))).as("bkey"))
     val cands = bands.join(broadcast(qprobes), Seq("band", "bkey"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"))
@@ -691,7 +676,8 @@ object Similarity extends QueryModule {
   /** Dup-regime band-key WIDTH as a function of corpus size — the class
     * doc's "at 1 B vectors set LshBitsPerBand ≈ 28-32" rule made CODE,
     * after the r15 sf100 decade probe caught the fixed 12-bit width as a
-    * quadratic (graft.tools.CcProbe `mass`): 4 × 4096 bucket keys
+    * quadratic (bucket pair mass, BASELINE.md §Round-15: TWO scale bugs
+    * found and fixed by the sf100 table): 4 × 4096 bucket keys
     * SATURATE at ~10⁵ vectors, after which bucket size grows ∝ N and the
     * candidate pair mass ∝ N² — measured 27.2M pairs at sf10 → 2.73G at
     * sf100 (100× for 10× corpus), whose ~55 GB candidate shuffle
@@ -812,10 +798,8 @@ object Similarity extends QueryModule {
     * dup-pair EDGE LIST both dedup flavors cluster over.
     */
   /** The dup-regime sign-LSH (band, bkey) posting rows at the
-    * corpus-sized key width — split out so `graft.tools.CcProbe` can
-    * measure bucket pair mass (Σ C(|bucket|,2)) on scale fixtures
-    * without materializing a single pair. `n` is the raw corpus row
-    * count (parquet metadata — callers pass
+    * corpus-sized key width, shared by both dedup flavors. `n` is the raw
+    * corpus row count (parquet metadata — callers pass
     * `Tables.embeddings(spark, dir).count()`). */
   private[graft] def dupLshBands(e: DataFrame, n: Long): DataFrame =
     e.select(col("vec_id"),
@@ -1417,10 +1401,6 @@ object Similarity extends QueryModule {
     (dimE, ranked, pe)
   }
 
-  /** The permuted-layout sub-vector view, for the OPQ gain probe. */
-  private[graft] def opqPermutedSubs(spark: SparkSession, dir: String): DataFrame =
-    pqSubs(opqLayout(vecs(spark, dir))._3)
-
   def opqPermute(spark: SparkSession, dir: String): DataFrame = {
     val e = vecs(spark, dir)
     val (dimE, ranked, pe) = opqLayout(e)
@@ -1718,15 +1698,17 @@ object Similarity extends QueryModule {
     * clique fixture — whose replicas snapped to their parents in <= 17
     * rounds — with interpolant chords, real Lloyd's geometry with the
     * classic slow tail (probed: sf1 moves <= 20 points/round from round
-    * ~50 and converges at 76; graft.tools.KmeansProbe). Still a
+    * ~50 and converges at 76 — a per-round trace on the interpolant
+    * fixture of BASELINE.md §Round-13: geometry-preserving embedding
+    * ScaleUp). Still a
     * loud-failure guard against cycling, not a tuning knob. */
   def kmeansConverged(spark: SparkSession, dir: String): DataFrame =
     kmeansIterate(spark, dir, maxRounds = 100)._1
 
   /** Unroll depth of the `s_kmeans_conv` oracle: the max converged round
     * count across the probed scale factors (8 / 7 / 17 at
-    * sf0.001 / 0.01 / 0.1; 76 at the sf1 interpolant fixture —
-    * KmeansProbe trace). Rounds past convergence are EXACT no-ops —
+    * sf0.001 / 0.01 / 0.1; 76 at the sf1 interpolant fixture, see
+    * [[kmeansConverged]]). Rounds past convergence are EXACT no-ops —
     * an unchanged assignment reproduces identical quantized centroids,
     * distances and argmins — so one unroll depth serves every sf whose
     * convergence is at most this deep, and [[kmeansConvEntry]] fails
@@ -3481,9 +3463,9 @@ object Similarity extends QueryModule {
   /** Navigation-graph degree: the symmetrized [[NavGraphK]]-cut edge
     * list is re-cut to the [[NavDegree]] best neighbors per vertex
     * (quantized-cos order). 12 keeps per-hop work bounded at
-    * BeamWidth·NavDegree while lifting the reachability ceiling BeamProbe
-    * measures (grid: degree 8 → 0.67-0.73, degree 12 → ≥ 0.87 at
-    * sf0.1 across round counts). */
+    * BeamWidth·NavDegree while lifting the reachability ceiling (measured
+    * grid: degree 8 → 0.67-0.73, degree 12 → ≥ 0.87 at sf0.1 across round
+    * counts; BASELINE.md §Round-12: beam-search serving split). */
   private[graft] val NavDegree = 12
 
   /** Partition count of the persisted navigation index ([[buildNavIndex]]):
@@ -3599,10 +3581,10 @@ object Similarity extends QueryModule {
     * table every round, and its 3-seed/degree-5 graph held recall@5 at
     * 0.73 at sf0.1). After [[BeamRounds]] rounds, emit the TopK of
     * everything visited plus `n_visited`, the per-query scan cost the
-    * recall-vs-cost tradeoff is priced in. Two design points BeamProbe
-    * measured as load-bearing, both kept: the symmetrize-and-recut (greedy
-    * walks on the raw directed graph stall in the entry cell — recall
-    * 0.18), and the frontier being visited∖expanded (re-expanding
+    * recall-vs-cost tradeoff is priced in. Two design points measured as
+    * load-bearing (BASELINE.md §Round-11 recordings), both kept: the
+    * symmetrize-and-recut (greedy walks on the raw directed graph stall in
+    * the entry cell — recall 0.18), and the frontier being visited∖expanded (re-expanding
     * already-scored neighborhoods wastes every round after the first —
     * recall 0.30 vs 0.88 at sf0.01). Complements [[knnServe]]: that entry
     * serves from persisted IVF cells (scan a probed bucket), this one
@@ -3687,8 +3669,8 @@ object Similarity extends QueryModule {
       .select(col("query_id"), col("vec_id"), col("cos6"), col("rk"), col("n_visited"))
   }
 
-  /** The [[knnBeam]] entry-point election, split out for BeamProbe: the
-    * [[SeedN]] best pivot vertices per query by quantized cosine. */
+  /** The [[knnBeam]] entry-point election: the [[SeedN]] best pivot
+    * vertices per query by quantized cosine. */
   private[graft] def beamSeeds(spark: SparkSession, dir: String): DataFrame = {
     val e = vecs(spark, dir).select(col("vec_id"), col("emb"))
     val q = e.filter(col("vec_id") % QueryMod === 0)

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.GraftSession
 import graft.nexmark.{GenConfig, NexmarkSources}
 import graft.nexmark.queries.{NexmarkQueries, NexmarkStateful}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -86,38 +87,8 @@ object StreamingBench extends QueryModule {
     * batch. A pure function of `rows` (itself a pure function of sf), so
     * batch boundaries — and therefore the watermark sequence — stay
     * deterministic per sf.
-    *
-    * GRAFT_STREAM_ROWS_PER_BATCH (opt-in, measurement only — the gate
-    * always runs the default): pins the per-subtask batch size to a
-    * CONSTANT, so a decade-up run admits ×10 the batches instead of ×10
-    * the rows per batch. This is the probe that separates operator cost
-    * from the replay protocol's artifact (r11 VERDICT Next #3): under
-    * the fixed 3-batch plan, per-batch admitted volume — and therefore
-    * per-commit state churn — grows with SF, which is NOT how a
-    * production stream scales (volume growth means a longer run at
-    * bounded per-batch size, not fatter batches). The oracles whose
-    * model depends only on the FINAL watermark (stream_topk, q5, …) stay
-    * exact under any batching; the timer-replay oracles reconstruct the
-    * watermark sequence from the admission plan, so the knob must not be
-    * set for a correctness run.
     */
-  private def rowsPerBatchFor(rows: Long): Long = {
-    val dflt = math.max(1L, (rows + 2) / 3)
-    sys.env.get("GRAFT_STREAM_ROWS_PER_BATCH") match {
-      case Some(v) =>
-        // ENFORCED, not just documented: the knob is a measurement-only
-        // probe. A correctness run (= any run that dumps inputs for the
-        // DuckDB oracle; the bench sets graft.stream.dumpInputs=false)
-        // must fail fast rather than silently collapse the multi-batch
-        // plan the watermark-interleaving guard exists to exercise.
-        if (sys.props.getOrElse("graft.stream.dumpInputs", "true").toBoolean)
-          throw new IllegalStateException(
-            "GRAFT_STREAM_ROWS_PER_BATCH is set but this is a correctness " +
-            "run (input dump enabled) — the knob is bench-probe only; unset it")
-        math.max(1L, v.toLong)
-      case None => dflt
-    }
-  }
+  private def rowsPerBatchFor(rows: Long): Long = math.max(1L, (rows + 2) / 3)
 
   /** Data micro-batches the admission plan yields: ceil(rows / rpb). */
   private def expectedBatches(rows: Long): Int =
@@ -210,112 +181,19 @@ object StreamingBench extends QueryModule {
     val base = java.nio.file.Files.createTempDirectory(s"graftstream_$id")
     tmpDirs.add(base)
     val out = s"$base/out"; val ckpt = s"$base/ckpt"
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    // GRAFT_STATE_PARTITIONS overrides the state-store instance count
-    // (shuffle partitions = stores per stateful operator) WITHOUT touching
-    // source parallelism or volume — the knob the r10 partition-count
-    // sweep turns to measure how per-instance working-set size drives
-    // RocksDB LSM amplification (BASELINE.md §Scaling), and the same
-    // lever a cluster deployment sizes (cluster.conf: 2000)
-    val statePartitions = sys.env.get("GRAFT_STATE_PARTITIONS")
-      .map(_.toInt).getOrElse(Parallelism)
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
-    // GRAFT_STREAM_CONF (measurement-only): semicolon-separated k=v Spark
-    // confs applied for this run and restored after — the lever the r13
-    // commit-floor mitigation sweep turns (minBatchesToRetain, state
-    // maintenanceInterval) without baking any sweep point into the gate
-    // path. NOT for `fileSink.log.*` confs: the sink's metadata-log READER
-    // derives expected `.compact` ids from the session conf AT READ TIME,
-    // and the restore below runs before the final spark.read of the sink —
-    // a compactInterval override would make that read fail with
-    // "N.compact doesn't exist". Inject sink-log confs as `-Dspark.*`
-    // system properties instead (tools/commit_floor_sweep.sh does).
-    val extraConf: Seq[(String, String)] = sys.env.get("GRAFT_STREAM_CONF").toSeq
-      .flatMap(_.split(";")).filter(_.contains("="))
-      .map { kv => val a = kv.split("=", 2); (a(0).trim, a(1).trim) }
-    val prevExtra = extraConf.map { case (k, _) => k -> spark.conf.getOption(k) }
-    extraConf.foreach { case (k, v) => spark.conf.set(k, v) }
-    // GRAFT_STATE_PROVIDER=rocksdb switches every entry to the disk-backed
-    // provider (the companion lever to GRAFT_STATE_PARTITIONS). The default
-    // HDFSBackedStateStoreProvider holds each store's versioned maps ON
-    // HEAP — at decade-up volumes a local[32] single JVM hosts ALL state
-    // store instances, so heap usage is ∝ TOTAL retained state regardless
-    // of partition count (the sf10 stream_q8_join OOM that motivated this
-    // knob). RocksDB bounds heap at the block-cache size; on a cluster the
-    // same setting is what cluster.conf ships.
-    // GRAFT_STREAM_SINK=foreachBatch (measurement-only): the NO-METADATA
-    // sink control for the commit-floor attribution — per-batch direct
-    // parquet appends, no `_spark_metadata` log to compact, so the delta
-    // vs the default file sink isolates the sink-log term of the commit
-    // floor. Bench-probe only: without the transactional log, task
-    // retries could duplicate files, so a correctness run must fail fast
-    // (same enforcement as GRAFT_STREAM_ROWS_PER_BATCH).
-    val sinkMode = sys.env.getOrElse("GRAFT_STREAM_SINK", "parquet")
-    if (sinkMode != "parquet" &&
-        sys.props.getOrElse("graft.stream.dumpInputs", "true").toBoolean)
-      throw new IllegalStateException(
-        "GRAFT_STREAM_SINK is set but this is a correctness run — unset it")
-    def run(): Unit = {
-      val base = if (sinkMode == "foreachBatch")
-        df.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(out)
-        }
-      else
-        df.writeStream.format("parquet").option("path", out)
-      base.option("checkpointLocation", ckpt)
+    GraftSession.withConf(spark)("spark.sql.shuffle.partitions" -> Parallelism.toString) {
+      df.writeStream.format("parquet").option("path", out)
+        .option("checkpointLocation", ckpt)
         .outputMode("append").trigger(Trigger.AvailableNow())
         .start()
         .awaitTermination()
-    }
-    try {
-      if (sys.env.get("GRAFT_STATE_PROVIDER").contains("rocksdb"))
-        withRocksDB(spark)(run())
-      else run()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      prevExtra.foreach {
-        case (k, Some(p)) => spark.conf.set(k, p)
-        case (k, None)    => spark.conf.unset(k)
-      }
-    }
-    // GRAFT_STREAM_COMMIT_STATS=1: print the per-batch completion-time
-    // trend — batch id → file mtime from the commit log AND the sink
-    // metadata log (whichever retains more ids; the commit log keeps only
-    // the last minBatchesToRetain, sink deltas survive until cleanupDelay)
-    // — as decile-averaged per-batch seconds. This is the direct evidence
-    // surface for "does the commit floor grow with batches elapsed".
-    if (sys.env.contains("GRAFT_STREAM_COMMIT_STATS")) {
-      def mtimes(dir: String): Array[(Long, Long)] =
-        Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-          .flatMap(f => f.getName.split("\\.")(0).toLongOption.map(id => (id, f.lastModified())))
-          .groupBy(_._1).map { case (id, xs) => (id, xs.map(_._2).max) }
-          .toArray.sortBy(_._1)
-      val src = Seq(mtimes(s"$ckpt/commits"), mtimes(s"$out/_spark_metadata"))
-        .maxBy(_.length)
-      if (src.length >= 20) {
-        // normalize by id gap: retained ids are NOT consecutive (old sink
-        // deltas survive only as every-compactInterval-th .compact), so an
-        // interval spanning g batches contributes its PER-BATCH time
-        val durs = src.sliding(2).collect {
-          case Array((ia, a), (ib, b)) if ib > ia => (b - a) / 1000.0 / (ib - ia)
-        }.toArray
-        val dec = (0 until 10).map { d =>
-          val lo = d * durs.length / 10
-          val hi = math.max(lo + 1, (d + 1) * durs.length / 10)
-          val s = durs.slice(lo, hi)
-          "%.3f".formatLocal(java.util.Locale.ROOT, s.sum / s.length)
-        }
-        println(s"""COMMITSTATS {"name":"$name","ids":${src.head._1}-${src.last._1},"batches":${src.length},"per_batch_decile_sec":[${dec.mkString(",")}]}""")
-      }
     }
     // multi-batch invariant: the admission plan ([[rowsPerBatchFor]]) must
     // actually have executed — an entry that silently collapsed to one
     // micro-batch would pass the oracle without exercising intermediate
     // watermark advances, which is the behavior this surface verifies.
     // Count as MAX id + 1, not file count: the commit log retains only
-    // the last spark.sql.streaming.minBatchesToRetain (100) entries, so
-    // a >100-batch run (the GRAFT_STREAM_ROWS_PER_BATCH decade probe)
-    // would otherwise read as ~101 and trip the guard spuriously.
+    // the last spark.sql.streaming.minBatchesToRetain (100) entries.
     val committed = Option(new java.io.File(s"$ckpt/commits").listFiles())
       .map(_.flatMap(f => f.getName.toLongOption).foldLeft(-1L)(math.max) + 1)
       .getOrElse(0L)
@@ -942,20 +820,12 @@ object StreamingBench extends QueryModule {
     * exponent 1.13); with the delta commit the entry scales ~linearly
     * (BASELINE.md §Scaling).
     */
-  private def withRocksDB[T](spark: SparkSession)(body: => T): T = {
-    val keys = Seq(
+  private def withRocksDB[T](spark: SparkSession)(body: => T): T =
+    GraftSession.withConf(spark)(
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
-      "spark.sql.streaming.stateStore.rocksdb.blockCacheSizeMB" -> "128")
-    val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(p)) => spark.conf.set(k, p)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
+      "spark.sql.streaming.stateStore.rocksdb.blockCacheSizeMB" -> "128")(body)
 
   /** Q11 session merge on transformWithState over RocksDB — the
     * state-backend-and-API head-to-head for the HEAVIEST state shape

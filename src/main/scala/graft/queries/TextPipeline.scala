@@ -603,7 +603,7 @@ object TextPipeline extends QueryModule {
     *
     * r8 shipped the jump only, believing it alone gave the doubling
     * bound; the ×10 sf1 perf fixture falsified that
-    * (graft.tools.CcProbe: 182k verified cosine pairs, label sum
+    * (BASELINE.md §Scaling: 182k verified cosine pairs, label sum
     * shrinking by a few hundred per round — local-minima stall — blowing
     * the 25-round guard at 26 rounds; with the broadcast added the same
     * graph converges in 6 rounds, same 951-component fixed point, and
@@ -624,11 +624,7 @@ object TextPipeline extends QueryModule {
     * final no-change confirmation pass.
     */
   private[graft] val MaxCcRounds = 25
-  /** @param onRound diagnostic hook (round index, label sum after the
-    *   round) — used by graft.tools.CcProbe to trace convergence on
-    *   scale fixtures; a no-op in production paths. */
-  private[graft] def ccIterate(bands: DataFrame, maxRounds: Int = MaxCcRounds,
-      onRound: (Int, java.math.BigDecimal) => Unit = (_, _) => ()): (DataFrame, Int) = {
+  private[graft] def ccIterate(bands: DataFrame): (DataFrame, Int) = {
     def relabel(labels: DataFrame): DataFrame = {
       val bl = bands.join(labels, "doc_id")
         .groupBy(col("band"), col("bkey")).agg(min(col("cluster_id")).as("bl"))
@@ -675,16 +671,14 @@ object TextPipeline extends QueryModule {
     var prevSum = s0
     var rounds = 0
     var converged = n0 == 0L
-    onRound(0, s0)
-    while (!converged && rounds < maxRounds) {
+    while (!converged && rounds < MaxCcRounds) {
       labels = relabel(labels)
       val s = labelStats(labels)._1
       rounds += 1
-      onRound(rounds, s)
       converged = s.compareTo(prevSum) == 0
       prevSum = s
     }
-    require(converged, s"connected components did not converge within $maxRounds rounds")
+    require(converged, s"connected components did not converge within $MaxCcRounds rounds")
     (labels, rounds)
   }
 

@@ -1,11 +1,11 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-job wall-time attribution inside a single SparkEntry query, under
-  * the EXACT bench session (same master/shuffle/AQE confs as graft.Bench,
-  * same `.count()` timed action). Prints one line per Spark job — wall
+  * the EXACT bench session ([[graft.GraftSession.bench]], same `.count()`
+  * timed action as graft.Bench). Prints each entry's formatted physical
+  * plan once, then one line per Spark job of every timed run — wall
   * seconds, executor task time, shuffle bytes, and the job's callsite —
   * so an entry's total can be split into its actions (index build vs
   * serve rounds, checkpoint materializations, the final count).
@@ -21,18 +21,13 @@ object EntryProfile {
       .split(",").map(_.trim).toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     names.foreach(n => require(graft.SparkEntry.queries.contains(n), s"unknown entry $n"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.spark.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.bench()
+    def sweep(): Unit = {
+      spark.catalog.clearCache()
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      System.gc()
+    }
 
     final case class Job(id: Int, var desc: String = "", var t0: Long = 0L,
                          var t1: Long = 0L, var taskMs: Long = 0L,
@@ -75,9 +70,15 @@ object EntryProfile {
     val fn = graft.SparkEntry.queries(name)
     // warmup at the smallest SF, like the bench
     try fn(spark, "/root/testdata/sf0.001").count() catch { case _: Throwable => () }
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    System.gc()
+    sweep()
+    // the plan, untimed; stream_* entries run their whole pipeline inside
+    // the query fn and return a sink re-read, whose plan says nothing
+    // about the pipeline, so they print none
+    if (!name.startsWith("stream_")) {
+      println(s"== $name plan ==")
+      fn(spark, sfDir).explain("formatted")
+      sweep()
+    }
 
     (1 to runs).foreach { r =>
       jobs.clear(); stageToJob.clear()
@@ -95,9 +96,7 @@ object EntryProfile {
       }
       val sumJobs = js.map(j => (j.t1 - j.t0) / 1000.0).sum
       println(f"sum(job walls) ${sumJobs}%.3f s; gaps (driver/planning) ${wall - sumJobs}%.3f s")
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      System.gc()
+      sweep()
     }
     }
     spark.stop()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-quality audit over every batch SparkEntry query (stream_* entries
   * are skipped — see the note at the loop): counts shuffles, join
   * strategies, codegen coverage, and scan pruning — the checklist the
@@ -10,13 +8,7 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.spark.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     println(f"${"query"}%-24s ${"xchg"}%4s ${"bhj"}%4s ${"smj"}%4s ${"bnlj"}%5s ${"sortagg"}%7s ${"gwin"}%5s  readSchemaCols")
     var globalWindows = 0

@@ -59,13 +59,7 @@ object ScaleUp {
     val dst = args(1)
     val k = if (args.length > 2) args(2).toInt else 10
     val aniso = args.length > 3 && args(3) == "aniso"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(shufflePartitions = Some(32))
     scale(spark, src, dst, k, aniso)
     spark.stop()
   }

@@ -74,22 +74,12 @@ class PlanSweepSpec extends SparkSpec {
     * need more columns from one table than [[DefaultWidth]]. */
   private val maxScanWidth: Map[String, Int] = Map.empty
 
-  private def withConfs(kvs: (String, String)*)(body: => Unit): Unit = {
-    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   private def batchEntries: Seq[(String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)] =
     SparkEntry.queries.filterNot(_._1.startsWith("stream_")).toSeq.sortBy(_._1)
 
   test("every batch entry: no SortAggregate, no CartesianProduct, pruned scans") {
     val violations = scala.collection.mutable.ArrayBuffer[String]()
-    withConfs("spark.sql.adaptive.enabled" -> "false") {
+    GraftSession.withConf(spark)("spark.sql.adaptive.enabled" -> "false") {
       for ((name, fn) <- batchEntries) {
         val plan: SparkPlan = fn(spark, SfDir).queryExecution.executedPlan
         val sortAggs = plan.collectWithSubqueries { case s: SortAggregateExec => s }

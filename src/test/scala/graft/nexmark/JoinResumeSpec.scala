@@ -44,17 +44,9 @@ class JoinResumeSpec extends SparkSpec {
     NexmarkQueries.qIntervalJoin(bids, auctions, joinType = joinType)
   }
 
-  private def withRocksDB[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None    => spark.conf.unset(key)
-    }
-  }
+  private def withRocksDB[T](body: => T): T =
+    graft.GraftSession.withConf(spark)("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
   private def runKillResume(joinType: String): Unit = {
     val base = java.nio.file.Files.createTempDirectory(s"joinresume_$joinType")

@@ -23,17 +23,9 @@ import graft.nexmark.queries.NexmarkTws
   */
 class TwsResumeSpec extends SparkSpec {
 
-  private def withRocksDB[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None    => spark.conf.unset(key)
-    }
-  }
+  private def withRocksDB[T](body: => T): T =
+    graft.GraftSession.withConf(spark)("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
   // 10 ms event spacing → a 30 s span at 3000 rows/subtask: wide enough
   // that the 2 s watermark delay closes most 500 ms-gap sessions and
