@@ -9,15 +9,8 @@ package graft
   * (first line of the exception) and EXCLUDED from the per-query times and
   * the total — a broken query must never record a fast time.
   *
-  * Cache hygiene: `clearCache()` + unpersist-all + GC hint between queries
-  * so one query's cached/checkpointed blocks can never bleed into another's
-  * measurement. `clearCache()` alone is NOT enough: it drops SQL-cached
-  * relations but leaves `localCheckpoint`ed RDD blocks registered in the
-  * block manager, and ~145 entries × 3 executions accumulate hundreds of
-  * such block sets — the storage churn behind t_dup_spans' full-suite-only
-  * budget breaches in r11/r12 (BASELINE §round-13). getPersistentRDDs
-  * covers both persisted and localCheckpointed RDDs; unpersisting between
-  * queries is safe because nothing references the previous query's plan.
+  * Cache hygiene: [[GraftSession.sweep]] after every run, so one query's
+  * cached/checkpointed blocks can never bleed into another's measurement.
   *
   * SPARK_GRAFT_ONLY (optional): comma-separated query names — bench only
   * those. For local profiling; the driver leaves it unset.
@@ -28,27 +21,15 @@ object Bench {
     // work, not pipeline work — skip them so bench numbers stay pure
     System.setProperty("graft.stream.dumpInputs", "false")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    // a typo'd filter silently benching nothing would read as a 0-second
-    // run — same loud guard as Verify
-    only.foreach { o =>
-      val unknown = o -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"unknown query names in SPARK_GRAFT_ONLY: ${unknown.mkString(",")}")
-    }
+    val queries = SparkEntry.select(
+      sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty))
     val spark = GraftSession.bench()
-    val queries = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
-
-    def sweep(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      System.gc()
-    }
 
     // warmup: exercise every query once at the smallest SF (class loading,
     // codegen compilation, parquet footer caches)
     queries.foreach { case (_, fn) =>
       try fn(spark, "/root/testdata/sf0.001").count() catch { case _: Throwable => () }
-      sweep()
+      GraftSession.sweep(spark)
     }
     // ambient probe (r13 VERDICT Next #6): a FIXED trivial job — 32 empty
     // task slots + one 2k-row codegen'd map-aggregate — timed 3×, median.
@@ -84,30 +65,19 @@ object Bench {
             System.err.println(s"BENCH FAILURE $name: $msg")
             None
         }
-        sweep()
+        GraftSession.sweep(spark)
         r
       }
       // any failed run disqualifies the query's time entirely: a partially
       // broken query must never contribute a (possibly lucky) number
       if (runs.isEmpty || errors.contains(name)) None else Some(name -> runs.min)
     }
-    // full JSON string escape incl. control chars — a tab/CR in an
-    // exception message would otherwise invalidate the whole report line
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // ms precision: the driver captures only a bounded tail of stdout, and
     // 71 entries at full double precision overflowed it in round 6
     // (BENCH_r06.json "parsed": null) — keep the report line short
     def jnum(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val qs = results.map { case (k, v) => jstr(k) + ":" + jnum(v) }.mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
+    val qs = results.map { case (k, v) => Json.str(k) + ":" + jnum(v) }.mkString("{", ",", "}")
+    val es = errors.map { case (k, v) => Json.str(k) + ":" + Json.str(v) }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val line = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","ambient":${jnum(ambient)},"queries":$qs,"errors":$es,"n_failed":${errors.size},"sf":"$sfDir"}"""
     println(line)

@@ -46,6 +46,20 @@ object GraftSession {
   def bench(): SparkSession =
     apply(shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE").map(_.toInt))
 
+  /** Drop every cached relation and persisted or localCheckpointed RDD,
+    * then hint a GC, so one entry's blocks never bleed into the next
+    * entry's run. `clearCache()` alone is not enough: it leaves
+    * localCheckpointed RDD blocks registered in the block manager, and
+    * ~145 entries' worth of those churn it and slow the tail of a sweep
+    * (BASELINE §round-13). Safe between entries, because nothing
+    * references the previous entry's plan.
+    */
+  def sweep(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    System.gc()
+  }
+
   /** Run `body` with the given session confs set, then put every key back:
     * a key that had a value gets it again, a key that was unset is unset
     * again — also when `body` throws.

@@ -38,36 +38,6 @@ object Tables {
   def documents(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "embeddings")
 
-  /** Scale-conditional scan fan-out (optimization guide §2.5: "input skew —
-    * one huge unsplittable file … repartition immediately after the read").
-    * The driver fixtures are single-file, SINGLE-ROW-GROUP parquet, so a
-    * scan plans ONE task regardless of core count — every per-row kernel
-    * between the scan and the first exchange (normalize+tokenize, cosine,
-    * payload stats, md5 shingles) runs on 1 of local[N]'s N cores
-    * (measured r16: t_phash_neardup's 2.5 s sig pass, t_dup_spans' two
-    * ~1 s shingle passes, t_hybrid_rrf's 1.9 s brute-cosine pass — all
-    * 1-2-task stages on a 32-core session).
-    *
-    * Condition, not a constant: when the scan already plans at least the
-    * session's default parallelism (any real multi-file table — the
-    * 100 TB fact table plans ~800k splits under cluster.conf), this is
-    * the IDENTITY and no exchange is added, so cluster plans are
-    * untouched. The repartition key is a deterministic id column, NEVER
-    * round-robin (guide §2.5 / SPARK-38388: retried tasks under
-    * rand-derived assignment duplicate or lose rows).
-    *
-    * Results are unchanged by construction: every consumer aggregation in
-    * the text/similarity modules is order-free (quantized-integer sums,
-    * array_sort'ed collect_list, ROUND-quantized ranks — the repo-wide
-    * determinism contract), and the correctness gate canonicalizes row
-    * order before hashing.
-    */
-  def spread(spark: SparkSession, df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
-    val target = spark.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= target) df
-    else df.repartition(target, key)
-  }
-
   /** Rows-per-task floor for the fan-out target (r17, VERDICT r16 #1).
     * r16 targeted `defaultParallelism` unconditionally, which over-shards
     * kB-scale frames: a cheap per-row kernel gains nothing from 32 tasks
@@ -92,7 +62,8 @@ object Tables {
     tableRowsCache.computeIfAbsent(s"$dir/$name",
       _ => java.lang.Long.valueOf(table(spark, dir, name).count()))
 
-  private def rowsAwareTarget(spark: SparkSession, rows: Long): Int = {
+  /** The fan-out target for `rows` rows: `min(cores, ceil(rows / 256))`. */
+  private[graft] def rowsAwareTarget(spark: SparkSession, rows: Long): Int = {
     val cores = spark.sparkContext.defaultParallelism.toLong
     val byRows = math.max(1L, (rows + SpreadMinRowsPerTask - 1L) / SpreadMinRowsPerTask)
     math.min(cores, byRows).toInt
@@ -141,14 +112,29 @@ object Tables {
 
   private val scanPartsCache = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
 
-  /** [[spread]] over a named fixture table with the r17 rows-aware target
-    * ([[SpreadMinRowsPerTask]]), and the scan-parallelism probe MEMOIZED
-    * per (dir, table, target): the probe plans the scan
-    * (`.rdd.getNumPartitions`), which costs ~50-200 ms of driver work —
-    * fine once, poison inside entries that reference the same table many
-    * times (r16 measured: the unmemoized probe in `vecs` more than
-    * DOUBLED the iterative similarity entries). The cached values are
-    * file-layout properties, not query results.
+  /** Scale-conditional scan fan-out over a named fixture table
+    * (optimization guide §2.5: "one huge unsplittable file → repartition
+    * immediately after the read"). The fixture tables are single-file,
+    * single-row-group parquet, so a scan plans ONE task regardless of core
+    * count, and every per-row kernel between the scan and the first
+    * exchange (normalize+tokenize, cosine, payload stats, md5 shingles)
+    * would run on 1 of local[N]'s N cores.
+    *
+    * Condition, not a constant: the target is [[rowsAwareTarget]], and when
+    * the scan already plans at least that many partitions (any real
+    * multi-file table) or the target is 1, this is the IDENTITY and no
+    * exchange is added. The repartition key is a deterministic id column,
+    * NEVER round-robin (SPARK-38388: retried tasks under rand-derived
+    * assignment duplicate or lose rows). Results are unchanged by
+    * construction: every consumer aggregation is order-free, and the
+    * correctness gate canonicalizes row order before hashing.
+    *
+    * The scan-parallelism probe is MEMOIZED per (dir, table, target): it
+    * plans the scan (`.rdd.getNumPartitions`), which costs ~50-200 ms of
+    * planning — fine once, poison inside entries that reference the
+    * same table many times (r16 measured: the unmemoized probe in `vecs`
+    * more than DOUBLED the iterative similarity entries). The cached
+    * values are file-layout properties, not query results.
     */
   def spreadTable(spark: SparkSession, dir: String, name: String,
                   key: org.apache.spark.sql.Column): DataFrame = {

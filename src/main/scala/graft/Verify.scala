@@ -7,16 +7,11 @@ object Verify {
     // driver contract: <sfDir> <outDir>; optional third arg = comma-
     // separated query names for fast local iteration on a subset
     val (sfDir, outDir) = (args(0), args(1))
-    val only: Set[String] =
-      if (args.length > 2) args(2).split(",").toSet else Set.empty
-    // a typo'd filter silently verifying nothing would read as "green"
-    val unknown = only -- SparkEntry.queries.keySet
-    require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(",")}")
+    val queries = SparkEntry.select(
+      if (args.length > 2) args(2).split(",").toSet else Set.empty)
     val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+    queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -37,27 +32,10 @@ object Verify {
           System.err.println(s"[verify] $name stale-dump cleanup failed: ${c.getMessage}")
         }
       }
-      // cache hygiene: no query's cached/checkpointed blocks may bleed
-      // into the next one's run. clearCache() alone leaves localCheckpoint
-      // blocks registered — ~145 entries' worth of those churns the block
-      // manager and slows the tail of the sweep (BASELINE §round-13)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      GraftSession.sweep(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

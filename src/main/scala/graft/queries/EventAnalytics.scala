@@ -651,41 +651,22 @@ object EventAnalytics extends QueryModule {
       |GROUP BY lf.skew_key
       |""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_skew_join" -> (skewJoin _),
-    "q5_hot_users" -> (hotUsers _),
-    "q4_avg_max_value" -> (avgMaxValue _),
-    "q7_highest_value" -> (highestValue _),
-    "q8_new_user_activity" -> (newUserActivity _),
-    "q8_new_users_sliding" -> (newUsersSliding _),
-    "q8_new_users_session" -> (newUsersSession _),
-    "q11_user_sessions" -> (userSessions _),
-    "q_dynamic_sessions" -> (dynamicSessions _),
-    "qcm_windowed_load" -> (windowedLoad _),
-    "q_sliding_load" -> (slidingLoad _),
-    "qx_union_mix" -> (unionMix _),
-    "q_topk_per_type" -> (topkPerType _),
-    "q_asof_join" -> (asofViewPurchase _),
-    "q_funnel" -> (funnel _),
-    "q_retention" -> (retention _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_skew_join" -> skewJoinSql,
-    "q5_hot_users" -> hotUsersSql,
-    "q4_avg_max_value" -> avgMaxValueSql,
-    "q7_highest_value" -> highestValueSql,
-    "q8_new_user_activity" -> newUserActivitySql,
-    "q8_new_users_sliding" -> newUsersSlidingSql,
-    "q8_new_users_session" -> newUsersSessionSql,
-    "q11_user_sessions" -> userSessionsSql,
-    "q_dynamic_sessions" -> dynamicSessionsSql,
-    "qcm_windowed_load" -> windowedLoadSql,
-    "q_sliding_load" -> slidingLoadSql,
-    "qx_union_mix" -> unionMixSql,
-    "q_topk_per_type" -> topkPerTypeSql,
-    "q_asof_join" -> asofViewPurchaseSql,
-    "q_funnel" -> funnelSql,
-    "q_retention" -> retentionSql,
+  val entries: Seq[Entry] = Seq(
+    Entry("q_skew_join", skewJoin, skewJoinSql),
+    Entry("q5_hot_users", hotUsers, hotUsersSql),
+    Entry("q4_avg_max_value", avgMaxValue, avgMaxValueSql),
+    Entry("q7_highest_value", highestValue, highestValueSql),
+    Entry("q8_new_user_activity", newUserActivity, newUserActivitySql),
+    Entry("q8_new_users_sliding", newUsersSliding, newUsersSlidingSql),
+    Entry("q8_new_users_session", newUsersSession, newUsersSessionSql),
+    Entry("q11_user_sessions", userSessions, userSessionsSql),
+    Entry("q_dynamic_sessions", dynamicSessions, dynamicSessionsSql),
+    Entry("qcm_windowed_load", windowedLoad, windowedLoadSql),
+    Entry("q_sliding_load", slidingLoad, slidingLoadSql),
+    Entry("qx_union_mix", unionMix, unionMixSql),
+    Entry("q_topk_per_type", topkPerType, topkPerTypeSql),
+    Entry("q_asof_join", asofViewPurchase, asofViewPurchaseSql),
+    Entry("q_funnel", funnel, funnelSql),
+    Entry("q_retention", retention, retentionSql),
   )
 }

@@ -2,14 +2,20 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** A family of named queries plus their DuckDB oracle SQL.
-  *
-  * Contract (see SparkEntry / the driver):
-  *   - `queries(name)(spark, sfDir)` returns the result DataFrame;
-  *   - `oracles(name)` is ANSI SQL DuckDB runs over the same parquet tables;
-  *   - column NAMES and VALUES must match exactly (driver sorts columns by
-  *     name and hashes values), so every computed column is aliased
-  *     identically on both sides.
+/** One registered entry: its name in the Verify dump and the Bench report,
+  * the query, and the DuckDB oracle.
+  *   - `run(spark, sfDir)` returns the result DataFrame;
+  *   - `oracleSql` is ANSI SQL DuckDB runs over the same parquet tables;
+  *   - column NAMES and VALUES must match exactly (the correctness gate
+  *     sorts columns by name and hashes values), so every computed column
+  *     is aliased identically on both sides.
+  */
+final case class Entry(name: String, run: (SparkSession, String) => DataFrame, oracleSql: String)
+
+/** A family of entries. Each module lists each of its entries once in
+  * [[entries]]; [[graft.SparkEntry]] concatenates the families and is the
+  * one place that checks names, selects entries and tells streams from
+  * batch entries.
   *
   * Determinism rules used throughout (cross-engine exact compare):
   *   - money-like SUMs go through the "cents" pattern:
@@ -21,8 +27,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     difference is ≤ a few ulps (≪ the rounding quantum).
   */
 trait QueryModule {
-  def queries: Map[String, (SparkSession, String) => DataFrame]
-  def oracles: Map[String, String]
+  def entries: Seq[Entry]
+
+  /** name → query of this family, derived from [[entries]]. */
+  final lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    entries.map(e => e.name -> e.run).toMap
 }
 
 /** Deterministic cross-engine arithmetic snippets, valid verbatim in BOTH

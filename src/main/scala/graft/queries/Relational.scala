@@ -846,51 +846,27 @@ object Relational extends QueryModule {
        |""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "r_pricing_summary" -> (pricingSummary _),
-    "r_top_customers" -> (topCustomers _),
-    "r_region_revenue" -> (regionRevenue _),
-    "r_semi_anti_customers" -> (semiAntiCustomers _),
-    "r_rollup_summary" -> (rollupSummary _),
-    "r_grouping_sets" -> (groupingSetsSummary _),
-    "r_pivot" -> (pivotStatus _),
-    "r_outer_join" -> (outerJoinPriorities _),
-    "r_window_frames" -> (windowFrames _),
-    "r_running_order_total" -> (runningOrderTotal _),
-    "r_priority_stats" -> (priorityStats _),
-    "r_json_props" -> (jsonProps _),
-    "r_monthly_trend" -> (monthlyTrend _),
-    "r_setops_customers" -> (setOpsCustomers _),
-    "r_percentiles" -> (percentiles _),
-    "r_interval_ship" -> (intervalShip _),
-    "r_above_avg_spenders" -> (aboveAvgSpenders _),
-    "r_upsert_apply" -> (upsertApply _),
-    "r_incremental_agg" -> (incrementalAgg _),
-    "r_zorder_layout" -> (zorderLayout _),
-    "r_scd2_history" -> (scd2History _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "r_pricing_summary" -> pricingSummarySql,
-    "r_top_customers" -> topCustomersSql,
-    "r_region_revenue" -> regionRevenueSql,
-    "r_semi_anti_customers" -> semiAntiCustomersSql,
-    "r_rollup_summary" -> rollupSummarySql,
-    "r_grouping_sets" -> groupingSetsSummarySql,
-    "r_pivot" -> pivotStatusSql,
-    "r_outer_join" -> outerJoinPrioritiesSql,
-    "r_window_frames" -> windowFramesSql,
-    "r_running_order_total" -> runningOrderTotalSql,
-    "r_priority_stats" -> priorityStatsSql,
-    "r_json_props" -> jsonPropsSql,
-    "r_monthly_trend" -> monthlyTrendSql,
-    "r_setops_customers" -> setOpsCustomersSql,
-    "r_percentiles" -> percentilesSql,
-    "r_interval_ship" -> intervalShipSql,
-    "r_above_avg_spenders" -> aboveAvgSpendersSql,
-    "r_upsert_apply" -> upsertApplySql,
-    "r_incremental_agg" -> incrementalAggSql,
-    "r_zorder_layout" -> zorderLayoutSql,
-    "r_scd2_history" -> scd2HistorySql,
+  val entries: Seq[Entry] = Seq(
+    Entry("r_pricing_summary", pricingSummary, pricingSummarySql),
+    Entry("r_top_customers", topCustomers, topCustomersSql),
+    Entry("r_region_revenue", regionRevenue, regionRevenueSql),
+    Entry("r_semi_anti_customers", semiAntiCustomers, semiAntiCustomersSql),
+    Entry("r_rollup_summary", rollupSummary, rollupSummarySql),
+    Entry("r_grouping_sets", groupingSetsSummary, groupingSetsSummarySql),
+    Entry("r_pivot", pivotStatus, pivotStatusSql),
+    Entry("r_outer_join", outerJoinPriorities, outerJoinPrioritiesSql),
+    Entry("r_window_frames", windowFrames, windowFramesSql),
+    Entry("r_running_order_total", runningOrderTotal, runningOrderTotalSql),
+    Entry("r_priority_stats", priorityStats, priorityStatsSql),
+    Entry("r_json_props", jsonProps, jsonPropsSql),
+    Entry("r_monthly_trend", monthlyTrend, monthlyTrendSql),
+    Entry("r_setops_customers", setOpsCustomers, setOpsCustomersSql),
+    Entry("r_percentiles", percentiles, percentilesSql),
+    Entry("r_interval_ship", intervalShip, intervalShipSql),
+    Entry("r_above_avg_spenders", aboveAvgSpenders, aboveAvgSpendersSql),
+    Entry("r_upsert_apply", upsertApply, upsertApplySql),
+    Entry("r_incremental_agg", incrementalAgg, incrementalAggSql),
+    Entry("r_zorder_layout", zorderLayout, zorderLayoutSql),
+    Entry("r_scd2_history", scd2History, scd2HistorySql),
   )
 }

@@ -846,10 +846,10 @@ object Similarity extends QueryModule {
     * partitions than cores (target × 1 MB) — a cluster-scale pair table
     * (9 B pairs ≈ 146 GB at sf100) keeps the stock shuffle.partitions +
     * AQE byte sizing, because pinning it to `cores` would under-partition
-    * exactly what cluster.conf sizes. */
+    * exactly what cluster.conf sizes. The target is the shared
+    * [[Tables.rowsAwareTarget]]. */
   private def pairFanOut(spark: SparkSession, pairs: DataFrame, rowsEst: Long): DataFrame = {
-    val cores = spark.sparkContext.defaultParallelism
-    val target = math.min(cores.toLong, math.max(1L, rowsEst / 256L)).toInt
+    val target = Tables.rowsAwareTarget(spark, rowsEst)
     if (target > 1 && rowsEst * 16L < target.toLong * (1L << 20))
       pairs.repartition(target, col("query_id"))
     else pairs
@@ -4828,97 +4828,51 @@ object Similarity extends QueryModule {
     (qembs, probes, cells, v)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s_knn_brute" -> (knnBrute _),
-    "s_knn_ivf" -> (knnIvf _),
-    "s_dot_topk" -> (dotTopk _),
-    "s_lsh_dup_pairs" -> (lshDupPairs _),
-    "s_cosine_dedup" -> (cosineDedup _),
-    "s_cosine_cc" -> (cosineDedupCC _),
-    "s_knn_lsh" -> (knnLsh _),
-    "s_quantize_int8" -> (quantizeInt8 _),
-    "s_label_stats" -> (labelStats _),
-    "s_knn_pq" -> (knnPq _),
-    "s_knn_ivfpq" -> (knnIvfPq _),
-    "s_kmeans" -> (kmeans _),
-    "s_kmeans_conv" -> (kmeansConvEntry _),
-    "s_ann_recall" -> (annRecall _),
-    "s_semantic_dedup" -> (semanticDedup _),
-    "s_dim_stats" -> (dimStats _),
-    "s_label_drift" -> (labelDrift _),
-    "s_pca_power" -> (pcaPower _),
-    "s_trunc_recall" -> (truncRecall _),
-    "s_mmr_rerank" -> (mmrRerank _),
-    "s_mmr_ann" -> (mmrAnn _),
-    "s_knn_binary" -> (knnBinary _),
-    "s_knn_graph" -> (knnGraph _),
-    "s_knn_graph_scaled" -> (knnGraphScaled _),
-    "s_ood_outliers" -> (oodOutliers _),
-    "s_incremental_index" -> (incrementalIndex _),
-    "s_index_delete" -> (indexDelete _),
-    "s_knn_pagerank" -> (knnPagerank _),
-    "s_knn_labelprop" -> (knnLabelProp _),
-    "s_knn_serve" -> (knnServe _),
-    "s_knn_beam" -> (knnBeam _),
-    "s_hard_negatives" -> (hardNegatives _),
-    "s_triplet_mine" -> (tripletMine _),
-    "s_knn_filtered" -> (knnFiltered _),
-    "s_index_merge" -> (indexMerge _),
-    "s_cell_split" -> (cellSplit _),
-    "s_range_search" -> (rangeSearch _),
-    "s_range_lsh" -> (rangeLsh _),
-    "s_range_lsh_mp" -> (rangeLshMp _),
-    "s_knn_range_filtered" -> (knnRangeFiltered _),
-    "s_serve_ndcg" -> (serveNdcg _),
-    "s_probe_curve" -> (probeCurve _),
-    "s_opq_permute" -> (opqPermute _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "s_knn_brute" -> knnBruteSql,
-    "s_knn_ivf" -> knnIvfSql,
-    "s_dot_topk" -> dotTopkSql,
-    "s_lsh_dup_pairs" -> lshDupPairsSql,
-    "s_cosine_dedup" -> cosineDedupSql,
-    "s_cosine_cc" -> cosineDedupCCSql,
-    "s_knn_lsh" -> knnLshSql,
-    "s_quantize_int8" -> quantizeInt8Sql,
-    "s_label_stats" -> labelStatsSql,
-    "s_knn_pq" -> knnPqSql,
-    "s_knn_ivfpq" -> knnIvfPqSql,
-    "s_kmeans" -> kmeansSql,
-    "s_kmeans_conv" -> kmeansUnrolledSql(KmeansConvUnroll),
-    "s_ann_recall" -> annRecallSql,
-    "s_semantic_dedup" -> semanticDedupSql,
-    "s_dim_stats" -> dimStatsSql,
-    "s_label_drift" -> labelDriftSql,
-    "s_pca_power" -> pcaPowerSql,
-    "s_trunc_recall" -> truncRecallSql,
-    "s_mmr_rerank" -> mmrRerankSql,
-    "s_mmr_ann" -> mmrAnnSql,
-    "s_knn_binary" -> knnBinarySql,
-    "s_knn_graph" -> knnGraphSql,
-    "s_knn_graph_scaled" -> knnGraphScaledSql,
-    "s_ood_outliers" -> oodOutliersSql,
-    "s_incremental_index" -> incrementalIndexSql,
-    "s_index_delete" -> indexDeleteSql,
-    "s_knn_pagerank" -> knnPagerankSql,
-    "s_knn_labelprop" -> knnLabelPropSql,
+  val entries: Seq[Entry] = Seq(
+    Entry("s_knn_brute", knnBrute, knnBruteSql),
+    Entry("s_knn_ivf", knnIvf, knnIvfSql),
+    Entry("s_dot_topk", dotTopk, dotTopkSql),
+    Entry("s_lsh_dup_pairs", lshDupPairs, lshDupPairsSql),
+    Entry("s_cosine_dedup", cosineDedup, cosineDedupSql),
+    Entry("s_cosine_cc", cosineDedupCC, cosineDedupCCSql),
+    Entry("s_knn_lsh", knnLsh, knnLshSql),
+    Entry("s_quantize_int8", quantizeInt8, quantizeInt8Sql),
+    Entry("s_label_stats", labelStats, labelStatsSql),
+    Entry("s_knn_pq", knnPq, knnPqSql),
+    Entry("s_knn_ivfpq", knnIvfPq, knnIvfPqSql),
+    Entry("s_kmeans", kmeans, kmeansSql),
+    Entry("s_kmeans_conv", kmeansConvEntry, kmeansUnrolledSql(KmeansConvUnroll)),
+    Entry("s_ann_recall", annRecall, annRecallSql),
+    Entry("s_semantic_dedup", semanticDedup, semanticDedupSql),
+    Entry("s_dim_stats", dimStats, dimStatsSql),
+    Entry("s_label_drift", labelDrift, labelDriftSql),
+    Entry("s_pca_power", pcaPower, pcaPowerSql),
+    Entry("s_trunc_recall", truncRecall, truncRecallSql),
+    Entry("s_mmr_rerank", mmrRerank, mmrRerankSql),
+    Entry("s_mmr_ann", mmrAnn, mmrAnnSql),
+    Entry("s_knn_binary", knnBinary, knnBinarySql),
+    Entry("s_knn_graph", knnGraph, knnGraphSql),
+    Entry("s_knn_graph_scaled", knnGraphScaled, knnGraphScaledSql),
+    Entry("s_ood_outliers", oodOutliers, oodOutliersSql),
+    Entry("s_incremental_index", incrementalIndex, incrementalIndexSql),
+    Entry("s_index_delete", indexDelete, indexDeleteSql),
+    Entry("s_knn_pagerank", knnPagerank, knnPagerankSql),
+    Entry("s_knn_labelprop", knnLabelProp, knnLabelPropSql),
     // the serving contract: reading the persisted index must equal the
     // in-query build bit-for-bit, so the oracle IS knnIvf's
-    "s_knn_serve" -> knnIvfSql,
-    "s_knn_beam" -> knnBeamSql,
-    "s_hard_negatives" -> hardNegativesSql,
-    "s_triplet_mine" -> tripletMineSql,
-    "s_knn_filtered" -> knnFilteredSql,
-    "s_index_merge" -> indexMergeSql,
-    "s_cell_split" -> cellSplitSql,
-    "s_range_search" -> rangeSearchSql,
-    "s_range_lsh" -> rangeLshSql,
-    "s_range_lsh_mp" -> rangeLshMpSql,
-    "s_knn_range_filtered" -> knnRangeFilteredSql,
-    "s_serve_ndcg" -> serveNdcgSql,
-    "s_probe_curve" -> probeCurveSql,
-    "s_opq_permute" -> opqPermuteSql,
+    Entry("s_knn_serve", knnServe, knnIvfSql),
+    Entry("s_knn_beam", knnBeam, knnBeamSql),
+    Entry("s_hard_negatives", hardNegatives, hardNegativesSql),
+    Entry("s_triplet_mine", tripletMine, tripletMineSql),
+    Entry("s_knn_filtered", knnFiltered, knnFilteredSql),
+    Entry("s_index_merge", indexMerge, indexMergeSql),
+    Entry("s_cell_split", cellSplit, cellSplitSql),
+    Entry("s_range_search", rangeSearch, rangeSearchSql),
+    Entry("s_range_lsh", rangeLsh, rangeLshSql),
+    Entry("s_range_lsh_mp", rangeLshMp, rangeLshMpSql),
+    Entry("s_knn_range_filtered", knnRangeFiltered, knnRangeFilteredSql),
+    Entry("s_serve_ndcg", serveNdcg, serveNdcgSql),
+    Entry("s_probe_curve", probeCurve, probeCurveSql),
+    Entry("s_opq_permute", opqPermute, opqPermuteSql),
   )
 }

@@ -1523,50 +1523,29 @@ object StreamingBench extends QueryModule {
       |FROM snap WHERE krn = 1
       |""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stream_q5_hot" -> (streamQ5Hot _),
-    "stream_q8_join" -> (streamQ8Join _),
-    "stream_qx_winning" -> (streamQxWinning _),
-    "stream_qx_tws" -> (streamQxTws _),
-    "stream_q11_sessions" -> (streamQ11Sessions _),
-    "stream_q11_tws" -> (streamQ11Tws _),
-    "stream_q7_highest" -> (streamQ7Highest _),
-    "stream_dedup" -> (streamDedup _),
-    "stream_incremental_dedup" -> (streamIncrementalDedup _),
-    "stream_funnel" -> (streamFunnel _),
-    "stream_interval_join" -> (streamIntervalJoin _),
-    "stream_outer_join" -> (streamOuterJoin _),
-    "stream_topk" -> (streamTopK _),
-    "stream_scd2_enrich" -> (streamScd2Enrich _),
-    "stream_quantile_profile" -> (streamQuantileProfile _),
-    "stream_incremental_neardup" -> (streamIncrementalNearDup _),
-    "stream_knn_serve" -> (streamKnnServe _),
-    "stream_quality_gate" -> (streamQualityGate _),
-    "stream_upsert_apply" -> (streamUpsertApply _),
-  )
-
-  /** DuckDB oracles over each entry's dumped input events (see the class
-    * doc): exact at the correctness gate's sf0.01 single-micro-batch scale.
+  /** Each oracle is DuckDB SQL over the entry's dumped input events (see
+    * the class doc): exact at the correctness gate's sf0.01
+    * single-micro-batch scale.
     */
-  val oracles: Map[String, String] = Map(
-    "stream_q5_hot" -> streamQ5HotSql,
-    "stream_q8_join" -> streamQ8JoinSql,
-    "stream_qx_winning" -> qxTimerSql("stream_qx_winning", maxEnd = true),
-    "stream_qx_tws" -> qxTimerSql("stream_qx_tws", maxEnd = false),
-    "stream_q11_sessions" -> sessionsOracleSql("stream_q11_sessions"),
-    "stream_q11_tws" -> sessionsOracleSql("stream_q11_tws"),
-    "stream_q7_highest" -> streamQ7HighestSql,
-    "stream_dedup" -> streamDedupSql,
-    "stream_incremental_dedup" -> streamIncrementalDedupSql,
-    "stream_funnel" -> streamFunnelSql,
-    "stream_interval_join" -> streamIntervalJoinSql,
-    "stream_outer_join" -> streamOuterJoinSql,
-    "stream_topk" -> streamTopKSql,
-    "stream_scd2_enrich" -> streamScd2EnrichSql,
-    "stream_quantile_profile" -> streamQuantileProfileSql,
-    "stream_incremental_neardup" -> streamIncrementalNearDupSql,
-    "stream_knn_serve" -> streamKnnServeSql,
-    "stream_quality_gate" -> streamQualityGateSql,
-    "stream_upsert_apply" -> streamUpsertApplySql,
+  val entries: Seq[Entry] = Seq(
+    Entry("stream_q5_hot", streamQ5Hot, streamQ5HotSql),
+    Entry("stream_q8_join", streamQ8Join, streamQ8JoinSql),
+    Entry("stream_qx_winning", streamQxWinning, qxTimerSql("stream_qx_winning", maxEnd = true)),
+    Entry("stream_qx_tws", streamQxTws, qxTimerSql("stream_qx_tws", maxEnd = false)),
+    Entry("stream_q11_sessions", streamQ11Sessions, sessionsOracleSql("stream_q11_sessions")),
+    Entry("stream_q11_tws", streamQ11Tws, sessionsOracleSql("stream_q11_tws")),
+    Entry("stream_q7_highest", streamQ7Highest, streamQ7HighestSql),
+    Entry("stream_dedup", streamDedup, streamDedupSql),
+    Entry("stream_incremental_dedup", streamIncrementalDedup, streamIncrementalDedupSql),
+    Entry("stream_funnel", streamFunnel, streamFunnelSql),
+    Entry("stream_interval_join", streamIntervalJoin, streamIntervalJoinSql),
+    Entry("stream_outer_join", streamOuterJoin, streamOuterJoinSql),
+    Entry("stream_topk", streamTopK, streamTopKSql),
+    Entry("stream_scd2_enrich", streamScd2Enrich, streamScd2EnrichSql),
+    Entry("stream_quantile_profile", streamQuantileProfile, streamQuantileProfileSql),
+    Entry("stream_incremental_neardup", streamIncrementalNearDup, streamIncrementalNearDupSql),
+    Entry("stream_knn_serve", streamKnnServe, streamKnnServeSql),
+    Entry("stream_quality_gate", streamQualityGate, streamQualityGateSql),
+    Entry("stream_upsert_apply", streamUpsertApply, streamUpsertApplySql),
   )
 }

@@ -78,7 +78,7 @@ object TextPipeline extends QueryModule {
   private def docsNormAt(spark: SparkSession, dir: String, fanOut: Boolean): DataFrame = {
     // spread BEFORE the normalize: the regex battery is the per-row kernel
     // the fan-out exists to parallelize (guide §2.5; identity on any
-    // multi-split table — see Tables.spread)
+    // multi-split table — see Tables.spreadTable)
     val base = if (fanOut) Tables.spreadTable(spark, dir, "documents", col("doc_id"))
                else Tables.table(spark, dir, "documents")
     base
@@ -4441,131 +4441,67 @@ object TextPipeline extends QueryModule {
        |""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t_token_stats" -> (tokenStats _),
-    "t_lang_id" -> (langId _),
-    "t_quality_score" -> (qualityScore _),
-    "t_fingerprint_dedup" -> (fingerprintDedup _),
-    "t_minhash_pairs" -> (minhashPairs _),
-    "t_simhash" -> (simhash _),
-    "t_char_ngram_jaccard" -> (charNgramJaccard _),
-    "t_multimodal_meta" -> (multimodalMeta _),
-    "t_frame_sample" -> (frameSample _),
-    "t_dup_clusters" -> (dupClusters _),
-    "t_dup_cc" -> (dupClustersCC _),
-    "t_corpus_filter" -> (corpusFilter _),
-    "t_winnow_fingerprint" -> (winnowFingerprint _),
-    "t_vocab_topk" -> (vocabTopk _),
-    "t_len_histogram" -> (lenHistogram _),
-    "t_stratified_sample" -> (stratifiedSample _),
-    "t_embed_curation" -> (embedCuration _),
-    "t_simhash_pairs" -> (simhashPairs _),
-    "t_decontaminate" -> (decontaminate _),
-    "t_repetition_filter" -> (repetitionFilter _),
-    "t_pack_sequences" -> (packSequences _),
-    "t_source_quota" -> (sourceQuota _),
-    "t_corpus_shuffle" -> (corpusShuffle _),
-    "t_chunk_dedup" -> (chunkDedup _),
-    "t_oov_rate" -> (oovRate _),
-    "t_pii_redact" -> (piiRedact _),
-    "t_url_domains" -> (urlDomains _),
-    "t_bloom_decontam" -> (bloomDecontaminate _),
-    "t_incremental_dedup" -> (incrementalDedup _),
-    "t_incremental_neardup" -> (incrementalNearDup _),
-    "t_cluster_best" -> (clusterBest _),
-    "t_curation_e2e" -> (curationE2e _),
-    "t_doc_freq" -> (docFreq _),
-    "t_ngram_novelty" -> (ngramNovelty _),
-    "t_winnow_pairs" -> (winnowPairs _),
-    "t_cross_source_dup" -> (crossSourceDup _),
-    "t_tfidf_topk" -> (tfidfTopk _),
-    "t_collocations" -> (collocations _),
-    "t_mixture_weights" -> (mixtureWeights _),
-    "t_mixture_sample" -> (mixtureSample _),
-    "t_quality_cut" -> (qualityCut _),
-    "t_lsh_recall" -> (lshRecall _),
-    "t_cdc_chunks" -> (cdcChunks _),
-    "t_gopher_rules" -> (gopherRules _),
-    "t_lm_perplexity" -> (lmPerplexity _),
-    "t_dsir_select" -> (dsirSelect _),
-    "t_bpe_merges" -> (bpeMerges _),
-    "t_bpe_vocab" -> (bpeVocab _),
-    "t_dup_spans" -> (dupSpans _),
-    "t_span_excise" -> (spanExcise _),
-    "t_bm25_topk" -> (bm25Topk _),
-    "t_quality_classifier" -> (qualityClassifier _),
-    "t_selection_e2e" -> (selectionE2e _),
-    "t_media_bytestats" -> (mediaByteStats _),
-    "t_phash_neardup" -> (phashNearDup _),
-    "t_channel_neardup" -> (channelNearDup _),
-    "t_hybrid_rrf" -> (hybridRrf _),
-    "t_kmv_distinct" -> (kmvDistinct _),
-    "t_suffix_dedup" -> (suffixDedup _),
-    "t_quantile_sketch" -> (quantileSketch _),
-    "t_cm_sketch" -> (cmSketch _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "t_token_stats" -> tokenStatsSql,
-    "t_lang_id" -> langIdSql,
-    "t_quality_score" -> qualityScoreSql,
-    "t_fingerprint_dedup" -> fingerprintDedupSql,
-    "t_minhash_pairs" -> minhashPairsSql,
-    "t_simhash" -> simhashSql,
-    "t_char_ngram_jaccard" -> charNgramJaccardSql,
-    "t_multimodal_meta" -> multimodalMetaSql,
-    "t_frame_sample" -> frameSampleSql,
-    "t_dup_clusters" -> dupClustersSql,
-    "t_dup_cc" -> dupClustersCCSql,
-    "t_corpus_filter" -> corpusFilterSql,
-    "t_winnow_fingerprint" -> winnowFingerprintSql,
-    "t_vocab_topk" -> vocabTopkSql,
-    "t_len_histogram" -> lenHistogramSql,
-    "t_stratified_sample" -> stratifiedSampleSql,
-    "t_embed_curation" -> embedCurationSql,
-    "t_simhash_pairs" -> simhashPairsSql,
-    "t_decontaminate" -> decontaminateSql,
-    "t_repetition_filter" -> repetitionFilterSql,
-    "t_pack_sequences" -> packSequencesSql,
-    "t_source_quota" -> sourceQuotaSql,
-    "t_corpus_shuffle" -> corpusShuffleSql,
-    "t_chunk_dedup" -> chunkDedupSql,
-    "t_oov_rate" -> oovRateSql,
-    "t_pii_redact" -> piiRedactSql,
-    "t_url_domains" -> urlDomainsSql,
-    "t_bloom_decontam" -> bloomDecontaminateSql,
-    "t_incremental_dedup" -> incrementalDedupSql,
-    "t_incremental_neardup" -> incrementalNearDupSql,
-    "t_cluster_best" -> clusterBestSql,
-    "t_curation_e2e" -> curationE2eSql,
-    "t_doc_freq" -> docFreqSql,
-    "t_ngram_novelty" -> ngramNoveltySql,
-    "t_winnow_pairs" -> winnowPairsSql,
-    "t_cross_source_dup" -> crossSourceDupSql,
-    "t_tfidf_topk" -> tfidfTopkSql,
-    "t_collocations" -> collocationsSql,
-    "t_mixture_weights" -> mixtureWeightsSql,
-    "t_mixture_sample" -> mixtureSampleSql,
-    "t_quality_cut" -> qualityCutSql,
-    "t_lsh_recall" -> lshRecallSql,
-    "t_cdc_chunks" -> cdcChunksSql,
-    "t_gopher_rules" -> gopherRulesSql,
-    "t_lm_perplexity" -> lmPerplexitySql,
-    "t_dsir_select" -> dsirSelectSql,
-    "t_bpe_merges" -> bpeMergesSql,
-    "t_bpe_vocab" -> bpeVocabSql,
-    "t_dup_spans" -> dupSpansSql,
-    "t_span_excise" -> spanExciseSql,
-    "t_bm25_topk" -> bm25TopkSql,
-    "t_quality_classifier" -> qualityClassifierSql,
-    "t_selection_e2e" -> selectionE2eSql,
-    "t_media_bytestats" -> mediaByteStatsSql,
-    "t_phash_neardup" -> phashNearDupSql,
-    "t_channel_neardup" -> channelNearDupSql,
-    "t_hybrid_rrf" -> hybridRrfSql,
-    "t_kmv_distinct" -> kmvDistinctSql,
-    "t_suffix_dedup" -> suffixDedupSql,
-    "t_quantile_sketch" -> quantileSketchSql,
-    "t_cm_sketch" -> cmSketchSql,
+  val entries: Seq[Entry] = Seq(
+    Entry("t_token_stats", tokenStats, tokenStatsSql),
+    Entry("t_lang_id", langId, langIdSql),
+    Entry("t_quality_score", qualityScore, qualityScoreSql),
+    Entry("t_fingerprint_dedup", fingerprintDedup, fingerprintDedupSql),
+    Entry("t_minhash_pairs", minhashPairs, minhashPairsSql),
+    Entry("t_simhash", simhash, simhashSql),
+    Entry("t_char_ngram_jaccard", charNgramJaccard, charNgramJaccardSql),
+    Entry("t_multimodal_meta", multimodalMeta, multimodalMetaSql),
+    Entry("t_frame_sample", frameSample, frameSampleSql),
+    Entry("t_dup_clusters", dupClusters, dupClustersSql),
+    Entry("t_dup_cc", dupClustersCC, dupClustersCCSql),
+    Entry("t_corpus_filter", corpusFilter, corpusFilterSql),
+    Entry("t_winnow_fingerprint", winnowFingerprint, winnowFingerprintSql),
+    Entry("t_vocab_topk", vocabTopk, vocabTopkSql),
+    Entry("t_len_histogram", lenHistogram, lenHistogramSql),
+    Entry("t_stratified_sample", stratifiedSample, stratifiedSampleSql),
+    Entry("t_embed_curation", embedCuration, embedCurationSql),
+    Entry("t_simhash_pairs", simhashPairs, simhashPairsSql),
+    Entry("t_decontaminate", decontaminate, decontaminateSql),
+    Entry("t_repetition_filter", repetitionFilter, repetitionFilterSql),
+    Entry("t_pack_sequences", packSequences, packSequencesSql),
+    Entry("t_source_quota", sourceQuota, sourceQuotaSql),
+    Entry("t_corpus_shuffle", corpusShuffle, corpusShuffleSql),
+    Entry("t_chunk_dedup", chunkDedup, chunkDedupSql),
+    Entry("t_oov_rate", oovRate, oovRateSql),
+    Entry("t_pii_redact", piiRedact, piiRedactSql),
+    Entry("t_url_domains", urlDomains, urlDomainsSql),
+    Entry("t_bloom_decontam", bloomDecontaminate, bloomDecontaminateSql),
+    Entry("t_incremental_dedup", incrementalDedup, incrementalDedupSql),
+    Entry("t_incremental_neardup", incrementalNearDup, incrementalNearDupSql),
+    Entry("t_cluster_best", clusterBest, clusterBestSql),
+    Entry("t_curation_e2e", curationE2e, curationE2eSql),
+    Entry("t_doc_freq", docFreq, docFreqSql),
+    Entry("t_ngram_novelty", ngramNovelty, ngramNoveltySql),
+    Entry("t_winnow_pairs", winnowPairs, winnowPairsSql),
+    Entry("t_cross_source_dup", crossSourceDup, crossSourceDupSql),
+    Entry("t_tfidf_topk", tfidfTopk, tfidfTopkSql),
+    Entry("t_collocations", collocations, collocationsSql),
+    Entry("t_mixture_weights", mixtureWeights, mixtureWeightsSql),
+    Entry("t_mixture_sample", mixtureSample, mixtureSampleSql),
+    Entry("t_quality_cut", qualityCut, qualityCutSql),
+    Entry("t_lsh_recall", lshRecall, lshRecallSql),
+    Entry("t_cdc_chunks", cdcChunks, cdcChunksSql),
+    Entry("t_gopher_rules", gopherRules, gopherRulesSql),
+    Entry("t_lm_perplexity", lmPerplexity, lmPerplexitySql),
+    Entry("t_dsir_select", dsirSelect, dsirSelectSql),
+    Entry("t_bpe_merges", bpeMerges, bpeMergesSql),
+    Entry("t_bpe_vocab", bpeVocab, bpeVocabSql),
+    Entry("t_dup_spans", dupSpans, dupSpansSql),
+    Entry("t_span_excise", spanExcise, spanExciseSql),
+    Entry("t_bm25_topk", bm25Topk, bm25TopkSql),
+    Entry("t_quality_classifier", qualityClassifier, qualityClassifierSql),
+    Entry("t_selection_e2e", selectionE2e, selectionE2eSql),
+    Entry("t_media_bytestats", mediaByteStats, mediaByteStatsSql),
+    Entry("t_phash_neardup", phashNearDup, phashNearDupSql),
+    Entry("t_channel_neardup", channelNearDup, channelNearDupSql),
+    Entry("t_hybrid_rrf", hybridRrf, hybridRrfSql),
+    Entry("t_kmv_distinct", kmvDistinct, kmvDistinctSql),
+    Entry("t_suffix_dedup", suffixDedup, suffixDedupSql),
+    Entry("t_quantile_sketch", quantileSketch, quantileSketchSql),
+    Entry("t_cm_sketch", cmSketch, cmSketchSql),
   )
 }

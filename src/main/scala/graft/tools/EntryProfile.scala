@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.{GraftSession, SparkEntry}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Per-job wall-time attribution inside a single SparkEntry query, under
@@ -21,13 +22,8 @@ object EntryProfile {
       .split(",").map(_.trim).toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 2
-    names.foreach(n => require(graft.SparkEntry.queries.contains(n), s"unknown entry $n"))
-    val spark = graft.GraftSession.bench()
-    def sweep(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      System.gc()
-    }
+    val queries = SparkEntry.select(names.toSet)
+    val spark = GraftSession.bench()
 
     final case class Job(id: Int, var desc: String = "", var t0: Long = 0L,
                          var t1: Long = 0L, var taskMs: Long = 0L,
@@ -67,17 +63,17 @@ object EntryProfile {
     }
 
     names.foreach { name =>
-    val fn = graft.SparkEntry.queries(name)
+    val fn = queries(name)
     // warmup at the smallest SF, like the bench
     try fn(spark, "/root/testdata/sf0.001").count() catch { case _: Throwable => () }
-    sweep()
+    GraftSession.sweep(spark)
     // the plan, untimed; stream_* entries run their whole pipeline inside
     // the query fn and return a sink re-read, whose plan says nothing
     // about the pipeline, so they print none
-    if (!name.startsWith("stream_")) {
+    if (!SparkEntry.isStream(name)) {
       println(s"== $name plan ==")
       fn(spark, sfDir).explain("formatted")
-      sweep()
+      GraftSession.sweep(spark)
     }
 
     (1 to runs).foreach { r =>
@@ -96,7 +92,7 @@ object EntryProfile {
       }
       val sumJobs = js.map(j => (j.t1 - j.t0) / 1000.0).sum
       println(f"sum(job walls) ${sumJobs}%.3f s; gaps (driver/planning) ${wall - sumJobs}%.3f s")
-      sweep()
+      GraftSession.sweep(spark)
     }
     }
     spark.stop()

@@ -16,7 +16,7 @@ object PlanAudit {
     // and return only the sink re-read — auditing that scan is meaningless
     // and slow; their plan story is the streaming specs + bench numbers
     graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot(_._1.startsWith("stream_")).foreach { case (name, fn) =>
+      .filterNot(e => graft.SparkEntry.isStream(e._1)).foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
         val plan = df.queryExecution.executedPlan

@@ -75,7 +75,7 @@ class PlanSweepSpec extends SparkSpec {
   private val maxScanWidth: Map[String, Int] = Map.empty
 
   private def batchEntries: Seq[(String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)] =
-    SparkEntry.queries.filterNot(_._1.startsWith("stream_")).toSeq.sortBy(_._1)
+    SparkEntry.queries.filterNot(e => SparkEntry.isStream(e._1)).toSeq.sortBy(_._1)
 
   test("every batch entry: no SortAggregate, no CartesianProduct, pruned scans") {
     val violations = scala.collection.mutable.ArrayBuffer[String]()

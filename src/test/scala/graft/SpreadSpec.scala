@@ -3,7 +3,7 @@ package graft
 import graft.nexmark.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Pins for the r16 scale-conditional scan fan-out ([[Tables.spread]],
+/** Pins for the scale-conditional scan fan-out ([[Tables.spreadTable]],
   * optimization guide §2.5 "one huge unsplittable file → repartition
   * immediately after the read") and the corpus-derived navigation-index
   * partition count ([[graft.queries.Similarity.navPartsFor]]).
@@ -18,28 +18,6 @@ import org.apache.spark.sql.functions._
   *     a full-corpus shuffle for this).
   */
 class SpreadSpec extends SparkSpec {
-
-  test("spread fans a single-file scan out to the session parallelism") {
-    val raw = Tables.documents(spark, "/root/testdata/sf0.001")
-    assume(raw.rdd.getNumPartitions < spark.sparkContext.defaultParallelism)
-    val df = Tables.spread(spark, raw, col("doc_id"))
-    assert(df.rdd.getNumPartitions == spark.sparkContext.defaultParallelism,
-      "fan-out must lift scan parallelism to the session's cores")
-    // deterministic hash partitioning, never round-robin (SPARK-38388)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("REPARTITION_BY_NUM") && plan.contains("hashpartitioning"),
-      s"expected a deterministic hash repartition:\n$plan")
-    // identity on content: same rows either way
-    assert(df.count() == raw.count())
-  }
-
-  test("spread is the identity once the input is already parallel enough") {
-    val base = Tables.documents(spark, "/root/testdata/sf0.001")
-      .repartition(spark.sparkContext.defaultParallelism + 3, col("doc_id"))
-    val df = Tables.spread(spark, base, col("doc_id"))
-    assert(df.queryExecution.logical eq base.queryExecution.logical,
-      "spread must not add anything to an already-parallel input")
-  }
 
   test("verify-join fetch strategy is a function of corpus size (r15 VERDICT #3)") {
     // below the bound (every gate SF): the exact r15 broadcast shape
@@ -68,17 +46,28 @@ class SpreadSpec extends SparkSpec {
     val cores = spark.sparkContext.defaultParallelism
     for (sf <- Seq("0.001", "0.1")) {
       val dir = s"/root/testdata/sf$sf"
-      val rows = Tables.table(spark, dir, "documents").count()
-      val scanParts = Tables.table(spark, dir, "documents").rdd.getNumPartitions
-      val want = math.min(cores.toLong, math.max(1L, (rows + 255) / 256)).toInt
-      val df = Tables.spreadTable(spark, dir, "documents", col("doc_id"))
-      if (want <= 1 || scanParts >= want)
-        assert(!df.queryExecution.executedPlan.toString.contains("REPARTITION_BY_NUM"),
-          s"sf$sf: a frame under the rows-per-task floor must not fan out")
-      else
-        assert(df.rdd.getNumPartitions == want,
-          s"sf$sf: fan-out must target min(cores, rows/256) = $want, " +
-            s"got ${df.rdd.getNumPartitions}")
+      // the same corpus as a multi-file table, which already plans more
+      // partitions than the target: there the fan-out must be the identity
+      val split = java.nio.file.Files.createTempDirectory("spread").toString
+      Tables.table(spark, dir, "documents")
+        .repartition(4 * cores, col("doc_id")).write.parquet(s"$split/documents.parquet")
+      assert(Tables.table(spark, split, "documents").rdd.getNumPartitions >= cores)
+      for (d <- Seq(dir, split)) {
+        val rows = Tables.table(spark, d, "documents").count()
+        val scanParts = Tables.table(spark, d, "documents").rdd.getNumPartitions
+        val want = math.min(cores.toLong, math.max(1L, (rows + 255) / 256)).toInt
+        val df = Tables.spreadTable(spark, d, "documents", col("doc_id"))
+        if (want <= 1 || scanParts >= want)
+          assert(!df.queryExecution.executedPlan.toString.contains("REPARTITION_BY_NUM"),
+            s"$d: a frame under the rows-per-task floor or already parallel must not fan out")
+        else {
+          assert(df.rdd.getNumPartitions == want,
+            s"$d: fan-out must target min(cores, rows/256) = $want, " +
+              s"got ${df.rdd.getNumPartitions}")
+          // deterministic hash partitioning, never round-robin (SPARK-38388)
+          assert(df.queryExecution.executedPlan.toString.contains("hashpartitioning"))
+        }
+      }
     }
   }
 
