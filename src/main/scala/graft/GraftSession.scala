@@ -15,6 +15,12 @@ import org.apache.spark.sql.SparkSession
   *
   * Sessions come from `getOrCreate`: a second call in the same JVM returns
   * the running session, keeping its master and setting the SQL confs again.
+  *
+  * Hadoop client settings are not set here: `src/main/resources/core-site.xml`
+  * is the one place for them. Hadoop loads it into every `Configuration`,
+  * so it also reaches sessions this factory did not build, such as the
+  * benchmark's. It registers [[graft.io.LocalCheckpointFileManager]] for
+  * streaming checkpoints and pins `file:` to Hadoop's `LocalFileSystem`.
   */
 object GraftSession {
 

@@ -170,10 +170,14 @@ object StreamingBench extends QueryModule {
     * shuffle.partitions is pinned to the source parallelism for the run:
     * every stateful operator creates one state store PER shuffle partition
     * and commits each of them EVERY micro-batch: ~220 commits of pure
-    * overhead per operator at 32 partitions × 7 batches. Sizing stores to
-    * the actual parallelism is the same knob a cluster deployment tunes
-    * (state store count ≈ cores, not default-200). Restored after the run so batch
-    * queries in the same session keep their own setting.
+    * overhead per operator at 32 partitions × 7 batches. Each commit
+    * writes a delta file, its checksum file and their Hadoop `.crc`
+    * sidecars through [[graft.io.LocalCheckpointFileManager]], which
+    * renames them without forking a process; the `chmod` Hadoop forks per
+    * created file remains. Sizing stores to the actual parallelism is the
+    * same knob a cluster deployment tunes (state store count ≈ cores, not
+    * default-200). Restored after the run so batch queries in the same
+    * session keep their own setting.
     */
   private def runToParquet(spark: SparkSession, df: DataFrame, name: String,
                            minBatches: Int): DataFrame = {

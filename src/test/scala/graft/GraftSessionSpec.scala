@@ -5,10 +5,11 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** The session factory and its scoped-conf helper, plus a structural guard
-  * over `src/main/scala`: sessions are built in one place, the thread
-  * count is read in one place, and no measurement-only stream/state env
-  * knob or one-off probe main comes back. The guard counts source text,
-  * so machine load cannot move it.
+  * over `src/main`: sessions are built in one place, the thread count is
+  * read in one place, the checkpoint file manager is registered in one
+  * place (`core-site.xml`), and no measurement-only stream/state env knob
+  * or one-off probe main comes back. The guard counts source text, so
+  * machine load cannot move it.
   */
 class GraftSessionSpec extends SparkSpec {
 
@@ -84,5 +85,27 @@ class GraftSessionSpec extends SparkSpec {
   test("graft.tools holds only EntryProfile, PlanAudit and ScaleUp") {
     val tools = mainSources.keySet.filter(_.startsWith("graft/tools/"))
     assert(tools == Set("EntryProfile", "PlanAudit", "ScaleUp").map(n => s"graft/tools/$n.scala"))
+  }
+
+  private val CheckpointKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  test("the checkpoint file manager class is set once under src/main, in core-site.xml") {
+    val root = Paths.get("src", "main")
+    val walk = Files.walk(root)
+    val hits =
+      try walk.iterator().asScala.filter(Files.isRegularFile(_)).map { p =>
+        root.relativize(p).toString ->
+          java.util.regex.Pattern.quote(CheckpointKey).r.findAllIn(Files.readString(p)).size
+      }.filter(_._2 > 0).toMap
+      finally walk.close()
+    assert(hits == Map("resources/core-site.xml" -> 1))
+  }
+
+  test("the spec session's Hadoop conf resolves the checkpoint file manager") {
+    val conf = spark.sessionState.newHadoopConf()
+    assert(conf.get(CheckpointKey) == classOf[graft.io.LocalCheckpointFileManager].getName)
+    // Hadoop's own local file system, not Hive's ProxyLocalFileSystem
+    assert(org.apache.hadoop.fs.FileSystem.get(java.net.URI.create("file:///"), conf).getClass ==
+      classOf[org.apache.hadoop.fs.LocalFileSystem])
   }
 }

@@ -69,9 +69,7 @@ class IndexDeleteSpec extends SparkSpec {
   test("compacted serve keeps the bucketed, Exchange-free postings branch") {
     Similarity.buildIvfIndex(spark, Dir)
     val compactT = Similarity.compactIvfIndex(spark, Dir)
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    GraftSession.withConf(spark)("spark.sql.adaptive.enabled" -> "false") {
       val plan = Similarity.knnServeScoredOn(spark, Dir, compactT)
         .queryExecution.executedPlan
       assert(plan.collect {
@@ -85,7 +83,7 @@ class IndexDeleteSpec extends SparkSpec {
       }
       assert(corpusShuffles(plan).isEmpty,
         s"compacted serve reshuffles the corpus branch:\n$plan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    }
   }
 
   test("audit arithmetic and recall floor on the oracle-gated entry") {

@@ -44,10 +44,6 @@ class JoinResumeSpec extends SparkSpec {
     NexmarkQueries.qIntervalJoin(bids, auctions, joinType = joinType)
   }
 
-  private def withRocksDB[T](body: => T): T =
-    graft.GraftSession.withConf(spark)("spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
-
   private def runKillResume(joinType: String): Unit = {
     val base = java.nio.file.Files.createTempDirectory(s"joinresume_$joinType")
     val interrupted = s"$base/int"; val ckptI = s"$base/ckptI"

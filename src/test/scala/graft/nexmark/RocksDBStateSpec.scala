@@ -12,10 +12,7 @@ class RocksDBStateSpec extends SparkSpec {
   val cfg = GenConfig()
 
   test("stateful q5 runs on RocksDBStateStoreProvider with identical results") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDB {
       implicit val sqlCtx = spark.sqlContext
       import spark.implicits._
       val bids = NexmarkGen.bids(cfg, 2000).toSeq
@@ -36,19 +33,11 @@ class RocksDBStateSpec extends SparkSpec {
       val want = bids.groupBy(_.auctionId)
         .view.mapValues(bs => (bs.map(_.bid).max, bs.size.toLong)).toMap
       assert(got == want)
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
   test("transformWithState QX port matches the declarative interval-join argmax") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDB {
       implicit val sqlCtx = spark.sqlContext
       import spark.implicits._
       val sentinelTs = 1893456000000L
@@ -85,19 +74,11 @@ class RocksDBStateSpec extends SparkSpec {
         .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
       assert(got == batch)
       assert(got.nonEmpty)
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
   test("TWS QX purges orphan bids and the resolved tombstone after the horizon") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDB {
       implicit val sqlCtx = spark.sqlContext
       import spark.implicits._
       val t0 = 1893456000000L
@@ -141,11 +122,6 @@ class RocksDBStateSpec extends SparkSpec {
       // orphan 99.0 bids were purged (not 111/112); tombstone was purged
       // (second lifecycle emitted at all)
       assert(got == Set((222L, 42.0), (333L, 7.5)))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -154,43 +130,35 @@ class RocksDBStateSpec extends SparkSpec {
     // timer share one (key, ts) slot when auction.end == cleanupAt; the
     // cleanup delete must happen BEFORE registering at e.end, or it removes
     // the just-armed resolution timer and the auction never resolves
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val t0 = 1893456000000L
-    val horizon = 10000L
-    val key = 9L
-    val sk = Long.MaxValue / 2
-    val msB = MemoryStream[Bid]
-    val msA = MemoryStream[Auction]
-    val q = NexmarkTws.qxWinningBidsTws(msB.toDS(), msA.toDS(), purgeHorizonMs = horizon)
-      .toDF.writeStream.format("memory").queryName("twscollide")
-      .outputMode("append").start()
-    try {
-      def step(f: => Unit): Unit = { f; q.processAllAvailable() }
-      // orphan bid arms the cleanup timer at exactly t0 + horizon
-      step { msB.addData(Seq(Bid(t0, t0, key, 111L, -1L, 99.0))) }
-      // auction whose end == the pending cleanupAt (the colliding slot)
-      step { msA.addData(Seq(Auction(t0 + 1000, key, 1L, 1L, 1.0,
-        t0 + 1000, t0 + horizon, 1L, "s", "s", t0 + 1000))) }
-      // advance the watermark past end so the resolution timer fires
-      step { msA.addData(Seq(Auction(t0 + 20000, sk, 1L, 1L, 1.0,
-        t0 + 20000, t0 + 21000, 1L, "s", "s", t0 + 20000))) }
-      step { msA.addData(Seq(Auction(t0 + 40000, sk + 1, 1L, 1L, 1.0,
-        t0 + 40000, t0 + 41000, 1L, "s", "s", t0 + 40000))) }
-    } finally q.stop()
-    val got = spark.table("twscollide").collect()
-      .filter(_.getLong(0) == key)
-      .map(r => (r.getLong(1), r.getDouble(2))).toSet
-    assert(got == Set((111L, 99.0)))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDB {
+      implicit val sqlCtx = spark.sqlContext
+      import spark.implicits._
+      val t0 = 1893456000000L
+      val horizon = 10000L
+      val key = 9L
+      val sk = Long.MaxValue / 2
+      val msB = MemoryStream[Bid]
+      val msA = MemoryStream[Auction]
+      val q = NexmarkTws.qxWinningBidsTws(msB.toDS(), msA.toDS(), purgeHorizonMs = horizon)
+        .toDF.writeStream.format("memory").queryName("twscollide")
+        .outputMode("append").start()
+      try {
+        def step(f: => Unit): Unit = { f; q.processAllAvailable() }
+        // orphan bid arms the cleanup timer at exactly t0 + horizon
+        step { msB.addData(Seq(Bid(t0, t0, key, 111L, -1L, 99.0))) }
+        // auction whose end == the pending cleanupAt (the colliding slot)
+        step { msA.addData(Seq(Auction(t0 + 1000, key, 1L, 1L, 1.0,
+          t0 + 1000, t0 + horizon, 1L, "s", "s", t0 + 1000))) }
+        // advance the watermark past end so the resolution timer fires
+        step { msA.addData(Seq(Auction(t0 + 20000, sk, 1L, 1L, 1.0,
+          t0 + 20000, t0 + 21000, 1L, "s", "s", t0 + 20000))) }
+        step { msA.addData(Seq(Auction(t0 + 40000, sk + 1, 1L, 1L, 1.0,
+          t0 + 40000, t0 + 41000, 1L, "s", "s", t0 + 40000))) }
+      } finally q.stop()
+      val got = spark.table("twscollide").collect()
+        .filter(_.getLong(0) == key)
+        .map(r => (r.getLong(1), r.getDouble(2))).toSet
+      assert(got == Set((111L, 99.0)))
     }
   }
 }

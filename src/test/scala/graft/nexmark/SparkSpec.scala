@@ -9,4 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = graft.GraftSession(cpus = 4)
+
+  /** Run `body` on the RocksDB state store provider, then restore the
+    * session's provider (also when `body` throws). */
+  def withRocksDB[T](body: => T): T =
+    graft.GraftSession.withConf(spark)("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 }

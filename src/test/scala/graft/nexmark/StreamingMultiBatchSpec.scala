@@ -117,11 +117,7 @@ class StreamingMultiBatchSpec extends SparkSpec {
     // The 4-batch tws run is the regression net for the two timer-boundary
     // bugs the sf0.1 gate caught (watermark-filtered fires, exclusive
     // end−1 timers — NexmarkTws.SessionWindowProcessor doc).
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDB {
       val (declarative, _) = run(1, NexmarkQueries.sessions(_, "5 seconds"))
       def tws(batches: Int) =
         run(batches, graft.nexmark.queries.NexmarkTws.sessionsTws(_).toDF)
@@ -131,9 +127,6 @@ class StreamingMultiBatchSpec extends SparkSpec {
       assert(declarative.nonEmpty, "degenerate: no finalized sessions at this volume")
       assert(one == declarative)
       assert(four == declarative)
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None    => spark.conf.unset(key)
     }
   }
 
@@ -262,16 +255,8 @@ class StreamingMultiBatchSpec extends SparkSpec {
     if (!tws) runTwo(batches, "qxdiv", aRows = 500L, aEps = 1L, bRows = 2000L, bEps = 4L)(
       (a, b) => NexmarkStateful.qxStateful(b, a).toDF)
     else {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try runTwo(batches, "qxdivtws", aRows = 500L, aEps = 1L, bRows = 2000L, bEps = 4L)(
-        (a, b) => graft.nexmark.queries.NexmarkTws.qxWinningBidsTws(b, a).toDF)
-      finally prev match {
-        case Some(p) => spark.conf.set(key, p)
-        case None    => spark.conf.unset(key)
-      }
+      withRocksDB(runTwo(batches, "qxdivtws", aRows = 500L, aEps = 1L, bRows = 2000L, bEps = 4L)(
+        (a, b) => graft.nexmark.queries.NexmarkTws.qxWinningBidsTws(b, a).toDF))
     }
   }
 

@@ -45,10 +45,6 @@ class TopkResumeSpec extends SparkSpec {
     NexmarkQueries.qWindowTopK(bids, "5 seconds")
   }
 
-  private def withRocksDB[T](body: => T): T =
-    graft.GraftSession.withConf(spark)("spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
-
   private def runKillResume(label: String): Unit = {
     val base = java.nio.file.Files.createTempDirectory(s"topkresume_$label")
     val interrupted = s"$base/int"; val ckptI = s"$base/ckptI"

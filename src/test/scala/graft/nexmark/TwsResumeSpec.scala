@@ -23,10 +23,6 @@ import graft.nexmark.queries.NexmarkTws
   */
 class TwsResumeSpec extends SparkSpec {
 
-  private def withRocksDB[T](body: => T): T =
-    graft.GraftSession.withConf(spark)("spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
-
   // 10 ms event spacing → a 30 s span at 3000 rows/subtask: wide enough
   // that the 2 s watermark delay closes most 500 ms-gap sessions and
   // resolves most 10 s auctions by end-of-stream, while the half-bound
