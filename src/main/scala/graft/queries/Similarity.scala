@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Sizing, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -741,12 +741,11 @@ object Similarity extends QueryModule {
           col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"))
       .distinct()
-    // size-aware fetch sides: same rationale and bound as
-    // [[verifiedDupPairs]]/[[fetchSide]] — a pair row must never carry
-    // embedding payload through a SORT, and the broadcast arm must not
-    // be unconditional
-    val ea = fetchSide(e.select(col("vec_id").as("vec_a"), col("emb").as("qemb")), n2)
-    val eb = fetchSide(e.select(col("vec_id").as("vec_b"), col("emb").as("cemb")), n2)
+    // size-aware fetch sides ([[Sizing.fetch]]): a pair row must never
+    // carry embedding payload through a SORT, and the broadcast arm must
+    // not be unconditional
+    val ea = Sizing.fetch(e.select(col("vec_id").as("vec_a"), col("emb").as("qemb")), n2)
+    val eb = Sizing.fetch(e.select(col("vec_id").as("vec_b"), col("emb").as("cemb")), n2)
     cands.join(ea, "vec_a").join(eb, "vec_b")
       .withColumn("cos", cosine(col("qemb"), col("cemb")))
       .filter(col("cos") >= 0.15)
@@ -806,54 +805,8 @@ object Similarity extends QueryModule {
       posexplode(array(bandKeyCols(dupCoordPairs(dupLshBits(n))): _*))
         .as(Seq("band", "bkey")))
 
-  /** Embedding-side fetch strategy for the near-dup verify joins, a
-    * FUNCTION OF MEASURED SIZE (r15 VERDICT "What's wrong #3", the
-    * [[dupLshBits]] idiom): BROADCAST while the framed corpus sits an
-    * order of magnitude under the 8 GB / 512 M-row broadcast ceiling —
-    * 4 M rows × ~550 B/row ≈ 2.2 GB — and a SHUFFLED-HASH build of the
-    * embedding side beyond. Either way the invariant that matters holds:
-    * pair rows NEVER ride a SORT with the 550 B embedding payload
-    * attached (the unhinted SMJ fallback re-creates the r15 sf100 find —
-    * ~160 GB of sort spill from 16 B pair rows; guide §3.1: hash build,
-    * no sort, spills gracefully per partition). Every gate SF (2.1 M
-    * vectors at sf100) sits below the bound, so gate plans keep the
-    * exact r15 broadcast shape and outputs are bit-identical — strategy
-    * selection, not semantics. At 1 B vectors production replaces the
-    * in-query hash build with the bucketed postings table the scaladoc
-    * below names (the s_knn_serve layout): the succession is
-    * broadcast → shuffled-hash → bucketed storage join, each bound
-    * measured, none of them a payload sort.
-    */
-  private val FetchBroadcastMaxRows = 4000000L
-  private def fetchSide(df: DataFrame, n: Long): DataFrame =
-    if (n <= FetchBroadcastMaxRows) broadcast(df) else df.hint("shuffle_hash")
-
-  /** Rows-aware fan-out for the CPU-dense scoring pass over a kB-scale
-    * candidate-pair table (r17; the §3a/AQE-byte-floor class of finding):
-    * a pair row is 16 B, so AQE's byte-based coalescing (1 MB
-    * minPartitionSize) packs a few-hundred-thousand-pair table into 1-4
-    * partitions, and the 64-dim-cosine-per-pair kernel downstream runs
-    * 1-4 tasks on a 32-core session (measured r17: s_knn_beam's nav
-    * build job 745 — 0.72 s, ONE task, scoring ~245 k candidate cosines).
-    * The fix keys the candidate dedup's OWN exchange by query_id at the
-    * session parallelism: hash(query_id) satisfies the (query_id, vec_id)
-    * clustering the DISTINCT needs, so no exchange is added — the dedup's
-    * exchange is re-keyed and pinned, and the scoring joins (broadcast
-    * fetch sides) stay narrow on top of it.
-    *
-    * Conditional, not a constant: only when the ESTIMATED pair volume
-    * (rowsEst × 16 B) is under what AQE's floor would coalesce into fewer
-    * partitions than cores (target × 1 MB) — a cluster-scale pair table
-    * (9 B pairs ≈ 146 GB at sf100) keeps the stock shuffle.partitions +
-    * AQE byte sizing, because pinning it to `cores` would under-partition
-    * exactly what cluster.conf sizes. The target is the shared
-    * [[Tables.rowsAwareTarget]]. */
-  private def pairFanOut(spark: SparkSession, pairs: DataFrame, rowsEst: Long): DataFrame = {
-    val target = Tables.rowsAwareTarget(spark, rowsEst)
-    if (target > 1 && rowsEst * 16L < target.toLong * (1L << 20))
-      pairs.repartition(target, col("query_id"))
-    else pairs
-  }
+  /** A candidate (query_id, vec_id) pair row: two longs. */
+  private val PairRowBytes = 16L
 
   private[graft] def verifiedDupPairs(e: DataFrame, n: Long): DataFrame = {
     val bands = dupLshBands(e, n)
@@ -863,12 +816,12 @@ object Similarity extends QueryModule {
           col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"))
       .distinct()
-    // embedding fetch sides: size-aware strategy ([[fetchSide]]) — the
+    // embedding fetch sides: size-aware strategy ([[Sizing.fetch]]) — the
     // corpus outgrows autoBroadcast one decade past the gate, and an
     // unconditional broadcast hint would hit the 8 GB ceiling two
     // decades further; pair rows still never carry vectors.
-    val ea = fetchSide(e.select(col("vec_id").as("vec_a"), col("emb").as("qemb")), n)
-    val eb = fetchSide(e.select(col("vec_id").as("vec_b"), col("emb").as("cemb")), n)
+    val ea = Sizing.fetch(e.select(col("vec_id").as("vec_a"), col("emb").as("qemb")), n)
+    val eb = Sizing.fetch(e.select(col("vec_id").as("vec_b"), col("emb").as("cemb")), n)
     cands.join(ea, "vec_a").join(eb, "vec_b")
       .filter(cosine(col("qemb"), col("cemb")) >= DedupTau)
       .select(col("vec_a"), col("vec_b"))
@@ -2618,13 +2571,14 @@ object Similarity extends QueryModule {
                  1, NProbe).as("top"))
       .select(col("vec_id").as("query_id"), explode(col("top.cid")).as("cid"))
     // pinned-cell occupancy is CentroidMod, so candidates ≈ N·NProbe·Mod
-    // ([[pairFanOut]]: rows-aware scoring parallelism, identity at scale)
+    // ([[Sizing.spreadShuffled]]: the scoring pass fans out over the
+    // cores; keyed by query_id, it re-keys the DISTINCT's own exchange)
     val nPf = Tables.tableRows(spark, dir, "embeddings")
-    val pairs = pairFanOut(spark,
+    val pairs = Sizing.spreadShuffled(
         probes.join(assign, "cid")
           .filter(col("vec_id") =!= col("query_id"))
           .select(col("query_id"), col("vec_id")),
-        nPf * NProbe * CentroidMod)
+        nPf * NProbe * CentroidMod, PairRowBytes, col("query_id"))
       .distinct() // a pair sharing several probed cells scores once
     // same quantized-rank contract as knnBinary: order by ROUND(cos, 6)
     // with the vec_id tie-break so rank never depends on raw-double ulps
@@ -2708,11 +2662,12 @@ object Similarity extends QueryModule {
       .select(col("vec_id").as("query_id"), explode(col("top.cid")).as("cid"))
     val nFetch = Tables.tableRows(spark, dir, "embeddings")
     // candidate volume ≈ N·NProbe·√N (the build rule this entry encodes)
-    val pairs = pairFanOut(spark,
+    val pairs = Sizing.spreadShuffled(
         probes.join(assign, "cid")
           .filter(col("vec_id") =!= col("query_id"))
           .select(col("query_id"), col("vec_id")),
-        nFetch * NProbe * math.max(1L, math.sqrt(nFetch.toDouble).toLong))
+        nFetch * NProbe * math.max(1L, math.sqrt(nFetch.toDouble).toLong),
+        PairRowBytes, col("query_id"))
       .distinct()
     // Score via hash joins on both embedding sides: the r11 sf10 probe
     // showed the naive shuffle join OOMs here — a sort-merge join SORTS
@@ -2720,11 +2675,10 @@ object Similarity extends QueryModule {
     // attached (~170 GB of sort rows at 210k vectors), while the pair
     // table itself is 16 B/row. Design rule this encodes: a wide payload
     // column must never ride a sort — broadcast the embedding side while
-    // it fits, SHUFFLE_HASH-build it beyond ([[fetchSide]], r16: the
-    // broadcast arm was unconditional and would hit the 8 GB ceiling).
+    // it fits, SHUFFLE_HASH-build it beyond ([[Sizing.fetch]]).
     val scored = pairs
-      .join(fetchSide(e.select(col("vec_id"), col("emb").as("cemb")), nFetch), "vec_id")
-      .join(fetchSide(e.select(col("vec_id").as("query_id"), col("emb").as("qemb")), nFetch),
+      .join(Sizing.fetch(e.select(col("vec_id"), col("emb").as("cemb")), nFetch), "vec_id")
+      .join(Sizing.fetch(e.select(col("vec_id").as("query_id"), col("emb").as("qemb")), nFetch),
         "query_id")
       .withColumn("cos6", round(cosine(col("qemb"), col("cemb")), 6))
       .select(col("query_id"), col("vec_id"), col("cos6"))
@@ -3470,25 +3424,10 @@ object Similarity extends QueryModule {
 
   /** Partition count of the persisted navigation index ([[buildNavIndex]]):
     * the edge table is laid out by `sb = src % navParts`, so a beam hop
-    * reads only the partitions its frontier vertices live in — derived
-    * from the corpus size (r16, same idiom as [[dupLshBits]]): one
-    * partition per ~128 vertices, clamped to [8, 4096]. The r15-era
-    * constant 64 was sized for neither end — a 2k-vector bench corpus
-    * paid 64 directories of write/listing/open overhead per build
-    * (measured r16: 2.3 s of the 5.6 s build was the 64-dir partitioned
-    * write), while a 1 B-vector corpus would put ~16 M vertices'
-    * adjacency in one prunable unit. Floor 8 keeps multi-partition
-    * pruning observable at every gate SF (plan pin in BeamSearchSpec);
-    * cap 4096 bounds directory count like any partitioned table.
-    * Memoized per fixture dir (a 1-row count — the fingerprintDedup
-    * hotShareCache idiom; NOT a result cache, the layout parameter only).
-    */
-  private val navPartsCache = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-  private[graft] def navPartsFor(spark: SparkSession, dir: String): Long =
-    navPartsCache.computeIfAbsent(dir, _ => {
-      val n = Tables.tableRows(spark, dir, "embeddings")
-      math.max(8L, math.min(4096L, n / 128L))
-    })
+    * reads only the partitions its frontier vertices live in
+    * ([[Sizing.navParts]] of the corpus size). */
+  private def navParts(spark: SparkSession, dir: String): Long =
+    Sizing.navParts(Tables.tableRows(spark, dir, "embeddings"))
 
   /** Catalog table name of the persisted navigation index for fixture
     * `dir` (same per-fixture keying as [[ivfIndexTables]]). */
@@ -3499,7 +3438,7 @@ object Similarity extends QueryModule {
     * — the [[buildIvfIndex]] split applied to the graph-ANN layout):
     * symmetrize the [[knnGraphScaled]] kNN edges, re-cut to [[NavDegree]]
     * per vertex, attach each neighbor's EMBEDDING to the edge row, and
-    * persist partitioned by `sb = src % navPartsFor`. Storing the neighbor
+    * persist partitioned by `sb = src % navParts`. Storing the neighbor
     * vector WITH the adjacency row is the DiskANN node layout: a hop then
     * reads adjacency + scoring payload in ONE point lookup, and the
     * serve never touches the corpus embedding table at all (the r11
@@ -3526,7 +3465,7 @@ object Similarity extends QueryModule {
       .select(col("src"), col("dst"))
     edges
       .join(vecs(spark, dir).select(col("vec_id").as("dst"), col("emb").as("demb")), "dst")
-      .select(pmod(col("src"), lit(navPartsFor(spark, dir))).cast("int").as("sb"),
+      .select(pmod(col("src"), lit(navParts(spark, dir))).cast("int").as("sb"),
         col("src"), col("dst"), col("demb"))
       .repartition(col("sb"))
       .write.partitionBy("sb").mode("overwrite")
@@ -3549,7 +3488,7 @@ object Similarity extends QueryModule {
                                      frontierRows: Seq[(Long, Long)],
                                      q: DataFrame): DataFrame = {
     import spark.implicits._
-    val resid = frontierRows.map(_._2 % navPartsFor(spark, dir)).distinct
+    val resid = frontierRows.map(_._2 % navParts(spark, dir)).distinct
     val frontier = frontierRows.toDF("query_id", "bsrc")
     spark.table(navIndexTable(dir))
       .filter(col("sb").isin(resid: _*))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.GraftSession
+import graft.{GraftSession, Sizing}
 import graft.nexmark.{GenConfig, NexmarkSources}
 import graft.nexmark.queries.{NexmarkQueries, NexmarkStateful}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -125,13 +125,14 @@ object StreamingBench extends QueryModule {
     * compare immediately after the Verify run that wrote both — so
     * last-write-wins is exactly right at any scale factor. The one writer
     * that is NOT followed by a compare, the bench, skips the dump entirely
-    * (see [[dumpInput]]). Overridable via -Dgraft.stream.dumpBase for a
-    * checkout outside /root/repo (set it for BOTH the Verify run and any
-    * process reading the emitted oracle SQL — the path is baked into the
-    * SQL at dump time).
+    * (see [[dumpInput]]). Defaults to `target/stream_inputs` under the
+    * working directory, made absolute because the path is baked into the
+    * oracle SQL at dump time; -Dgraft.stream.dumpBase overrides it (set
+    * it for BOTH the Verify run and any process reading the emitted
+    * oracle SQL).
     */
-  private val InputDumpBase = sys.props.getOrElse(
-    "graft.stream.dumpBase", "/root/repo/target/stream_inputs")
+  private[graft] val InputDumpBase: String = sys.props.getOrElse(
+    "graft.stream.dumpBase", java.nio.file.Paths.get("target", "stream_inputs").toAbsolutePath.toString)
 
   /** Persist the EXACT event set the DSv2 streaming source will emit: the
     * same `format("nexmark")` table read in BATCH mode with identical
@@ -686,31 +687,31 @@ object StreamingBench extends QueryModule {
       .load()
       .select(col("auctionId").as("corpus_id")).distinct()
     val bids = NexmarkSources.bidStreamDsv2(spark, cfg, Parallelism, rows, rowsPerBatchFor(rows))
-    runToParquet(spark, nearDupGuard(bids.toDF, corpusIds), "incneardup",
+    runToParquet(spark, nearDupGuard(bids.toDF, corpusIds, cRows * Parallelism), "incneardup",
       expectedBatches(rows))
   }
 
   /** The guard dataflow itself, over any bid stream and corpus-id set
     * (split out so StreamingMultiBatchSpec can pin 1-batch == 4-batch on
     * its own bounded fixture): stages (1)-(4) of the entry doc above.
+    * `corpusRows` bounds the corpus-id count (the corpus bids streamed).
     */
-  private[graft] def nearDupGuard(bids: DataFrame, corpusIds: DataFrame): DataFrame = {
+  private[graft] def nearDupGuard(bids: DataFrame, corpusIds: DataFrame,
+                                  corpusRows: Long): DataFrame = {
     import org.apache.spark.sql.functions._
     val nb = TextPipeline.NumBands
     // static corpus posting lists (band b: bkey -> sorted distinct ids) —
     // in production the incrementally-maintained index table, bucketed by
     // bkey; recomputed here because entries are self-contained
-    // fan out BEFORE the banding kernel (r16): the distinct's output is
-    // small in BYTES (8 B/id), so AQE coalesces it to one partition and
-    // the 12-md5-per-id banding pass runs single-threaded (measured
-    // 3-6 s of the entry at sf0.1). The id set is CHECKPOINTED at the
-    // pinned partition count — a bare repartition is not enough, the
+    // fan out BEFORE the banding kernel ([[Sizing.spread]]): the
+    // distinct's output is small in BYTES (8 B/id), so AQE coalesces it
+    // to one partition (`have` = 1) and the 12-md5-per-id banding pass
+    // would run single-threaded. The id set is CHECKPOINTED at the
+    // spread partition count — a bare repartition is not enough, the
     // optimizer re-fuses the banding below it into the single coalesced
-    // stage (r16 plan inspection); the checkpoint's lineage cut pins the
-    // 1-id-block-per-core layout the kernel then runs over.
-    val ids = corpusIds
-      .repartition(corpusIds.sparkSession.sparkContext.defaultParallelism,
-        col("corpus_id"))
+    // stage; the checkpoint's lineage cut pins the layout the kernel
+    // then runs over.
+    val ids = Sizing.spread(corpusIds, corpusRows, 1L, col("corpus_id"))
       .localCheckpoint(true)
     val corpusBands = ids
       .withColumn("toks", expr(nearToksExpr("corpus_id")))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Sizing, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -78,8 +78,8 @@ object TextPipeline extends QueryModule {
   private def docsNormAt(spark: SparkSession, dir: String, fanOut: Boolean): DataFrame = {
     // spread BEFORE the normalize: the regex battery is the per-row kernel
     // the fan-out exists to parallelize (guide §2.5; identity on any
-    // multi-split table — see Tables.spreadTable)
-    val base = if (fanOut) Tables.spreadTable(spark, dir, "documents", col("doc_id"))
+    // multi-split table — see Sizing.spreadTable)
+    val base = if (fanOut) Sizing.spreadTable(spark, dir, "documents", col("doc_id"))
                else Tables.table(spark, dir, "documents")
     base
       .select(col("doc_id"), col("text"), col("lang"), col("source"),
@@ -275,7 +275,7 @@ object TextPipeline extends QueryModule {
     // full pass spread (guide §2.5): the md5-of-normalized-text kernel is
     // the cost; the 1% probe above stays on the bare scan (sampling must
     // sit directly over it)
-    val d = fpOf(Tables.spreadTable(spark, dir, "documents", col("doc_id")))
+    val d = fpOf(Sizing.spreadTable(spark, dir, "documents", col("doc_id")))
     if (sampled >= 1000L && share > HotFpShareThreshold) fingerprintDedupAggJoin(d)
     else fingerprintDedupWindow(d)
   }
@@ -1413,7 +1413,7 @@ object TextPipeline extends QueryModule {
     // spread BEFORE the byte decode: the per-blob kernel loop is the cost
     // (r16 measured: t_phash_neardup's sig pass ran as a 2-task stage,
     // 2.5 s of 3.2 s total); identity on multi-split tables
-    Tables.spreadTable(spark, dir, "documents", col("doc_id"))
+    Sizing.spreadTable(spark, dir, "documents", col("doc_id"))
       .select(col("doc_id"),
         call_function("payload_bytes", col("text").cast("binary")).as("bs"))
 
@@ -3734,9 +3734,9 @@ object TextPipeline extends QueryModule {
     val toks = tokenOccs(spark, dir)
     // (doc, word) term frequencies feed BOTH the query-term selection and
     // the postings probe — materialize the corpus pass once; spread
-    // checkpoint (Tables.checkpointSpread) so the kB-scale blocks don't
+    // checkpoint (Sizing.checkpoint) so the kB-scale blocks don't
     // coalesce to one and serialize every downstream pass (r16)
-    val tf = Tables.checkpointSpread(spark,
+    val tf = Sizing.checkpoint(spark,
       toks.groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf")))
     val dfT = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
     val qterms = tf.filter(col("doc_id") % Similarity.QueryMod === 0)
@@ -3758,7 +3758,7 @@ object TextPipeline extends QueryModule {
     // spread checkpoint: tfq is postings-sized (every query-term × doc
     // hit) but kB-scale at bench SF — the 1-block coalesce made the BM25
     // scoring pass below run single-task for 1.9 s (r16 profile)
-    val tfq = Tables.checkpointSpread(spark,
+    val tfq = Sizing.checkpoint(spark,
       tf.join(broadcast(qterms), col("w") === col("term"))
         .select(col("query_id"), col("term"), col("doc_id"), col("tf")))
     val dft = tfq.groupBy(col("term")).agg(countDistinct(col("doc_id")).as("df"))

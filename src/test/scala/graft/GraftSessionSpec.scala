@@ -6,10 +6,11 @@ import scala.jdk.CollectionConverters._
 
 /** The session factory and its scoped-conf helper, plus a structural guard
   * over `src/main`: sessions are built in one place, the thread count is
-  * read in one place, the checkpoint file manager is registered in one
-  * place (`core-site.xml`), and no measurement-only stream/state env knob
-  * or one-off probe main comes back. The guard counts source text, so
-  * machine load cannot move it.
+  * read in one place, partitions are sized in one place ([[Sizing]]), the
+  * checkpoint file manager is registered in one place (`core-site.xml`),
+  * and no measurement-only stream/state env knob or one-off probe main
+  * comes back. The guard counts source text, so machine load cannot move
+  * it.
   */
 class GraftSessionSpec extends SparkSpec {
 
@@ -76,6 +77,11 @@ class GraftSessionSpec extends SparkSpec {
     assert(occurrences("\"SPARK_GRAFT_CPUS\"") == 1)
     assert(occurrences("\"SPARK_GRAFT_SHUFFLE\"") == 1)
     assert(filesMatching("\"SPARK_GRAFT_(CPUS|SHUFFLE)\"") == Set("graft/GraftSession.scala"))
+  }
+
+  test("the core count and AQE's byte floor are read only in Sizing") {
+    assert(filesMatching("defaultParallelism") == Set("graft/Sizing.scala"))
+    assert(filesMatching("""coalescePartitions\.minPartitionSize""") == Set("graft/Sizing.scala"))
   }
 
   test("no GRAFT_STREAM_* / GRAFT_STATE_* env knob is read") {

@@ -18,14 +18,16 @@ import org.apache.spark.sql.execution.joins.CartesianProductExec
   * the t_chunk_dedup SortAggregate appeared):
   *
   *   1. zero [[SortAggregateExec]] nodes (allowlist below for entries that
-  *      legitimately sort-aggregate, currently empty);
+  *      legitimately sort-aggregate);
   *   2. zero [[CartesianProductExec]] nodes — the broadcast-bounded
   *      crossJoins in Similarity plan as BroadcastNestedLoopJoin, never a
   *      shuffled cartesian;
   *   3. every parquet [[FileSourceScanExec]] reads at most
-  *      [[maxScanWidth]] columns — column pruning must reach the scan
-  *      (entries over the wide `documents`/`events` tables get explicit
-  *      per-entry bounds; everything else defaults to [[DefaultWidth]]).
+  *      [[DefaultWidth]] columns — column pruning must reach the scan;
+  *   4. exactly the partition-less windows of
+  *      [[graft.tools.PlanAudit.SanctionedGlobalWindows]] (none for any
+  *      other entry): a window without a partition key runs every row
+  *      through one task.
   *
   * The `stream_*` entries are excluded by name: their `queries` functions
   * EXECUTE the streaming topology and return a parquet read of the
@@ -40,9 +42,12 @@ class PlanSweepSpec extends SparkSpec {
 
   /** Entries allowed to plan a SortAggregate, with the reason. Keep this
     * minimal — adding a name here is a reviewed decision, not a
-    * convenience. The current four are the documented argmin/argmax
-    * aggregates whose ordering key is a (double, id) pair: a struct in
-    * the agg buffer is immutable, so HashAggregate is impossible, and the
+    * convenience. The 18 below are every entry that plans one of the
+    * documented argmin/argmax aggregates of the IVF/PQ/k-means family
+    * (cell assignment, PQ code assignment, Lloyd's assignment), directly
+    * or inside a subplan it shares. Their ordering key is a (double, id)
+    * pair: a struct in the agg buffer is immutable, so HashAggregate is
+    * impossible, and the
     * alternatives are strictly worse at scale — a row_number window or a
     * max-then-join-back second pass shuffles the full N×K similarity
     * table, while the SortAggregate keeps map-side partials and ships
@@ -70,10 +75,6 @@ class PlanSweepSpec extends SparkSpec {
 
   private val DefaultWidth = 8
 
-  /** Per-entry scan-width overrides: entries whose semantics genuinely
-    * need more columns from one table than [[DefaultWidth]]. */
-  private val maxScanWidth: Map[String, Int] = Map.empty
-
   private def batchEntries: Seq[(String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)] =
     SparkEntry.queries.filterNot(e => SparkEntry.isStream(e._1)).toSeq.sortBy(_._1)
 
@@ -81,7 +82,8 @@ class PlanSweepSpec extends SparkSpec {
     val violations = scala.collection.mutable.ArrayBuffer[String]()
     GraftSession.withConf(spark)("spark.sql.adaptive.enabled" -> "false") {
       for ((name, fn) <- batchEntries) {
-        val plan: SparkPlan = fn(spark, SfDir).queryExecution.executedPlan
+        val df = fn(spark, SfDir)
+        val plan: SparkPlan = df.queryExecution.executedPlan
         val sortAggs = plan.collectWithSubqueries { case s: SortAggregateExec => s }
         if (sortAggs.nonEmpty && !sortAggAllowed.contains(name))
           violations += s"$name: ${sortAggs.size} SortAggregate node(s) — " +
@@ -89,12 +91,15 @@ class PlanSweepSpec extends SparkSpec {
         val carts = plan.collectWithSubqueries { case c: CartesianProductExec => c }
         if (carts.nonEmpty)
           violations += s"$name: CartesianProduct — unbroadcast cross join"
-        val bound = maxScanWidth.getOrElse(name, DefaultWidth)
         val wide = plan.collectWithSubqueries {
-          case f: FileSourceScanExec if f.requiredSchema.size > bound =>
+          case f: FileSourceScanExec if f.requiredSchema.size > DefaultWidth =>
             s"${f.requiredSchema.size} cols (${f.requiredSchema.fieldNames.mkString(",")})"
         }
-        wide.foreach(w => violations += s"$name: unpruned scan reads $w > $bound")
+        wide.foreach(w => violations += s"$name: unpruned scan reads $w > $DefaultWidth")
+        val gwin = graft.tools.PlanAudit.globalWindows(df)
+        val sanctioned = graft.tools.PlanAudit.SanctionedGlobalWindows.getOrElse(name, 0)
+        if (gwin != sanctioned)
+          violations += s"$name: $gwin partition-less window(s), sanctioned $sanctioned"
       }
     }
     assert(violations.isEmpty,

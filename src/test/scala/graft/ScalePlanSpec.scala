@@ -353,7 +353,7 @@ class ScalePlanSpec extends SparkSpec {
     val g = graft.queries.TextPipeline.gopherRules(spark, "/root/testdata/sf0.001")
     val gp = g.queryExecution.executedPlan.toString
     // the rule battery itself must stay map-only: the ONLY admissible
-    // exchange is Tables.spreadTable's scan fan-out (REPARTITION_BY_NUM
+    // exchange is Sizing.spreadTable's scan fan-out (REPARTITION_BY_NUM
     // directly over the file scan — identity on any multi-split table,
     // present here only because the fixture is single-file parquet);
     // an aggregation/join/window exchange would still fail this pin

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   */
 class Scd2EnrichSpec extends SparkSpec {
 
-  private val dumpBase = "/root/repo/target/stream_inputs/current/stream_scd2_enrich"
+  private val dumpBase = s"${StreamingBench.InputDumpBase}/current/stream_scd2_enrich"
 
   test("SCD2 intervals tile [0, inf) per person; stream equals batch twin") {
     val out = StreamingBench.streamScd2Enrich(spark, "/root/testdata/sf0.001")

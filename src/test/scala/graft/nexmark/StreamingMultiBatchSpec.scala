@@ -97,7 +97,8 @@ class StreamingMultiBatchSpec extends SparkSpec {
       .load()
       .select(org.apache.spark.sql.functions.col("auctionId").as("corpus_id"))
       .distinct()
-    graft.queries.StreamingBench.nearDupGuard(bids.toDF, corpus)
+    // 2 subtasks × 1000 bids bound the corpus ids
+    graft.queries.StreamingBench.nearDupGuard(bids.toDF, corpus, 2 * 1000L)
   }
 
   pinInvariance("ingestion quality gate (static battery + windowed accounting)") { bids =>
