@@ -17,9 +17,6 @@ package graft
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    // the streaming entries' oracle input dumps are correctness-surface
-    // work, not pipeline work — skip them so bench numbers stay pure
-    System.setProperty("graft.stream.dumpInputs", "false")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val queries = SparkEntry.select(
       sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty))

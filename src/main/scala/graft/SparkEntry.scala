@@ -14,8 +14,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Contract: every name is registered once (a second registration fails
   * when this object initializes), and every entry carries its DuckDB
-  * oracle. [[queries]] and [[oracleSql]] are the views `Verify` and
-  * `Bench` read, keyed by the same names; [[select]] is the one
+  * oracle. [[queries]], [[oracleSql]] and [[oracleInputs]] are the views
+  * `Verify` and `Bench` read, keyed by the same names; [[select]] is the one
   * unknown-name guard and [[isStream]] the one stream-vs-batch test.
   */
 object SparkEntry {
@@ -38,6 +38,11 @@ object SparkEntry {
 
   /** name → ANSI SQL DuckDB runs over the same parquet tables, for every entry. */
   val oracleSql: Map[String, String] = entries.map(e => e.name -> e.oracleSql).toMap
+
+  /** name → the writer of the inputs its oracle reads besides the tables,
+    * for the entries that have one. */
+  val oracleInputs: Map[String, (SparkSession, String) => Unit] =
+    entries.flatMap(e => e.writeOracleInputs.map(e.name -> _)).toMap
 
   /** The named entries of [[queries]], or all of them when `names` is
     * empty. Throws on an unknown name: a typo'd filter that ran nothing

@@ -12,8 +12,10 @@ object Verify {
     val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try {
+        SparkEntry.oracleInputs.get(name).foreach(_(spark, sfDir))
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // a failed query must not leave a STALE previous dump behind —

@@ -75,9 +75,10 @@ object NexmarkSources {
     entityStreamDsv2(spark, "auctions", cfg, parallelism, rows, rowsPerBatch).as[Auction]
   }
   /** The `format("nexmark")` option set — ONE definition shared by the
-    * streaming reader and StreamingBench's batch-mode oracle input dump,
-    * so the dump can never silently drift from the streamed input (the
-    * dump-equals-stream invariant NexmarkDataSourceSpec pins).
+    * streaming and the batch reader, so a batch read (StreamingBench's
+    * static sides and oracle input dumps) can never silently drift from
+    * the streamed input (the dump-equals-stream invariant
+    * NexmarkDataSourceSpec pins).
     */
   def nexmarkOptions(entity: String, cfg: GenConfig, parallelism: Int,
                      rows: Long, rowsPerBatch: Long): Map[String, String] = Map(
@@ -90,9 +91,16 @@ object NexmarkSources {
     "eventsPerSecond" -> cfg.eventsPerSecond.toString,
     "sizedPayloads" -> cfg.sizedPayloads.toString)
 
-  private def entityStreamDsv2(spark: SparkSession, entity: String, cfg: GenConfig,
-                               parallelism: Int, rows: Long, rowsPerBatch: Long): DataFrame =
+  private[graft] def entityStreamDsv2(spark: SparkSession, entity: String, cfg: GenConfig,
+                                      parallelism: Int, rows: Long, rowsPerBatch: Long): DataFrame =
     spark.readStream.format("nexmark")
+      .options(nexmarkOptions(entity, cfg, parallelism, rows, rowsPerBatch))
+      .load()
+
+  /** The events [[entityStreamDsv2]] streams with the same arguments, read in batch mode. */
+  private[graft] def entityBatchDsv2(spark: SparkSession, entity: String, cfg: GenConfig,
+                                     parallelism: Int, rows: Long, rowsPerBatch: Long): DataFrame =
+    spark.read.format("nexmark")
       .options(nexmarkOptions(entity, cfg, parallelism, rows, rowsPerBatch))
       .load()
 

@@ -6,11 +6,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the query, and the DuckDB oracle.
   *   - `run(spark, sfDir)` returns the result DataFrame;
   *   - `oracleSql` is ANSI SQL DuckDB runs over the same parquet tables;
+  *   - `writeOracleInputs(spark, sfDir)` writes any input the oracle reads
+  *     besides those tables (the stream entries' generated events); None
+  *     for every batch entry. `Verify` calls it, timed runs never do;
   *   - column NAMES and VALUES must match exactly (the correctness gate
   *     sorts columns by name and hashes values), so every computed column
   *     is aliased identically on both sides.
   */
-final case class Entry(name: String, run: (SparkSession, String) => DataFrame, oracleSql: String)
+final case class Entry(name: String, run: (SparkSession, String) => DataFrame, oracleSql: String,
+                       writeOracleInputs: Option[(SparkSession, String) => Unit] = None)
 
 /** A family of entries. Each module lists each of its entries once in
   * [[entries]]; [[graft.SparkEntry]] concatenates the families and is the

@@ -302,7 +302,7 @@ object Similarity extends QueryModule {
   def rangeLsh(spark: SparkSession, dir: String): DataFrame = {
     val e = vecs(spark, dir)
     val bands = e.select(col("vec_id"),
-      posexplode(array(bandKeyCols(rangeLshPairs): _*)).as(Seq("band", "bkey")))
+      posexplode(bandKeys(rangeLshPairs)).as(Seq("band", "bkey")))
     val qbands = bands.filter(col("vec_id") % QueryMod === 0)
       .select(col("vec_id").as("query_id"), col("band"), col("bkey"))
     val cands = bands.join(broadcast(qbands),
@@ -434,18 +434,13 @@ object Similarity extends QueryModule {
     val e = vecs(spark, dir)
     val pairs = rangeLshPairs.take(RangeMpBands)
     val bands = e.select(col("vec_id"),
-      posexplode(array(bandKeyCols(pairs): _*)).as(Seq("band", "bkey")))
-    // query side: the per-band comparator coordinates as ONE folded
-    // literal (bands × bits × (weight, 1-based i1, 1-based i2)) consumed
-    // by HOFs — NOT one unrolled struct expression per band, whose generated
-    // code blows Janino's 64 KB method limit and drops the whole stage to
-    // interpreted fallback. The HOFs run on Q × bands rows only.
-    val coords = typedlit(pairs.map(_._2.map { case (w, i1, i2) => (w, i1 + 1, i2 + 1) }))
+      posexplode(bandKeys(pairs)).as(Seq("band", "bkey")))
+    // query side: one row per (query, band) carrying the band's
+    // comparators ([[coordsLit]]), for the margins as well as the key
     val qprobes = e.filter(col("vec_id") % QueryMod === 0)
       .select(col("vec_id").as("query_id"), col("emb"),
-        posexplode(coords).as(Seq("band", "pairs")))
-      .withColumn("bkey", expr(
-        "aggregate(pairs, 0, (a, p) -> a + CASE WHEN element_at(emb, p._2) > element_at(emb, p._3) THEN p._1 ELSE 0 END)"))
+        posexplode(coordsLit(pairs)).as(Seq("band", "pairs")))
+      .withColumn("bkey", bandKey(col("pairs")))
       .withColumn("m", expr(
         "transform(pairs, p -> abs(element_at(emb, p._2) - element_at(emb, p._3)))"))
       // weakest-margin bit selection: argmin by (margin, bit index) —
@@ -712,13 +707,22 @@ object Similarity extends QueryModule {
       }
     }
 
-  /** One sign-comparison band key Column per band. */
-  private def bandKeyCols(pairs: Seq[(Int, Seq[(Int, Int, Int)])]): Seq[Column] =
-    pairs.map { case (_, bits) =>
-      bits.map { case (w, i1, i2) =>
-        expr(s"CASE WHEN element_at(emb, ${i1 + 1}) > element_at(emb, ${i2 + 1}) THEN $w ELSE 0 END")
-      }.reduce(_ + _)
-    }
+  /** The per-band comparator coordinates as ONE literal: bands × bits ×
+    * (weight, 1-based i1, 1-based i2). */
+  private def coordsLit(pairs: Seq[(Int, Seq[(Int, Int, Int)])]): Column =
+    typedlit(pairs.map(_._2.map { case (w, i1, i2) => (w, i1 + 1, i2 + 1) }))
+
+  /** The sign-comparison key of one band of `emb`: each of its `bits`
+    * (w, i1, i2) adds w iff emb[i1] > emb[i2]. A HOF fold, so the generated
+    * code does not grow with bands × bits (an unrolled CASE WHEN per bit
+    * overflows Janino's 64 KB method limit). */
+  private def bandKey(bits: Column): Column =
+    aggregate(bits, lit(0), (a, p) =>
+      a + when(element_at(col("emb"), p("_2")) > element_at(col("emb"), p("_3")), p("_1")).otherwise(0))
+
+  /** [[bandKey]] of every band, in band order. */
+  private def bandKeys(pairs: Seq[(Int, Seq[(Int, Int, Int)])]): Column =
+    transform(coordsLit(pairs), bandKey(_))
 
   /** DuckDB UNION ALL band-select block over CTE `e(vec_id, emb)`. */
   private def bandSelectsSql(pairs: Seq[(Int, Seq[(Int, Int, Int)])]): String =
@@ -802,7 +806,7 @@ object Similarity extends QueryModule {
     * `Tables.embeddings(spark, dir).count()`). */
   private[graft] def dupLshBands(e: DataFrame, n: Long): DataFrame =
     e.select(col("vec_id"),
-      posexplode(array(bandKeyCols(dupCoordPairs(dupLshBits(n))): _*))
+      posexplode(bandKeys(dupCoordPairs(dupLshBits(n))))
         .as(Seq("band", "bkey")))
 
   /** A candidate (query_id, vec_id) pair row: two longs. */
@@ -976,7 +980,7 @@ object Similarity extends QueryModule {
     val pairs = coordPairs(KnnLshBands, KnnLshBits)
     val e = vecs(spark, dir)
     val bands = e.select(col("vec_id"),
-      posexplode(array(bandKeyCols(pairs): _*)).as(Seq("band", "bkey")))
+      posexplode(bandKeys(pairs)).as(Seq("band", "bkey")))
     val qbands = bands.filter(col("vec_id") % QueryMod === 0)
       .select(col("vec_id").as("query_id"), col("band"), col("bkey"))
     val cands = broadcast(qbands).join(bands, Seq("band", "bkey"))
@@ -2661,9 +2665,13 @@ object Similarity extends QueryModule {
                  1, NProbe).as("top"))
       .select(col("vec_id").as("query_id"), explode(col("top.cid")).as("cid"))
     val nFetch = Tables.tableRows(spark, dir, "embeddings")
-    // candidate volume ≈ N·NProbe·√N (the build rule this entry encodes)
+    // candidate volume ≈ N·NProbe·√N (the build rule this entry encodes).
+    // Both sides grow with N, so the join is pinned to a shuffled hash
+    // join built on `assign`: left to size, AQE broadcast whichever side's
+    // shuffle finished first, and the final plan (and its exchange and
+    // job counts) differed run to run.
     val pairs = Sizing.spreadShuffled(
-        probes.join(assign, "cid")
+        probes.join(assign.hint("shuffle_hash"), "cid")
           .filter(col("vec_id") =!= col("query_id"))
           .select(col("query_id"), col("vec_id")),
         nFetch * NProbe * math.max(1L, math.sqrt(nFetch.toDouble).toLong),

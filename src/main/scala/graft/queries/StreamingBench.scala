@@ -1,10 +1,11 @@
 package graft.queries
 
 import graft.{GraftSession, Sizing}
-import graft.nexmark.{GenConfig, NexmarkSources}
+import graft.nexmark.{Auction, Bid, GenConfig, NexmarkSources, Person}
 import graft.nexmark.queries.{NexmarkQueries, NexmarkStateful}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
+import scala.reflect.runtime.universe.TypeTag
 
 /** End-to-end streaming THROUGHPUT surface: bounded generator volumes
   * through the real Structured Streaming topologies, measured by the same
@@ -14,7 +15,7 @@ import org.apache.spark.sql.streaming.Trigger
   * query function, so the bench's wall-second number IS events ÷ seconds.
   *
   * Design choices, all scale-first:
-  *   - the source is the DSv2 `format("nexmark")` generator — one input
+  *   - the source is the DSv2 nexmark generator ([[NexmarkSources]]) — one input
   *     partition per reference subtask, admission-controlled batches
   *     (deterministic batch boundaries → deterministic watermark sequence
   *     → deterministic append-mode output, which the driver's rows-only
@@ -27,12 +28,22 @@ import org.apache.spark.sql.streaming.Trigger
   *     fired windows). Volumes are sized so multiple windows finalize at
   *     every tested sf ≥ 0.01.
   *
+  * Declare once: each entry declares its generated inputs ONCE, as
+  * [[Input]]s `(label, entity, GenConfig, rows)`, and [[Inputs]] is the one
+  * place a declaration becomes a read — the streaming read the pipeline
+  * runs, the batch read of the same generator options (a static side), and
+  * the oracle dump at `InputDumpBase/current/<entry>/<label>`. The
+  * committed-batch floor of [[runToParquet]] comes from the inputs the
+  * entry actually streamed. The dump is not part of the pipeline: it is
+  * the entry's oracle-inputs writer, which `Verify` calls and no timed run
+  * does.
+  *
   * Oracle gate: DuckDB cannot RUN a watermark/trigger pipeline, but it can
   * verify one. Every event the DSv2 generator emits is a pure function of
-  * (seed, subtask, eventId) — so each entry also persists its EXACT input
-  * event set to parquet (batch-mode read of the same source options), and
-  * the oracle SQL recomputes the streaming result over that parquet:
-  * batch semantics + an explicit watermark cutoff. For the window-shaped
+  * (seed, subtask, eventId) — so the dump (a batch-mode read of the same
+  * source options) IS the entry's input event set, and the oracle SQL
+  * recomputes the streaming result over that parquet: batch semantics + an
+  * explicit watermark cutoff. For the window-shaped
   * entries the cutoff is the FINAL watermark — "all windows finalized
   * under max event time − delay" — which IS expressible in SQL:
   *   - tumbling windows:  emitted iff window_end ≤ max(ts) − 2000;
@@ -90,13 +101,14 @@ object StreamingBench extends QueryModule {
     */
   private def rowsPerBatchFor(rows: Long): Long = math.max(1L, (rows + 2) / 3)
 
-  /** Data micro-batches the admission plan yields: ceil(rows / rpb). */
-  private def expectedBatches(rows: Long): Int =
-    math.ceil(rows.toDouble / rowsPerBatchFor(rows)).toInt
-
   /** Scale factor encoded in the test-data dir name ("…/sf0.1"). */
   private def sfOf(dir: String): Double =
     "sf([0-9.]+)".r.findFirstMatchIn(dir).map(_.group(1).toDouble).getOrElse(0.01)
+
+  /** Events per subtask at scale factor `sf`: `eventsAtSf1` events at sf1
+    * spread over the [[Parallelism]] subtasks, at least one. */
+  private def subtaskRows(sf: Double, eventsAtSf1: Long = 10000000L): Long =
+    math.max(1L, (eventsAtSf1 * sf / Parallelism).toLong)
 
   private val runSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
@@ -118,51 +130,85 @@ object StreamingBench extends QueryModule {
     }
   }
 
-  /** Where each entry dumps its deterministic input events for the DuckDB
-    * oracle. A single `current` dir (not per-sf): the oracle must read the
-    * inputs of the SAME run that produced the outputs being compared, and
-    * every consumer (the driver, tools/selfcheck.py) runs the DuckDB
-    * compare immediately after the Verify run that wrote both — so
-    * last-write-wins is exactly right at any scale factor. The one writer
-    * that is NOT followed by a compare, the bench, skips the dump entirely
-    * (see [[dumpInput]]). Defaults to `target/stream_inputs` under the
-    * working directory, made absolute because the path is baked into the
-    * oracle SQL at dump time; -Dgraft.stream.dumpBase overrides it (set
-    * it for BOTH the Verify run and any process reading the emitted
-    * oracle SQL).
+  /** Where `Verify` dumps each entry's input events for the DuckDB oracle.
+    * A single `current` dir (not per-sf): the oracle must read the inputs
+    * of the SAME run that produced the outputs being compared, and every
+    * DuckDB compare (tools/selfcheck.py is the local one) runs
+    * immediately after the Verify run that wrote both — so last-write-wins
+    * is exactly right at any scale factor. Only Verify writes here (see
+    * [[Inputs.writeOracleInputs]]). Defaults to `target/stream_inputs`
+    * under the working directory, made absolute because the path is baked
+    * into the oracle SQL; -Dgraft.stream.dumpBase overrides it (set it for
+    * BOTH the Verify run and any process reading the emitted oracle SQL).
     */
   private[graft] val InputDumpBase: String = sys.props.getOrElse(
     "graft.stream.dumpBase", java.nio.file.Paths.get("target", "stream_inputs").toAbsolutePath.toString)
 
-  /** Persist the EXACT event set the DSv2 streaming source will emit: the
-    * same `format("nexmark")` table read in BATCH mode with identical
-    * options plans the identical per-subtask [0, rows) id ranges, and every
-    * field is a pure function of (seed, subtask, eventId) — so this parquet
-    * is the streaming input, byte for byte, not a re-simulation of it.
-    *
-    * Benchmarks skip the dump (graft.stream.dumpInputs=false, set by
-    * [[graft.Bench]]): it is part of the correctness surface, not of the
-    * measured pipeline.
+  private def dumpDir(name: String, label: String): String = s"$InputDumpBase/current/$name/$label"
+
+  /** DuckDB-side reference to the dumped input `label` of entry `name`
+    * (see [[InputDumpBase]] for why `current`). The oracles model the
+    * multi-batch run (three data micro-batches per source, see
+    * [[rowsPerBatchFor]]) and are exact at every scale (class doc).
     */
-  private def dumpInput(spark: SparkSession, dir: String, name: String,
-                        entity: String, cfg: GenConfig, rows: Long,
-                        label: String = null): Unit =
-    if (sys.props.getOrElse("graft.stream.dumpInputs", "true").toBoolean) {
-      spark.read.format("nexmark")
-        .options(NexmarkSources.nexmarkOptions(entity, cfg, Parallelism, rows,
-          rowsPerBatchFor(rows)))
-        .load()
-        .write.mode("overwrite")
-        .parquet(s"$InputDumpBase/current/$name/${Option(label).getOrElse(entity)}")
+  private def inPath(name: String, label: String): String =
+    s"read_parquet('${dumpDir(name, label)}/*.parquet')"
+
+  /** One generated input a stream entry declares: `rows` events per
+    * subtask of the generator's `entity` under `cfg`. `label` names it in
+    * [[Inputs]] and in the oracle dump path.
+    */
+  private[graft] final case class Input(label: String, entity: String, cfg: GenConfig, rows: Long)
+
+  /** The declared inputs of one entry at one scale factor, and the one
+    * place a declaration becomes a read: [[stream]] is the streaming read
+    * the pipeline runs, [[batch]] the batch read of the same generator
+    * options (a static side), [[writeOracleInputs]] the oracle dump. Every
+    * read goes through [[NexmarkSources]] with one option set, and every
+    * event is a pure function of (seed, subtask, eventId), so the batch
+    * read and the dump ARE the streamed events, not a re-simulation.
+    */
+  private[graft] final class Inputs(val spark: SparkSession, val dir: String,
+                                    val name: String, val declared: Seq[Input]) {
+    private val streamed = scala.collection.mutable.LinkedHashSet.empty[Input]
+
+    private def input(label: String): Input =
+      declared.find(_.label == label).getOrElse(throw new IllegalArgumentException(
+        s"$name declares no input '$label' (declared: ${declared.map(_.label).mkString(",")})"))
+
+    /** The streaming read of `label`, counted in [[minBatches]]. */
+    def stream[T <: Product : TypeTag](label: String): Dataset[T] = {
+      import spark.implicits._
+      val in = input(label)
+      streamed += in
+      NexmarkSources.entityStreamDsv2(spark, in.entity, in.cfg, Parallelism, in.rows,
+        rowsPerBatchFor(in.rows)).as[T]
     }
 
-  /** DuckDB-side reference to a dumped input (see [[InputDumpBase]] for
-    * why `current`). The single-micro-batch watermark model in the oracles
-    * is exact at every driver-verified scale: the gate runs at sf0.01
-    * (≤ 50k rows per subtask = one batch) and the local probe at sf0.001.
-    */
-  private def inPath(name: String, entity: String): String =
-    s"read_parquet('$InputDumpBase/current/$name/$entity/*.parquet')"
+    /** The batch read of `label`: the events its stream emits. */
+    def batch(label: String): DataFrame = {
+      val in = input(label)
+      NexmarkSources.entityBatchDsv2(spark, in.entity, in.cfg, Parallelism, in.rows,
+        rowsPerBatchFor(in.rows))
+    }
+
+    /** Events of `label` across all subtasks. */
+    def events(label: String): Long = input(label).rows * Parallelism
+
+    /** The committed-batch floor: the most data micro-batches,
+      * ceil(rows / rpb), the admission plan of any streamed input yields. */
+    def minBatches: Int = {
+      require(streamed.nonEmpty, s"$name streamed none of its declared inputs")
+      streamed.iterator.map(in => math.ceil(in.rows.toDouble / rowsPerBatchFor(in.rows)).toInt).max
+    }
+
+    /** Dump every declared input for the oracle, at
+      * `InputDumpBase/current/<entry>/<label>`. Correctness-surface work:
+      * `Verify` calls it, no timed run does. */
+    def writeOracleInputs(): Unit = declared.foreach { in =>
+      batch(in.label).write.mode("overwrite").parquet(dumpDir(name, in.label))
+    }
+  }
 
   /** Run a bounded streaming DataFrame to a parquet file sink with
     * Trigger.AvailableNow, return the sink contents (empty-but-typed if no
@@ -180,9 +226,9 @@ object StreamingBench extends QueryModule {
     * default-200). Restored after the run so batch queries in the same
     * session keep their own setting.
     */
-  private def runToParquet(spark: SparkSession, df: DataFrame, name: String,
-                           minBatches: Int): DataFrame = {
-    val id = s"${name}_${runSeq.incrementAndGet()}"
+  private def runToParquet(in: Inputs, df: DataFrame): DataFrame = {
+    val spark = in.spark
+    val id = s"${in.name}_${runSeq.incrementAndGet()}"
     val base = java.nio.file.Files.createTempDirectory(s"graftstream_$id")
     tmpDirs.add(base)
     val out = s"$base/out"; val ckpt = s"$base/ckpt"
@@ -202,8 +248,8 @@ object StreamingBench extends QueryModule {
     val committed = Option(new java.io.File(s"$ckpt/commits").listFiles())
       .map(_.flatMap(f => f.getName.toLongOption).foldLeft(-1L)(math.max) + 1)
       .getOrElse(0L)
-    if (committed < minBatches) throw new IllegalStateException(
-      s"$name: $committed committed micro-batches < expected $minBatches — " +
+    if (committed < in.minBatches) throw new IllegalStateException(
+      s"${in.name}: $committed committed micro-batches < expected ${in.minBatches} — " +
         "multi-batch watermark interleaving was not exercised")
     val wrote = new java.io.File(out).listFiles() != null &&
       new java.io.File(out).listFiles().exists(f => f.getName.endsWith(".parquet"))
@@ -212,17 +258,16 @@ object StreamingBench extends QueryModule {
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
   }
 
+  /** The generated bid stream most entries run over: `eps` events/s of
+    * generator clock, [[subtaskRows]] bids per subtask. */
+  private def bidsAt(eps: Long)(dir: String): Seq[Input] =
+    Seq(Input("bids", "bids", GenConfig(eventsPerSecond = eps), subtaskRows(sfOf(dir))))
+
   /** Q5 hot-auctions windowed agg over a generated bid stream.
     * sf0.1 → 1,000,000 bids (125k per subtask × 8).
     */
-  def streamQ5Hot(spark: SparkSession, dir: String): DataFrame = {
-    val rows = math.max(1L, (10000000L * sfOf(dir) / Parallelism).toLong)
-    val cfg = GenConfig(eventsPerSecond = 1000L)
-    dumpInput(spark, dir, "stream_q5_hot", "bids", cfg, rows)
-    val bids = NexmarkSources.bidStreamDsv2(spark, cfg, Parallelism, rows, rowsPerBatchFor(rows))
-    runToParquet(spark, NexmarkQueries.q5HotAuctions(bids, "5 seconds"), "q5hot",
-      expectedBatches(rows))
-  }
+  private def streamQ5Hot(in: Inputs): DataFrame =
+    runToParquet(in, NexmarkQueries.q5HotAuctions(in.stream[Bid]("bids"), "5 seconds"))
 
   /** q5HotAuctions over the dumped bids: 5 s tumbling windows, emitted iff
     * window_end ≤ final watermark = max(ts) − 2000 (the 2 s delay).
@@ -247,19 +292,14 @@ object StreamingBench extends QueryModule {
     * two sources advances steadily instead of stalling on the smaller
     * stream.  sf0.1 → 250k persons + 1M auctions.
     */
-  def streamQ8Join(spark: SparkSession, dir: String): DataFrame = {
-    val sf = sfOf(dir)
-    val aRows = math.max(1L, (10000000L * sf / Parallelism).toLong)
-    val pRows = math.max(1L, aRows / 4)
-    val pCfg = GenConfig(eventsPerSecond = 250L)
-    val aCfg = GenConfig(eventsPerSecond = 1000L)
-    dumpInput(spark, dir, "stream_q8_join", "persons", pCfg, pRows)
-    dumpInput(spark, dir, "stream_q8_join", "auctions", aCfg, aRows)
-    val persons = NexmarkSources.personStreamDsv2(spark, pCfg, Parallelism, pRows, rowsPerBatchFor(pRows))
-    val auctions = NexmarkSources.auctionStreamDsv2(spark, aCfg, Parallelism, aRows, rowsPerBatchFor(aRows))
-    runToParquet(spark, NexmarkQueries.q8NewUsers(persons, auctions, "5 seconds"), "q8join",
-      math.max(expectedBatches(pRows), expectedBatches(aRows)))
+  private def q8Inputs(dir: String): Seq[Input] = {
+    val aRows = subtaskRows(sfOf(dir))
+    Seq(Input("persons", "persons", GenConfig(eventsPerSecond = 250L), math.max(1L, aRows / 4)),
+      Input("auctions", "auctions", GenConfig(eventsPerSecond = 1000L), aRows))
   }
+  private def streamQ8Join(in: Inputs): DataFrame =
+    runToParquet(in, NexmarkQueries.q8NewUsers(in.stream[Person]("persons"),
+      in.stream[Auction]("auctions"), "5 seconds"))
 
   /** q8NewUsers over the dumped persons/auctions: per (5 s window, person)
     * the latest person stamps joined to the latest-ingested auction. Two
@@ -300,10 +340,8 @@ object StreamingBench extends QueryModule {
     * 10-second auctions END inside the stream and resolve via their timer.
     * sf0.1 → 100k auctions + 400k bids.
     */
-  def streamQxWinning(spark: SparkSession, dir: String): DataFrame = {
-    val (bids, auctions, batches) = qxSources(spark, dir, "stream_qx_winning")
-    runToParquet(spark, NexmarkStateful.qxStateful(bids, auctions).toDF, "qxwin", batches)
-  }
+  private def streamQxWinning(in: Inputs): DataFrame =
+    runToParquet(in, NexmarkStateful.qxStateful(in.stream[Bid]("bids"), in.stream[Auction]("auctions")).toDF)
 
   /** QX winner over the dumped bids/auctions — the MULTI-BATCH-EXACT
     * model (round 7): instead of the final watermark only, the oracle
@@ -424,21 +462,14 @@ object StreamingBench extends QueryModule {
       |""".stripMargin
   }
 
-  /** Shared QX source volumes: stream_qx_winning and stream_qx_tws are a
-    * state-backend HEAD-TO-HEAD, so their inputs must stay identical —
-    * one definition, no drift.
+  /** Shared QX inputs: stream_qx_winning and stream_qx_tws are a
+    * state-backend HEAD-TO-HEAD (and the interval joins their built-in
+    * control), so their inputs must stay identical — one declaration.
     */
-  private def qxSources(spark: SparkSession, dir: String, name: String) = {
-    val sf = sfOf(dir)
-    val aRows = math.max(1L, (1000000L * sf / Parallelism).toLong)
-    val bRows = aRows * 4
-    val aCfg = GenConfig(eventsPerSecond = 100L)
-    val bCfg = GenConfig(eventsPerSecond = 400L)
-    dumpInput(spark, dir, name, "auctions", aCfg, aRows)
-    dumpInput(spark, dir, name, "bids", bCfg, bRows)
-    val auctions = NexmarkSources.auctionStreamDsv2(spark, aCfg, Parallelism, aRows, rowsPerBatchFor(aRows))
-    val bids = NexmarkSources.bidStreamDsv2(spark, bCfg, Parallelism, bRows, rowsPerBatchFor(bRows))
-    (bids, auctions, math.max(expectedBatches(aRows), expectedBatches(bRows)))
+  private def qxInputs(dir: String): Seq[Input] = {
+    val aRows = subtaskRows(sfOf(dir), eventsAtSf1 = 1000000L)
+    Seq(Input("auctions", "auctions", GenConfig(eventsPerSecond = 100L), aRows),
+      Input("bids", "bids", GenConfig(eventsPerSecond = 400L), aRows * 4))
   }
 
   /** Q11 session windows over a generated bid stream — the heaviest
@@ -447,14 +478,8 @@ object StreamingBench extends QueryModule {
     * the two-stream windowed union aggregate (Q8) and arbitrary state (QX).
     * sf0.1 → 1,000,000 bids, 5 s gap.
     */
-  def streamQ11Sessions(spark: SparkSession, dir: String): DataFrame = {
-    val rows = math.max(1L, (10000000L * sfOf(dir) / Parallelism).toLong)
-    val cfg = GenConfig(eventsPerSecond = 1000L)
-    dumpInput(spark, dir, "stream_q11_sessions", "bids", cfg, rows)
-    val bids = NexmarkSources.bidStreamDsv2(spark, cfg, Parallelism, rows, rowsPerBatchFor(rows))
-    runToParquet(spark, NexmarkQueries.sessions(bids, "5 seconds"), "q11sess",
-      expectedBatches(rows))
-  }
+  private def streamQ11Sessions(in: Inputs): DataFrame =
+    runToParquet(in, NexmarkQueries.sessions(in.stream[Bid]("bids"), "5 seconds"))
 
   /** Per-bidder 5 s-gap session windows over the dumped bids:
     * gaps-and-islands with a STRICT break — a session breaks only when the
@@ -495,14 +520,8 @@ object StreamingBench extends QueryModule {
     * aggregation shape (a two-level agg under the hood: partial argmax per
     * partition, final merge). sf0.1 → 1,000,000 bids.
     */
-  def streamQ7Highest(spark: SparkSession, dir: String): DataFrame = {
-    val rows = math.max(1L, (10000000L * sfOf(dir) / Parallelism).toLong)
-    val cfg = GenConfig(eventsPerSecond = 1000L)
-    dumpInput(spark, dir, "stream_q7_highest", "bids", cfg, rows)
-    val bids = NexmarkSources.bidStreamDsv2(spark, cfg, Parallelism, rows, rowsPerBatchFor(rows))
-    runToParquet(spark, NexmarkQueries.q7HighestBid(bids, "5 seconds"), "q7high",
-      expectedBatches(rows))
-  }
+  private def streamQ7Highest(in: Inputs): DataFrame =
+    runToParquet(in, NexmarkQueries.q7HighestBid(in.stream[Bid]("bids"), "5 seconds"))
 
   /** q7HighestBid over the dumped bids: per-window argmax under the
     * deterministic (bid DESC, ts DESC, bidder ASC) order, windows emitted
@@ -532,14 +551,8 @@ object StreamingBench extends QueryModule {
     * output cardinality = input cardinality — verified exactly by the
     * oracle's DISTINCT).
     */
-  def streamDedup(spark: SparkSession, dir: String): DataFrame = {
-    val rows = math.max(1L, (10000000L * sfOf(dir) / Parallelism).toLong)
-    val cfg = GenConfig(eventsPerSecond = 1000L)
-    dumpInput(spark, dir, "stream_dedup", "bids", cfg, rows)
-    val bids = NexmarkSources.bidStreamDsv2(spark, cfg, Parallelism, rows, rowsPerBatchFor(rows))
-    runToParquet(spark, NexmarkQueries.dedupBids(bids).toDF, "dedup",
-      expectedBatches(rows))
-  }
+  private def streamDedup(in: Inputs): DataFrame =
+    runToParquet(in, NexmarkQueries.dedupBids(in.stream[Bid]("bids")).toDF)
 
   private val streamDedupSql: String =
     s"""SELECT DISTINCT ingestionTimestamp, timestamp, auctionId, personId, bidId, bid
@@ -570,23 +583,21 @@ object StreamingBench extends QueryModule {
     * surviving row's payload is deterministic under arrival races).
     * sf0.1 → 1,000,000 streamed bids vs a 500,000-bid corpus index.
     */
-  def streamIncrementalDedup(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val rows = math.max(1L, (10000000L * sfOf(dir) / Parallelism).toLong)
-    val cRows = math.max(1L, rows / 2)
+  /** The streamed delta `bids` and the static `corpus`: a batch read of
+    * the SAME generator's first-half prefix (yesterday's ingest). */
+  private def deltaAndCorpus(dir: String): Seq[Input] = {
+    val rows = subtaskRows(sfOf(dir))
     val cfg = GenConfig(eventsPerSecond = 1000L)
-    dumpInput(spark, dir, "stream_incremental_dedup", "bids", cfg, rows)
-    dumpInput(spark, dir, "stream_incremental_dedup", "bids", cfg, cRows, label = "corpus")
-    // static corpus fingerprint index: the stream's first-half prefix read
-    // in batch mode (same (seed, subtask, eventId) purity as dumpInput)
-    val corpusFp = spark.read.format("nexmark")
-      .options(NexmarkSources.nexmarkOptions("bids", cfg, Parallelism, cRows,
-        rowsPerBatchFor(cRows)))
-      .load()
+    Seq(Input("bids", "bids", cfg, rows), Input("corpus", "bids", cfg, math.max(1L, rows / 2)))
+  }
+
+  private def streamIncrementalDedup(in: Inputs): DataFrame = {
+    import org.apache.spark.sql.functions._
+    // static corpus fingerprint index
+    val corpusFp = in.batch("corpus")
       .select(md5(col("auctionId").cast("string")).as("fp"))
       .distinct()
-    val bids = NexmarkSources.bidStreamDsv2(spark, cfg, Parallelism, rows, rowsPerBatchFor(rows))
-    val guarded = bids.toDF
+    val guarded = in.stream[Bid]("bids").toDF
       .withColumn("eventTime", timestamp_millis(col("timestamp")))
       .withWatermark("eventTime", "2 seconds")
       .withColumn("fp", md5(col("auctionId").cast("string")))
@@ -595,7 +606,7 @@ object StreamingBench extends QueryModule {
       .select(col("auctionId"), col("fp"),
         coalesce(col("in_corpus"), lit(0)).as("dup_of_corpus"),
         (coalesce(col("in_corpus"), lit(0)) === 0).cast("int").as("keep"))
-    runToParquet(spark, guarded, "incdedup", expectedBatches(rows))
+    runToParquet(in, guarded)
   }
 
   /** One row per distinct delta fingerprint with its corpus verdict: dedup
@@ -674,21 +685,10 @@ object StreamingBench extends QueryModule {
     * (`t_minhash_pairs`), and the within-delta EXACT guard is stage (1).
     * sf0.1 → 1,000,000 streamed bids vs a 500,000-bid corpus index.
     */
-  def streamIncrementalNearDup(spark: SparkSession, dir: String): DataFrame = {
+  private def streamIncrementalNearDup(in: Inputs): DataFrame = {
     import org.apache.spark.sql.functions._
-    val rows = math.max(1L, (10000000L * sfOf(dir) / Parallelism).toLong)
-    val cRows = math.max(1L, rows / 2)
-    val cfg = GenConfig(eventsPerSecond = 1000L)
-    dumpInput(spark, dir, "stream_incremental_neardup", "bids", cfg, rows)
-    dumpInput(spark, dir, "stream_incremental_neardup", "bids", cfg, cRows, label = "corpus")
-    val corpusIds = spark.read.format("nexmark")
-      .options(NexmarkSources.nexmarkOptions("bids", cfg, Parallelism, cRows,
-        rowsPerBatchFor(cRows)))
-      .load()
-      .select(col("auctionId").as("corpus_id")).distinct()
-    val bids = NexmarkSources.bidStreamDsv2(spark, cfg, Parallelism, rows, rowsPerBatchFor(rows))
-    runToParquet(spark, nearDupGuard(bids.toDF, corpusIds, cRows * Parallelism), "incneardup",
-      expectedBatches(rows))
+    val corpusIds = in.batch("corpus").select(col("auctionId").as("corpus_id")).distinct()
+    runToParquet(in, nearDupGuard(in.stream[Bid]("bids").toDF, corpusIds, in.events("corpus")))
   }
 
   /** The guard dataflow itself, over any bid stream and corpus-id set
@@ -717,13 +717,10 @@ object StreamingBench extends QueryModule {
       .withColumn("toks", expr(nearToksExpr("corpus_id")))
       .withColumn("bks", expr("minhash_bands(toks)"))
       .select(col("corpus_id"), posexplode(col("bks")).as(Seq("band", "bkey")))
-    // ONE aggregation over all bands, checkpointed once (r16: the
-    // previous per-band slice materialization paid nb=12 separate
-    // shuffle+checkpoint jobs ≈ 5 s at sf0.1; this is the identical
-    // posting content in a single (band, bkey) hash-agg). Materialized
-    // because a stream-static join re-evaluates its static side EVERY
-    // micro-batch — an uncheckpointed posting table would re-run the
-    // banding aggregation nb × batches times.
+    // ONE (band, bkey) aggregation over all bands, checkpointed once: a
+    // stream-static join re-evaluates its static side EVERY micro-batch,
+    // so an uncheckpointed posting table would re-run the banding
+    // aggregation nb × batches times.
     val posted = corpusBands
       .groupBy(col("band"), col("bkey"))
       .agg(sort_array(collect_set(col("corpus_id"))).as("cands"))
@@ -744,11 +741,8 @@ object StreamingBench extends QueryModule {
       .map(b => s"coalesce(cands_$b, cast(array() as array<bigint>))")
       .mkString("array_distinct(sort_array(concat(", ", ", ")))")
     s.withColumn("cands", expr(candsExpr))
-      // build each candidate's token set ONCE (r16): the filter lambda
-      // previously interpolated nearToksExpr(c) twice — the intersect arm
-      // and the size arm — doubling the dominant per-candidate cost (24
-      // string concats per build); same predicate via a (cand, ctoks)
-      // struct pass
+      // build each candidate's token set ONCE (the dominant per-candidate
+      // cost) and carry it in a (cand, ctoks) struct to both arms
       .withColumn("verified", expr(
         s"transform(filter(transform(cands, c -> struct(c AS c, ${nearToksExpr("c")} AS ct)), " +
           "p -> size(array_intersect(toks, p.ct)) * 3 >= size(toks) + size(p.ct)), p -> p.c)"))
@@ -809,11 +803,9 @@ object StreamingBench extends QueryModule {
     * Provider conf is set/restored around the run (transformWithState
     * requires multi-column-family state, i.e. RocksDB).
     */
-  def streamQxTws(spark: SparkSession, dir: String): DataFrame = {
-    val (bids, auctions, batches) = qxSources(spark, dir, "stream_qx_tws")
-    withRocksDB(spark)(runToParquet(spark,
-      graft.nexmark.queries.NexmarkTws.qxWinningBidsTws(bids, auctions).toDF, "qxtws", batches))
-  }
+  private def streamQxTws(in: Inputs): DataFrame =
+    withRocksDB(in.spark)(runToParquet(in, graft.nexmark.queries.NexmarkTws
+      .qxWinningBidsTws(in.stream[Bid]("bids"), in.stream[Auction]("auctions")).toDF))
 
   /** transformWithState requires multi-column-family state, i.e. RocksDB;
     * provider conf is set/restored around the run. Changelog
@@ -839,15 +831,9 @@ object StreamingBench extends QueryModule {
     * the two APIs for the timer shape. Identical input volumes and
     * identical output columns → one oracle model, two dump names.
     */
-  def streamQ11Tws(spark: SparkSession, dir: String): DataFrame = {
-    val rows = math.max(1L, (10000000L * sfOf(dir) / Parallelism).toLong)
-    val cfg = GenConfig(eventsPerSecond = 1000L)
-    dumpInput(spark, dir, "stream_q11_tws", "bids", cfg, rows)
-    val bids = NexmarkSources.bidStreamDsv2(spark, cfg, Parallelism, rows, rowsPerBatchFor(rows))
-    withRocksDB(spark)(runToParquet(spark,
-      graft.nexmark.queries.NexmarkTws.sessionsTws(bids).toDF, "q11tws",
-      expectedBatches(rows)))
-  }
+  private def streamQ11Tws(in: Inputs): DataFrame =
+    withRocksDB(in.spark)(runToParquet(in,
+      graft.nexmark.queries.NexmarkTws.sessionsTws(in.stream[Bid]("bids")).toDF))
 
   /** Conversion funnel as keyed CEP state (signup → first listing →
     * first sale-bid within a 5 s conversion window of signup,
@@ -862,22 +848,15 @@ object StreamingBench extends QueryModule {
     * orders them deterministically — the one interleaving the
     * monotone-time argument alone does not fix.
     */
-  def streamFunnel(spark: SparkSession, dir: String): DataFrame = {
-    val raw = (10000000L * sfOf(dir) / Parallelism).toLong
-    val rows = math.max(12L, raw / 12L * 12L)
-    val pRows = rows / 4
-    val pCfg = GenConfig(eventsPerSecond = 250L)
+  private def funnelInputs(dir: String): Seq[Input] = {
+    val rows = math.max(12L, subtaskRows(sfOf(dir)) / 12L * 12L)
     val abCfg = GenConfig(eventsPerSecond = 1000L)
-    dumpInput(spark, dir, "stream_funnel", "persons", pCfg, pRows)
-    dumpInput(spark, dir, "stream_funnel", "auctions", abCfg, rows)
-    dumpInput(spark, dir, "stream_funnel", "bids", abCfg, rows)
-    val persons = NexmarkSources.personStreamDsv2(spark, pCfg, Parallelism, pRows, rowsPerBatchFor(pRows))
-    val auctions = NexmarkSources.auctionStreamDsv2(spark, abCfg, Parallelism, rows, rowsPerBatchFor(rows))
-    val bids = NexmarkSources.bidStreamDsv2(spark, abCfg, Parallelism, rows, rowsPerBatchFor(rows))
-    runToParquet(spark,
-      NexmarkStateful.funnelStateful(persons, auctions, bids, windowMs = 5000L).toDF,
-      "funnel", expectedBatches(rows))
+    Seq(Input("persons", "persons", GenConfig(eventsPerSecond = 250L), rows / 4),
+      Input("auctions", "auctions", abCfg, rows), Input("bids", "bids", abCfg, rows))
   }
+  private def streamFunnel(in: Inputs): DataFrame =
+    runToParquet(in, NexmarkStateful.funnelStateful(in.stream[Person]("persons"),
+      in.stream[Auction]("auctions"), in.stream[Bid]("bids"), windowMs = 5000L).toDF)
 
   /** Funnel oracle: the timer arms once at signup + 5000 and the clamp
     * only delays emission past window close (class doc of
@@ -931,10 +910,8 @@ object StreamingBench extends QueryModule {
     * arbitrary state), state horizon derived from the range condition.
     * sf0.1 → 100k auctions + 400k bids.
     */
-  def streamIntervalJoin(spark: SparkSession, dir: String): DataFrame = {
-    val (bids, auctions, batches) = qxSources(spark, dir, "stream_interval_join")
-    runToParquet(spark, NexmarkQueries.qIntervalJoin(bids, auctions), "intjoin", batches)
-  }
+  private def streamIntervalJoin(in: Inputs): DataFrame =
+    runToParquet(in, NexmarkQueries.qIntervalJoin(in.stream[Bid]("bids"), in.stream[Auction]("auctions")))
 
   /** qIntervalJoin over the dumped streams: a plain range join, NO
     * watermark cutoff — inner-join matches are emitted immediately, and
@@ -960,12 +937,9 @@ object StreamingBench extends QueryModule {
     * instant; the final no-data micro-batch flushes the last horizon).
     * Same sources/volumes as the inner entry.
     */
-  def streamOuterJoin(spark: SparkSession, dir: String): DataFrame = {
-    val (bids, auctions, batches) = qxSources(spark, dir, "stream_outer_join")
-    runToParquet(spark,
-      NexmarkQueries.qIntervalJoin(bids, auctions, joinType = "left_outer"),
-      "intouter", batches)
-  }
+  private def streamOuterJoin(in: Inputs): DataFrame =
+    runToParquet(in, NexmarkQueries.qIntervalJoin(in.stream[Bid]("bids"),
+      in.stream[Auction]("auctions"), joinType = "left_outer"))
 
   /** Matched rows as in the inner oracle; null rows for bids with NO
     * in-range auction whose event time is STRICTLY below the final global
@@ -997,14 +971,8 @@ object StreamingBench extends QueryModule {
     * stateful aggs in one append pipeline — the multi-stateful-operator
     * shape). Same volumes as stream_q5_hot.
     */
-  def streamTopK(spark: SparkSession, dir: String): DataFrame = {
-    val rows = math.max(1L, (10000000L * sfOf(dir) / Parallelism).toLong)
-    val cfg = GenConfig(eventsPerSecond = 1000L)
-    dumpInput(spark, dir, "stream_topk", "bids", cfg, rows)
-    val bids = NexmarkSources.bidStreamDsv2(spark, cfg, Parallelism, rows, rowsPerBatchFor(rows))
-    runToParquet(spark, NexmarkQueries.qWindowTopK(bids, "5 seconds"), "topk",
-      expectedBatches(rows))
-  }
+  private def streamTopK(in: Inputs): DataFrame =
+    runToParquet(in, NexmarkQueries.qWindowTopK(in.stream[Bid]("bids"), "5 seconds"))
 
   /** qWindowTopK over the dumped bids: both stages finalize under the
     * same watermark, so the emitted windows are exactly those with
@@ -1053,20 +1021,18 @@ object StreamingBench extends QueryModule {
     * Spark; the entry models the standard deploy-time-snapshot contract.
     * sf0.1 → 1,000,000 streamed bids against a 250,000-emission dim.
     */
-  def streamScd2Enrich(spark: SparkSession, dir: String): DataFrame = {
+  private def scd2Inputs(dir: String): Seq[Input] = {
+    val rows = subtaskRows(sfOf(dir))
+    val cfg = GenConfig(eventsPerSecond = 1000L)
+    Seq(Input("bids", "bids", cfg, rows), Input("persons", "persons", cfg, math.max(1L, rows / 4)))
+  }
+
+  private def streamScd2Enrich(in: Inputs): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window
-    val rows = math.max(1L, (10000000L * sfOf(dir) / Parallelism).toLong)
-    val pRows = math.max(1L, rows / 4)
-    val cfg = GenConfig(eventsPerSecond = 1000L)
-    dumpInput(spark, dir, "stream_scd2_enrich", "bids", cfg, rows)
-    dumpInput(spark, dir, "stream_scd2_enrich", "persons", cfg, pRows)
     // one change event per (personId, timestamp): ties across subtasks
     // collapse deterministically (MAX city)
-    val pev = spark.read.format("nexmark")
-      .options(NexmarkSources.nexmarkOptions("persons", cfg, Parallelism, pRows,
-        rowsPerBatchFor(pRows)))
-      .load()
+    val pev = in.batch("persons")
       .groupBy(col("personId"), col("timestamp").as("created"))
       .agg(max(col("city")).as("city"))
     val w = Window.partitionBy(col("personId")).orderBy(col("created").asc)
@@ -1081,8 +1047,7 @@ object StreamingBench extends QueryModule {
       .select(col("personId"), lit(0L).as("valid_from"), col("valid_to"),
         lit(0).as("vn"), lit("pending").as("city"))
     val dim = genesis.unionByName(vers)
-    val b = NexmarkSources.bidStreamDsv2(spark, cfg, Parallelism, rows,
-      rowsPerBatchFor(rows)).toDF
+    val b = in.stream[Bid]("bids").toDF
     val enriched = b
       .join(broadcast(dim),
         b("personId") === dim("personId") &&
@@ -1092,7 +1057,7 @@ object StreamingBench extends QueryModule {
       .select(b("auctionId"), b("personId"), b("timestamp"), b("bid"),
         coalesce(dim("vn"), lit(-1)).as("vn"),
         coalesce(dim("city"), lit("")).as("city"))
-    runToParquet(spark, enriched, "scd2enrich", expectedBatches(rows))
+    runToParquet(in, enriched)
   }
 
   /** Mirror join over the dumped bids and persons: the same SCD2 unroll
@@ -1146,15 +1111,10 @@ object StreamingBench extends QueryModule {
     * the mergeable summary, the reader derives the percentile view.
     * sf0.1 → 1,000,000 bids.
     */
-  def streamQuantileProfile(spark: SparkSession, dir: String): DataFrame = {
+  private def streamQuantileProfile(in: Inputs): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.{Window => W}
-    val rows = math.max(1L, (10000000L * sfOf(dir) / Parallelism).toLong)
-    val cfg = GenConfig(eventsPerSecond = 1000L)
-    dumpInput(spark, dir, "stream_quantile_profile", "bids", cfg, rows)
-    val bids = NexmarkSources.bidStreamDsv2(spark, cfg, Parallelism, rows,
-      rowsPerBatchFor(rows))
-    val hist = bids.toDF
+    val hist = in.stream[Bid]("bids").toDF
       .withColumn("eventTime", timestamp_millis(col("timestamp")))
       .withWatermark("eventTime", "2 seconds")
       .withColumn("k", expr(
@@ -1163,7 +1123,7 @@ object StreamingBench extends QueryModule {
       .agg(count(lit(1)).as("cnt"))
       .select(unix_millis(col("window.start")).as("windowStartMs"),
         col("k"), col("cnt"))
-    val sink = runToParquet(spark, hist, "qprof", expectedBatches(rows))
+    val sink = runToParquet(in, hist)
     val n = sink.groupBy(col("windowStartMs")).agg(sum(col("cnt")).as("n_bids"))
     val cum = sink
       .withColumn("cum", sum(col("cnt")).over(
@@ -1237,24 +1197,21 @@ object StreamingBench extends QueryModule {
     * pure function of (auctionId, timestamp), so arrival races never
     * change a value; emission is the q5 window model (end ≤ final wm).
     * sf0.1 → 1,000,000 streamed events gated by the static battery.
+    *
+    * 100 events/s: the sf0.001 probe's 1,250 events then span 12.5 s of
+    * event time, so whole 5 s windows close beyond the 2 s watermark delay
+    * (end ≤ max − 2000 needs span ≥ 7 s) at EVERY fixture scale — at the
+    * q5 entries' 1000 eps that probe spans 1.25 s and emits nothing (the
+    * stream_knn_serve generator-clock rule). stream_upsert_apply uses the
+    * same clock for the same reason.
     */
-  def streamQualityGate(spark: SparkSession, dir: String): DataFrame = {
-    val rows = math.max(1L, (10000000L * sfOf(dir) / Parallelism).toLong)
-    // 100 events/s: the sf0.001 probe's 1,250 events then span 12.5 s of
-    // event time, so whole 5 s windows close beyond the 2 s watermark
-    // delay (end ≤ max − 2000 needs span ≥ 7 s) at EVERY fixture scale —
-    // at the q5 entries' 1000 eps that probe spans 1.25 s and emits
-    // nothing (the stream_knn_serve generator-clock rule)
-    val cfg = GenConfig(eventsPerSecond = 100L)
-    dumpInput(spark, dir, "stream_quality_gate", "bids", cfg, rows)
+  private def streamQualityGate(in: Inputs): DataFrame = {
     // eager localCheckpoint: a stream-static join re-evaluates its static
     // side every micro-batch; the scoring + threshold windows must be
     // paid once at gate-build time, like the serve entries' index tables
-    val gate = TextPipeline.qualityGateStatic(spark, dir).localCheckpoint(true)
+    val gate = TextPipeline.qualityGateStatic(in.spark, in.dir).localCheckpoint(true)
     val d = gate.count()
-    val bids = NexmarkSources.bidStreamDsv2(spark, cfg, Parallelism, rows, rowsPerBatchFor(rows))
-    runToParquet(spark, qualityGateStream(bids.toDF, gate, d), "qualitygate",
-      expectedBatches(rows))
+    runToParquet(in, qualityGateStream(in.stream[Bid]("bids").toDF, gate, d))
   }
 
   /** The gate dataflow itself (split out so StreamingMultiBatchSpec can
@@ -1324,27 +1281,29 @@ object StreamingBench extends QueryModule {
     * sf0.1 → 100,000 streamed queries × ~75 scored candidates each
     * against the 2,000-vector index.
     */
-  def streamKnnServe(spark: SparkSession, dir: String): DataFrame = {
+  /** Query volume scales with SF up to the bench scale and is CAPPED
+    * there: a serving tier's query RATE is a deployment constant while
+    * the CORPUS is the scale variable, and the fixture's pinned 80-cell
+    * index makes per-query scan grow ∝ corpus — an uncapped query count
+    * would make total serve work Q×N quadratic in SF (the r10 ScaleUp
+    * benchmark-quadratic class; uncapped, the sf1 sweep OOM'd scoring
+    * 1M events × ~790 candidates). At sf1 the capped entry measures the
+    * honest serving question: constant 100k-query load against a 10×
+    * corpus = 10× per-query scan.
+    *
+    * 50 events/s (20 ms spacing): the 2 s watermark delay must stay well
+    * inside the stream's event-time span at EVERY fixture scale — at the
+    * q5 entries' 1000 events/s the sf0.01 gate's 1,250 events span only
+    * 1.25 s and the final watermark would drop every event.
+    */
+  private def knnServeInputs(dir: String): Seq[Input] =
+    Seq(Input("bids", "bids", GenConfig(eventsPerSecond = 50L),
+      subtaskRows(math.min(sfOf(dir), 0.1), eventsAtSf1 = 1000000L)))
+
+  private def streamKnnServe(in: Inputs): DataFrame = {
     import org.apache.spark.sql.functions._
-    // Query volume scales with SF up to the bench scale and is CAPPED
-    // there: a serving tier's query RATE is a deployment constant while
-    // the CORPUS is the scale variable, and the fixture's pinned 80-cell
-    // index makes per-query scan grow ∝ corpus — an uncapped query count
-    // would make total serve work Q×N quadratic in SF (the r10 ScaleUp
-    // benchmark-quadratic class; uncapped, the sf1 sweep OOM'd scoring
-    // 1M events × ~790 candidates). At sf1 the capped entry measures the
-    // honest serving question: constant 100k-query load against a 10×
-    // corpus = 10× per-query scan.
-    val rows = math.max(1L, (1000000L * math.min(sfOf(dir), 0.1) / Parallelism).toLong)
-    // 50 events/s (20 ms spacing): the 2 s watermark delay must stay well
-    // inside the stream's event-time span at EVERY fixture scale — at the
-    // q5 entries' 1000 events/s the sf0.01 gate's 1,250 events span only
-    // 1.25 s and the final watermark would drop every event
-    val cfg = GenConfig(eventsPerSecond = 50L)
-    dumpInput(spark, dir, "stream_knn_serve", "bids", cfg, rows)
-    val (qembs, probes, cells, v) = Similarity.ivfServeStatics(spark, dir)
-    val bids = NexmarkSources.bidStreamDsv2(spark, cfg, Parallelism, rows, rowsPerBatchFor(rows))
-    val served = bids.toDF
+    val (qembs, probes, cells, v) = Similarity.ivfServeStatics(in.spark, in.dir)
+    val served = in.stream[Bid]("bids").toDF
       .withColumn("eventTime", timestamp_millis(col("timestamp")))
       .withWatermark("eventTime", "2 seconds")
       .dropDuplicates("auctionId", "eventTime")
@@ -1363,7 +1322,7 @@ object StreamingBench extends QueryModule {
       .select(col("auctionId"), col("ts"), col("qv"), col("n_cands"),
         (col("pos") + 1).cast("long").as("rk"),
         col("col.vec_id").as("vec_id"), negate(col("col.nc")).as("cos6"))
-    runToParquet(spark, served, "knnserve", expectedBatches(rows))
+    runToParquet(in, served)
   }
 
   /** One row per (distinct admitted query event, rank): the aggregation
@@ -1453,19 +1412,10 @@ object StreamingBench extends QueryModule {
     * sf0.1 → 1,000,000 changes; hot-auction skew makes keys genuinely
     * multi-version. Output = one row per key with a closed change window.
     */
-  def streamUpsertApply(spark: SparkSession, dir: String): DataFrame = {
+  private def streamUpsertApply(in: Inputs): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.{Window => W}
-    val rows = math.max(1L, (10000000L * sfOf(dir) / Parallelism).toLong)
-    // 100 events/s (the stream_quality_gate generator-clock rule): the
-    // sf0.001 probe's 1,250 events then span 12.5 s of event time, so
-    // whole 5 s windows close beyond the 2 s watermark delay at EVERY
-    // fixture scale — at 1000 eps that probe spans 1.25 s and emits nothing
-    val cfg = GenConfig(eventsPerSecond = 100L)
-    dumpInput(spark, dir, "stream_upsert_apply", "bids", cfg, rows)
-    val bids = NexmarkSources.bidStreamDsv2(spark, cfg, Parallelism, rows, rowsPerBatchFor(rows))
-    val sink = runToParquet(spark, upsertCompact(bids.toDF), "upsertapply",
-      expectedBatches(rows))
+    val sink = runToParquet(in, upsertCompact(in.stream[Bid]("bids").toDF))
     val w = W.partitionBy(col("auctionId"))
     sink
       .withColumn("n_versions", count(lit(1)).over(w))
@@ -1528,29 +1478,45 @@ object StreamingBench extends QueryModule {
       |FROM snap WHERE krn = 1
       |""".stripMargin
 
-  /** Each oracle is DuckDB SQL over the entry's dumped input events (see
-    * the class doc): exact at the correctness gate's sf0.01
-    * single-micro-batch scale.
-    */
-  val entries: Seq[Entry] = Seq(
-    Entry("stream_q5_hot", streamQ5Hot, streamQ5HotSql),
-    Entry("stream_q8_join", streamQ8Join, streamQ8JoinSql),
-    Entry("stream_qx_winning", streamQxWinning, qxTimerSql("stream_qx_winning", maxEnd = true)),
-    Entry("stream_qx_tws", streamQxTws, qxTimerSql("stream_qx_tws", maxEnd = false)),
-    Entry("stream_q11_sessions", streamQ11Sessions, sessionsOracleSql("stream_q11_sessions")),
-    Entry("stream_q11_tws", streamQ11Tws, sessionsOracleSql("stream_q11_tws")),
-    Entry("stream_q7_highest", streamQ7Highest, streamQ7HighestSql),
-    Entry("stream_dedup", streamDedup, streamDedupSql),
-    Entry("stream_incremental_dedup", streamIncrementalDedup, streamIncrementalDedupSql),
-    Entry("stream_funnel", streamFunnel, streamFunnelSql),
-    Entry("stream_interval_join", streamIntervalJoin, streamIntervalJoinSql),
-    Entry("stream_outer_join", streamOuterJoin, streamOuterJoinSql),
-    Entry("stream_topk", streamTopK, streamTopKSql),
-    Entry("stream_scd2_enrich", streamScd2Enrich, streamScd2EnrichSql),
-    Entry("stream_quantile_profile", streamQuantileProfile, streamQuantileProfileSql),
-    Entry("stream_incremental_neardup", streamIncrementalNearDup, streamIncrementalNearDupSql),
-    Entry("stream_knn_serve", streamKnnServe, streamKnnServeSql),
-    Entry("stream_quality_gate", streamQualityGate, streamQualityGateSql),
-    Entry("stream_upsert_apply", streamUpsertApply, streamUpsertApplySql),
+  /** A stream entry before registration: `declare` gives its generated
+    * inputs at a test-data dir, `run` the pipeline over them. */
+  private final case class Stream(name: String, declare: String => Seq[Input],
+                                  run: Inputs => DataFrame, oracleSql: String) {
+    def inputs(spark: SparkSession, dir: String): Inputs = new Inputs(spark, dir, name, declare(dir))
+    def entry: Entry = Entry(name, (spark, dir) => run(inputs(spark, dir)), oracleSql,
+      Some((spark, dir) => inputs(spark, dir).writeOracleInputs()))
+  }
+
+  private val streams: Seq[Stream] = Seq(
+    Stream("stream_q5_hot", bidsAt(1000L), streamQ5Hot, streamQ5HotSql),
+    Stream("stream_q8_join", q8Inputs, streamQ8Join, streamQ8JoinSql),
+    Stream("stream_qx_winning", qxInputs, streamQxWinning, qxTimerSql("stream_qx_winning", maxEnd = true)),
+    Stream("stream_qx_tws", qxInputs, streamQxTws, qxTimerSql("stream_qx_tws", maxEnd = false)),
+    Stream("stream_q11_sessions", bidsAt(1000L), streamQ11Sessions, sessionsOracleSql("stream_q11_sessions")),
+    Stream("stream_q11_tws", bidsAt(1000L), streamQ11Tws, sessionsOracleSql("stream_q11_tws")),
+    Stream("stream_q7_highest", bidsAt(1000L), streamQ7Highest, streamQ7HighestSql),
+    Stream("stream_dedup", bidsAt(1000L), streamDedup, streamDedupSql),
+    Stream("stream_incremental_dedup", deltaAndCorpus, streamIncrementalDedup, streamIncrementalDedupSql),
+    Stream("stream_funnel", funnelInputs, streamFunnel, streamFunnelSql),
+    Stream("stream_interval_join", qxInputs, streamIntervalJoin, streamIntervalJoinSql),
+    Stream("stream_outer_join", qxInputs, streamOuterJoin, streamOuterJoinSql),
+    Stream("stream_topk", bidsAt(1000L), streamTopK, streamTopKSql),
+    Stream("stream_scd2_enrich", scd2Inputs, streamScd2Enrich, streamScd2EnrichSql),
+    Stream("stream_quantile_profile", bidsAt(1000L), streamQuantileProfile, streamQuantileProfileSql),
+    Stream("stream_incremental_neardup", deltaAndCorpus, streamIncrementalNearDup, streamIncrementalNearDupSql),
+    Stream("stream_knn_serve", knnServeInputs, streamKnnServe, streamKnnServeSql),
+    Stream("stream_quality_gate", bidsAt(100L), streamQualityGate, streamQualityGateSql),
+    Stream("stream_upsert_apply", bidsAt(100L), streamUpsertApply, streamUpsertApplySql),
   )
+
+  /** Each oracle is DuckDB SQL over the entry's dumped input events, exact
+    * under the multi-batch run at every scale (class doc). Each entry's
+    * oracle-inputs writer dumps its declared inputs.
+    */
+  val entries: Seq[Entry] = streams.map(_.entry)
+
+  /** The declared inputs of stream entry `name` at `dir`, ready to read;
+    * None for any other name. */
+  private[graft] def inputs(spark: SparkSession, name: String, dir: String): Option[Inputs] =
+    streams.find(_.name == name).map(_.inputs(spark, dir))
 }

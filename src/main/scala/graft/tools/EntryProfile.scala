@@ -17,7 +17,6 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   */
 object EntryProfile {
   def main(args: Array[String]): Unit = {
-    System.setProperty("graft.stream.dumpInputs", "false")
     val names = args.headOption.getOrElse(sys.error("usage: EntryProfile <entry,entry,...> [sfDir] [runs]"))
       .split(",").map(_.trim).toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"

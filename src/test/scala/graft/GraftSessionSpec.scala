@@ -8,8 +8,9 @@ import scala.jdk.CollectionConverters._
   * over `src/main`: sessions are built in one place, the thread count is
   * read in one place, partitions are sized in one place ([[Sizing]]), the
   * checkpoint file manager is registered in one place (`core-site.xml`),
-  * and no measurement-only stream/state env knob or one-off probe main
-  * comes back. The guard counts source text, so machine load cannot move
+  * the nexmark generator is read in one place ([[graft.nexmark.NexmarkSources]]),
+  * and no measurement-only stream/state knob or one-off probe main comes
+  * back. The guard counts source text, so machine load cannot move
   * it.
   */
 class GraftSessionSpec extends SparkSpec {
@@ -86,6 +87,13 @@ class GraftSessionSpec extends SparkSpec {
 
   test("no GRAFT_STREAM_* / GRAFT_STATE_* env knob is read") {
     assert(filesMatching("\"GRAFT_(STREAM|STATE)_[A-Z_]*\"").isEmpty)
+  }
+
+  test("no stream dump switch is read, and every generator read goes through NexmarkSources") {
+    assert(occurrences("graft.stream.dumpInputs") == 0)
+    assert(filesMatching("""\.format\("nexmark"\)""") == Set("graft/nexmark/NexmarkSources.scala"))
+    assert(filesMatching(java.util.regex.Pattern.quote("format(\"nexmark\")"))
+      .filter(_.startsWith("graft/queries/")).isEmpty)
   }
 
   test("graft.tools holds only EntryProfile, PlanAudit and ScaleUp") {

@@ -24,20 +24,10 @@ import org.apache.spark.sql.functions._
   */
 class ScalePlanSpec extends SparkSpec {
 
-  private def withConfs(kvs: (String, String)*)(body: => Unit): Unit = {
-    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("bucketed tables join without any exchange (co-located SMJ)") {
     val dir = java.nio.file.Files.createTempDirectory("graftbuckets")
     val sfDir = "/root/testdata/sf0.001"
-    withConfs(
+    GraftSession.withConf(spark)(
       "spark.sql.adaptive.enabled" -> "false", // inspect the static plan
       "spark.sql.autoBroadcastJoinThreshold" -> "-1" // force the SMJ path
     ) {
@@ -83,7 +73,7 @@ class ScalePlanSpec extends SparkSpec {
     // difference between shuffling the full fact table and shuffling the
     // matching slice. Thresholds lowered so the MB-scale fixture takes
     // the same code path.
-    withConfs(
+    GraftSession.withConf(spark)(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1", // keep the SMJ shape
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "10MB",
@@ -103,7 +93,7 @@ class ScalePlanSpec extends SparkSpec {
   }
 
   test("AQE splits a skewed shuffle partition (skew=true in final plan)") {
-    withConfs(
+    GraftSession.withConf(spark)(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
@@ -152,7 +142,7 @@ class ScalePlanSpec extends SparkSpec {
     try {
     Tables.events(spark, "/root/testdata/sf0.1").repartition(8)
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    withConfs(
+    GraftSession.withConf(spark)(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",

@@ -15,19 +15,21 @@ import org.apache.spark.sql.functions._
   *     multi-match would inflate, and the LEFT join means a miss still
   *     emits), with both the genesis and the out-of-dim fallthrough
   *     exercised;
-  *   - stream output == an independently-built BATCH join over the same
-  *     dumps (the stateless topology has no watermark model to diverge
-  *     on, so set equality must be exact).
+  *   - stream output == an independently-built BATCH join over the batch
+  *     reads of the entry's declared inputs — the events its stream and
+  *     its oracle dump carry (the stateless topology has no watermark
+  *     model to diverge on, so set equality must be exact).
   */
 class Scd2EnrichSpec extends SparkSpec {
 
-  private val dumpBase = s"${StreamingBench.InputDumpBase}/current/stream_scd2_enrich"
+  private val Name = "stream_scd2_enrich"
+  private val Dir = "/root/testdata/sf0.001"
 
   test("SCD2 intervals tile [0, inf) per person; stream equals batch twin") {
-    val out = StreamingBench.streamScd2Enrich(spark, "/root/testdata/sf0.001")
-      .collect().map(_.toSeq).toSeq
-    val bids = spark.read.parquet(s"$dumpBase/bids")
-    val persons = spark.read.parquet(s"$dumpBase/persons")
+    val out = SparkEntry.queries(Name)(spark, Dir).collect().map(_.toSeq).toSeq
+    val inputs = StreamingBench.inputs(spark, Name, Dir).get
+    val bids = inputs.batch("bids")
+    val persons = inputs.batch("persons")
     assert(out.size == bids.count(), "exactly one output row per streamed bid")
 
     // rebuild the dim the entry's way and check the tiling property
@@ -44,7 +46,7 @@ class Scd2EnrichSpec extends SparkSpec {
       // which is exactly what makes lead() produce a tiling
     }
 
-    // batch twin over the same dumps: identical join, no streaming engine
+    // batch twin over the same inputs: identical join, no streaming engine
     val vers = pev
       .withColumn("vn", row_number().over(
         org.apache.spark.sql.expressions.Window
@@ -76,10 +78,10 @@ class Scd2EnrichSpec extends SparkSpec {
       "stream output must equal the batch twin exactly")
 
     // coverage pinned independently per path, with the expectation derived
-    // from the dumps themselves (r11 ADVICE: an OR would let a fixture
-    // change silently drop one path): a bid whose personId is outside the
+    // from the inputs themselves (an OR would let a fixture change
+    // silently drop one path): a bid whose personId is outside the
     // dim must surface as vn = -1, a bid earlier than its person's first
-    // emission as the genesis vn = 0 — and if the dump produces such bids,
+    // emission as the genesis vn = 0 — and if the inputs produce such bids,
     // the output MUST contain that path.
     val vns = out.map(_(4).asInstanceOf[Int]).toSet
     val dimPids = intervals.keySet
@@ -94,7 +96,7 @@ class Scd2EnrichSpec extends SparkSpec {
     assert(expectGenesis == vns.contains(0),
       s"genesis expected=$expectGenesis but vns=$vns")
     assert(expectFallthrough || expectGenesis,
-      "fixture exercises neither genesis nor fallthrough — strengthen the dump")
+      "fixture exercises neither genesis nor fallthrough — strengthen the inputs")
     assert(vns.exists(_ >= 1), s"no real version matched: $vns")
   }
 }

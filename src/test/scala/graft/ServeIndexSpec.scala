@@ -21,9 +21,7 @@ class ServeIndexSpec extends SparkSpec {
 
   test("serve plan: bucketed postings scan, no Exchange on the corpus branch, no assignment stages") {
     Similarity.buildIvfIndex(spark, Dir)
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    GraftSession.withConf(spark)("spark.sql.adaptive.enabled" -> "false") {
       val scored = Similarity.knnServeScored(spark, Dir)
       val plan = scored.queryExecution.executedPlan
       // the corpus-sized branch is a BUCKETED scan of the postings table
@@ -62,7 +60,7 @@ class ServeIndexSpec extends SparkSpec {
         s"serve plan must carry no assignment aggregate:\n$plan")
       assert(!plan.toString.contains("max_by"),
         s"serve plan must carry no assignment argmax:\n$plan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    }
   }
 
   test("serving from the persisted index equals the in-query build") {

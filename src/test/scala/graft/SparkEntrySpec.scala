@@ -1,6 +1,7 @@
 package graft
 
 import graft.nexmark.SparkSpec
+import graft.queries.StreamingBench
 
 /** Driver-contract sanity: the entry registry is consistent, the flagship
   * entry returns rows, and every query executes at the smallest scale
@@ -21,6 +22,26 @@ class SparkEntrySpec extends SparkSpec {
     // the naming convention still holds: isStream <=> the stream_ prefix
     val wrong = names.filter(n => SparkEntry.isStream(n) != n.startsWith("stream_"))
     assert(wrong.isEmpty, s"isStream disagrees with the name prefix: $wrong")
+  }
+
+  test("stream entries, and only they, declare inputs; each oracle reads exactly its declared labels") {
+    val dumped = (java.util.regex.Pattern.quote(s"${StreamingBench.InputDumpBase}/current/") +
+      "([^/']+)/([^/']+)/").r
+    for (e <- SparkEntry.entries) {
+      val labels = StreamingBench.inputs(spark, e.name, sfDir).toSeq.flatMap(_.declared.map(_.label))
+      val read = dumped.findAllMatchIn(e.oracleSql).map(m => (m.group(1), m.group(2))).toSet
+      if (SparkEntry.isStream(e.name)) {
+        assert(labels.nonEmpty, s"${e.name} declares no input")
+        assert(labels.distinct == labels, s"${e.name} declares a label twice: $labels")
+        assert(e.writeOracleInputs.isDefined, s"${e.name} writes no oracle input")
+        assert(read == labels.map(e.name -> _).toSet,
+          s"${e.name}: oracle reads $read, declared ${labels.mkString(",")}")
+      } else {
+        assert(labels.isEmpty, s"batch entry ${e.name} declares inputs: $labels")
+        assert(e.writeOracleInputs.isEmpty, s"batch entry ${e.name} writes oracle inputs")
+        assert(read.isEmpty, s"batch entry ${e.name}'s oracle reads stream dumps: $read")
+      }
+    }
   }
 
   test("select throws on an unknown name and returns every entry for an empty set") {

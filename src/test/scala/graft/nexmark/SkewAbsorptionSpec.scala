@@ -2,6 +2,7 @@ package graft.nexmark
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.streaming.Trigger
+import graft.GraftSession
 import graft.nexmark.queries.NexmarkQueries
 
 /** Hot-key skew probe (VERDICT r8 Next #5): pins SURVEY §9.2's claim that
@@ -27,16 +28,6 @@ import graft.nexmark.queries.NexmarkQueries
   */
 class SkewAbsorptionSpec extends SparkSpec {
 
-  private def withConfs(kvs: (String, String)*)(body: => Unit): Unit = {
-    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   import SkewAbsorptionSpec.{HotKey, heat}
 
   test("partial aggregation absorbs a persistent 14% hot key: no state partition reads >2x the mean") {
@@ -55,7 +46,7 @@ class SkewAbsorptionSpec extends SparkSpec {
           reads((te.stageId, te.taskInfo.taskId)) = m.shuffleReadMetrics.recordsRead
       }
     }
-    withConfs("spark.sql.shuffle.partitions" -> "32") {
+    GraftSession.withConf(spark)("spark.sql.shuffle.partitions" -> "32") {
       spark.sparkContext.addSparkListener(listener)
       try {
         import spark.implicits._
