@@ -28,8 +28,9 @@ import org.apache.spark.sql.functions.broadcast
   *   - [[checkpoint]] materializes a frame with AQE's byte floor lifted,
   *     so a kB-scale frame lands one block per core instead of one
   *     block, then coalesces (narrow, no shuffle) down to `parts`.
-  *   - [[fetch]] broadcasts an embedding fetch side up to 4 M rows and
-  *     builds a shuffled hash join above; neither arm sorts the payload.
+  *   - [[fetch]] broadcasts a join's build side of at most N rows up to
+  *     N = 4 M and builds a shuffled hash join above; neither arm sorts
+  *     the other side's payload.
   *   - [[navParts]] = `clamp(rows / 128, 8, 4096)` partitions of the
   *     persisted navigation index.
   *
@@ -101,14 +102,20 @@ object Sizing {
     if (ck.rdd.getNumPartitions <= p) ck else ck.coalesce(p)
   }
 
-  /** Largest embedding fetch side that is broadcast: 4 M rows × ~550 B
-    * framed ≈ 2.2 GB, an order under Spark's 8 GB broadcast cap. */
+  /** Largest build side that is broadcast: 4 M rows. Sized for the
+    * widest caller, an embedding fetch side (4 M rows × ~550 B framed ≈
+    * 2.2 GB, an order under Spark's 8 GB broadcast cap); narrower rows,
+    * such as the kNN graph's (vec_id, cid) assignment, fit with room. */
   private val FetchBroadcastMaxRows = 4000000L
 
-  /** Join strategy for an embedding fetch side of a corpus of `rows` rows:
-    * a broadcast up to [[FetchBroadcastMaxRows]], a shuffled hash build
-    * above. Either way pair rows never ride a sort with the 64-double
-    * payload attached, which an unhinted sort-merge join would do. */
+  /** Join strategy for a build side `df` of at most `rows` rows — an
+    * embedding fetch side of a corpus of `rows` vectors, or any side
+    * whose row count `rows` bounds: a broadcast up to
+    * [[FetchBroadcastMaxRows]], a shuffled hash build above. The choice is
+    * a function of `rows` alone, so the plan does not depend on which
+    * shuffle AQE sees finish first, and the other side's rows never ride
+    * a sort with a wide payload attached, which an unhinted sort-merge
+    * join would do. */
   def fetch(df: DataFrame, rows: Long): DataFrame =
     if (rows <= FetchBroadcastMaxRows) broadcast(df) else df.hint("shuffle_hash")
 

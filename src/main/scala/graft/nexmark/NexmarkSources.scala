@@ -1,21 +1,23 @@
 package graft.nexmark
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import graft.nexmark.codec.BinaryCodec
+import org.apache.spark.sql.functions.{call_function, col, lit, monotonically_increasing_id}
+import graft.nexmark.codec.{BinaryCodec, TaggedCodec}
 
 /** Spark-native source layer (SURVEY §2.1):
   *
-  *   - S1-S3/S7: the built-in `rate-micro-batch` source provides a
-  *     deterministic, rate-limited long sequence; composing it with the
-  *     pure [[NexmarkGen]] mapping reproduces the reference's
-  *     RichParallelSourceFunction semantics (rate limiting via
-  *     rowsPerBatch, per-subtask id strides via GenConfig) without a
-  *     custom DSv2 source — the id arithmetic lives in the map, so the
-  *     built-in source suffices (SURVEY §7.3).
+  *   - S1-S3: the DSv2 `format("nexmark")` source
+  *     ([[graft.nexmark.source.NexmarkDataSource]]): one partition per
+  *     reference subtask with its own id stride, admission-controlled to
+  *     `rowsPerBatch` events per subtask per trigger — the reference's
+  *     RichParallelSourceFunction + RateLimiter. Every streaming read of
+  *     the project goes through [[entityStreamDsv2]].
   *   - S4/S5: the 8 KiB binary frames (Kafka values or mmap file contents)
   *     decode via [[BinaryCodec]] in a flatMap — one frame → N records,
   *     the Spark analog of KeyedDeserializationSchema + PersonsFlatMapper
   *     (common/PersonsFlatMapper.java:8-13 folds into the decode).
+  *   - K4: the unified-topic producer ([[keyedForProduce]],
+  *     [[produceToPartitionFiles]]) and its length-prefixed partition files.
   */
 object NexmarkSources {
 
@@ -31,27 +33,6 @@ object NexmarkSources {
   def bidsDs(spark: SparkSession, cfg: GenConfig, n: Long): Dataset[Bid] = {
     import spark.implicits._
     spark.range(n).map(NexmarkGen.bid(cfg, _))
-  }
-
-  /** Rate-limited streaming person source (S1): `rowsPerSecond` maps to the
-    * reference's Guava RateLimiter budget (NexmarkPersonSource.java:34,49).
-    */
-  def personStream(spark: SparkSession, cfg: GenConfig, rowsPerBatch: Int): Dataset[Person] = {
-    import spark.implicits._
-    rateStream(spark, rowsPerBatch).map(NexmarkGen.person(cfg, _))
-  }
-  def auctionStream(spark: SparkSession, cfg: GenConfig, rowsPerBatch: Int): Dataset[Auction] = {
-    import spark.implicits._
-    rateStream(spark, rowsPerBatch).map(NexmarkGen.auction(cfg, _))
-  }
-  def bidStream(spark: SparkSession, cfg: GenConfig, rowsPerBatch: Int): Dataset[Bid] = {
-    import spark.implicits._
-    rateStream(spark, rowsPerBatch).map(NexmarkGen.bid(cfg, _))
-  }
-  /** S7: interleaved person/auction/bid unified stream (1:4:4 mix). */
-  def eventStream(spark: SparkSession, cfg: GenConfig, rowsPerBatch: Int): Dataset[Event] = {
-    import spark.implicits._
-    rateStream(spark, rowsPerBatch).map(NexmarkGen.event(cfg, _))
   }
 
   /** DSv2 `format("nexmark")` streaming source: true multi-subtask
@@ -104,15 +85,6 @@ object NexmarkSources {
       .options(nexmarkOptions(entity, cfg, parallelism, rows, rowsPerBatch))
       .load()
 
-  private def rateStream(spark: SparkSession, rowsPerBatch: Int): Dataset[Long] = {
-    import spark.implicits._
-    spark.readStream
-      .format("rate-micro-batch")
-      .option("rowsPerBatch", rowsPerBatch.toLong)
-      .load()
-      .select("value").as[Long]
-  }
-
   // ---- binary frame decode (S4 Kafka values / S5 file contents) ----
 
   def personsFromFrames(frames: Dataset[Array[Byte]], ingestionTs: Long): Dataset[Person] = {
@@ -135,6 +107,66 @@ object NexmarkSources {
     */
   def sliceFrames(content: Array[Byte]): Iterator[Array[Byte]] =
     content.grouped(BinaryCodec.FrameSize).filter(_.length == BinaryCodec.FrameSize)
+
+  // ---- unified-topic producer (K4) ----
+
+  /** K4: the producer's exact output projection — `key` (8-byte BE
+    * partition key), `value` (tagged wire bytes), `partition` (murmur3
+    * seed-104729 routing). [[produceToPartitionFiles]] writes it, and the
+    * broker-less partition-log spec consumes it, so both exercise the
+    * production routing byte-for-byte rather than a reimplementation.
+    *
+    * Routing deliberately hashes all 8 key bytes, NOT the reference's
+    * first-4-bytes hash (GeneratorPipeline.java:198-251), which collapses
+    * to one partition for ids < 2^32 — see `Murmur3Partitioner`'s doc;
+    * `Murmur3Partitioner.referencePartitionFor` is the byte-exact port.
+    * The partition column is the native `murmur3_partition` expression
+    * computed in the projection AFTER the (unavoidable) binary-encode map
+    * — the routing stays codegen'd and plan-auditable; only the byte-level
+    * codec runs in a lambda (the documented binary-codec exception).
+    */
+  def keyedForProduce(events: Dataset[Event], numPartitions: Int): DataFrame = {
+    import events.sparkSession.implicits._
+    // fail fast with the actual precondition instead of an unresolved-
+    // function AnalysisException: the routing column needs the session
+    // built with spark.sql.extensions=graft.spark.GraftExtensions
+    require(events.sparkSession.catalog.functionExists("murmur3_partition"),
+      "the events producer requires graft.spark.GraftExtensions " +
+        "(spark.sql.extensions) for the native murmur3_partition routing column")
+    events
+      .map(e => (TaggedCodec.encodeKey(e), TaggedCodec.encode(e), e.key))
+      .toDF("key", "value", "k")
+      .withColumn("partition", call_function("murmur3_partition", col("k"), lit(numPartitions)))
+      .drop("k")
+  }
+
+  /** The broker-less producer (GeneratorPipeline.java:31-208): a
+    * distributed job that routes [[keyedForProduce]]'s records to one
+    * `<dir>/events_p<partition>.bin` file per topic partition, each record
+    * [[TaggedCodec.framed]] (length-prefixed), in production order within
+    * each partition — the order of `events`, as a Kafka partition log
+    * keeps it. [[TaggedCodec.sliceFramed]] splits a file back into values.
+    */
+  def produceToPartitionFiles(events: Dataset[Event], numPartitions: Int, dir: String): Unit = {
+    import events.sparkSession.implicits._
+    keyedForProduce(events, numPartitions)
+      .withColumn("seq", monotonically_increasing_id()) // increases in input order
+      .repartition(numPartitions, col("partition"))
+      .sortWithinPartitions("partition", "seq")
+      .select("partition", "value")
+      .as[(Int, Array[Byte])]
+      .foreachPartition { it: Iterator[(Int, Array[Byte])] =>
+        // a task sees whole partition groups (partition is the shuffle
+        // key); hash placement may co-locate several in one task
+        val byPart = scala.collection.mutable.LinkedHashMap[Int, java.io.ByteArrayOutputStream]()
+        it.foreach { case (p, v) =>
+          byPart.getOrElseUpdate(p, new java.io.ByteArrayOutputStream()).write(TaggedCodec.framed(v))
+        }
+        byPart.foreach { case (p, bos) =>
+          java.nio.file.Files.write(java.nio.file.Paths.get(dir, s"events_p$p.bin"), bos.toByteArray)
+        }
+      }
+  }
 
   /** S6: CM text source — spark.read.text + positional parse
     * (cm/CM.java:184-229 manual chunking replaced by Spark partitioning).

@@ -53,13 +53,10 @@ object TaggedCodec {
     * the tagged value bytes. Kafka stores per-message framing in its log;
     * a flat file needs the explicit prefix to re-split.
     */
-  def encodeFramed(e: Event): Array[Byte] = {
-    val payload = encode(e)
-    java.nio.ByteBuffer.allocate(4 + payload.length)
-      .putInt(payload.length).put(payload).array()
-  }
+  def framed(value: Array[Byte]): Array[Byte] =
+    java.nio.ByteBuffer.allocate(4 + value.length).putInt(value.length).put(value).array()
 
-  /** Split a partition file written as concatenated [[encodeFramed]]
+  /** Split a partition file written as concatenated [[framed]]
     * records back into value byte arrays. Validates each length prefix so
     * a truncated or corrupt file fails with a clear error (offset + length)
     * instead of a raw BufferUnderflow/NegativeArraySize inside the task. */

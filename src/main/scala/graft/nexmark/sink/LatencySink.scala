@@ -1,22 +1,56 @@
 package graft.nexmark.sink
 
 import java.io.{File, FileWriter, PrintWriter}
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 
-/** Latency-measurement sink layer (SURVEY §2.2 K1-K3, §6 measurement
-  * contract; reference: NexmarkQuery8.java:245-415,
-  * NexmarkQuery5.java:253-400, NexmarkQueryX.java:834-1108).
+/** A latency sink a streaming query feeds once per micro-batch. Each
+  * `recordBatch` runs one Spark job: every series of the sink comes out
+  * of one [[LatencySink.seriesStats]] aggregate. `close()` runs after the
+  * query stops.
+  */
+trait BatchSink {
+  def recordBatch(batch: DataFrame, batchId: Long): Unit
+  def close(): Unit
+}
+
+/** Per-batch latency sink (SURVEY §2.2 K1-K3, §6 measurement contract;
+  * reference: NexmarkQuery5.java:253-400).
   *
   * The reference's RichSinkFunction accumulates SummaryStatistics
   * (count/mean/min/max/stddev) over latency series per subtask and appends
-  * CSV rows. The Spark-native equivalent is a `foreachBatch` sink: each
-  * micro-batch computes the same statistics declaratively (one tiny agg on
-  * the batch DataFrame — no driver-side row loop) and appends one CSV row
-  * per series. Outliers above the threshold are discarded
-  * (LATENCY_THRESHOLD = 10 min, NexmarkQuery8.java:247; 30 min for Q5b,
-  * NexmarkQuery5b.java:219).
+  * CSV rows. This sink computes the same statistics for each micro-batch
+  * declaratively and appends one CSV row per non-empty series: bid
+  * latency (`now - creationCol`) and flight time (`now - ingestionCol`),
+  * NexmarkQuery5.java:384-394. Samples outside `[0, thresholdMs]` are
+  * discarded (LATENCY_THRESHOLD = 10 min, NexmarkQuery8.java:247).
+  *
+  * `now` is injectable (a fixed clock makes golden tests deterministic —
+  * SURVEY §7.4.3).
   */
+final class LatencySink(csvPath: String, creationCol: String, ingestionCol: String,
+                        now: () => Long = () => System.currentTimeMillis(),
+                        thresholdMs: Long = LatencySink.DefaultThresholdMs) extends BatchSink {
+  import LatencySink._
+
+  def recordBatch(batch: DataFrame, batchId: Long): Unit = {
+    val nowMs = now()
+    val names = Seq("creationToSink", "flightTime")
+    val series = Seq(creationCol, ingestionCol).map { c =>
+      val lat = (lit(nowMs) - col(c)).cast("double")
+      (lat >= 0 && lat <= thresholdMs, lat)
+    }
+    val rows = names.zip(seriesStats(batch, series)).collect {
+      case (name, st) if st.count > 0 =>
+        f"$batchId,$nowMs,$name,${st.count},${st.mean}%.3f,${st.min}%.0f,${st.max}%.0f,${st.stddev}%.3f"
+    }
+    if (rows.nonEmpty) appendCsv(csvPath, rows)
+  }
+
+  def close(): Unit = ()
+}
+
 object LatencySink {
 
   val DefaultThresholdMs: Long = 10 * 60 * 1000L // NexmarkQuery8.java:247
@@ -37,43 +71,32 @@ object LatencySink {
       count += count2; sum += sum2; sumSq += sumSq2
       min = math.min(min, min2); max = math.max(max, max2)
     }
+    def add(o: Stats): Unit = if (o.count > 0) add(o.count, o.sum, o.sumSq, o.min, o.max)
     def mean: Double = if (count == 0) 0 else sum / count
     def stddev: Double =
       if (count < 2) 0
       else math.sqrt(math.max(0, (sumSq - sum * sum / count) / (count - 1)))
   }
 
-  /** foreachBatch body: given a batch with creation/ingestion timestamp
-    * columns, compute the two latency series of the measurement contract
-    * (bid latency = now - lastTimestamp, flight time = now -
-    * lastIngestionTimestamp; NexmarkQuery5.java:384-394) and append CSV.
-    *
-    * `now` is injectable (a fixed clock makes golden tests deterministic —
-    * SURVEY §7.4.3).
+  /** Count, sum, sum of squares, min and max of each (condition, latency)
+    * series over the rows of `batch` that meet its condition, computed in
+    * ONE aggregate, so a sink runs one Spark job per micro-batch however
+    * many series it keeps. `latency` is a double column; an empty series
+    * comes back with count 0.
     */
-  def recordBatch(
-      batch: DataFrame, batchId: Long, csvPath: String,
-      creationCol: String, ingestionCol: String,
-      now: () => Long = () => System.currentTimeMillis(),
-      thresholdMs: Long = DefaultThresholdMs): Unit = {
-    val nowMs = now()
-    val series = Seq("creationToSink" -> creationCol, "flightTime" -> ingestionCol)
-    val rows = series.flatMap { case (name, c) =>
-      val lat = batch
-        .select((lit(nowMs) - col(c)).cast("double").as("lat"))
-        .filter(col("lat") >= 0 && col("lat") <= thresholdMs)
-        .agg(count(lit(1)).as("n"), sum(col("lat")).as("s"),
-             sum(col("lat") * col("lat")).as("s2"),
-             min(col("lat")).as("mn"), max(col("lat")).as("mx"))
-        .collect()(0)
-      if (lat.getLong(0) == 0) None
-      else {
-        val st = new Stats
-        st.add(lat.getLong(0), lat.getDouble(1), lat.getDouble(2), lat.getDouble(3), lat.getDouble(4))
-        Some(f"$batchId,$nowMs,$name,${st.count},${st.mean}%.3f,${st.min}%.0f,${st.max}%.0f,${st.stddev}%.3f")
-      }
+  def seriesStats(batch: DataFrame, series: Seq[(Column, Column)]): Seq[Stats] = {
+    val aggs = series.flatMap { case (cond, v) =>
+      Seq(count(when(cond, 1)), sum(when(cond, v)), sum(when(cond, v * v)),
+          min(when(cond, v)), max(when(cond, v)))
     }
-    if (rows.nonEmpty) appendCsv(csvPath, rows)
+    val r = batch.agg(aggs.head, aggs.tail: _*).collect()(0)
+    series.indices.map { i =>
+      val o = 5 * i
+      val st = new Stats
+      if (r.getLong(o) > 0)
+        st.add(r.getLong(o), r.getDouble(o + 1), r.getDouble(o + 2), r.getDouble(o + 3), r.getDouble(o + 4))
+      st
+    }
   }
 
   private def appendCsv(path: String, rows: Seq[String]): Unit = synchronized {
@@ -87,49 +110,12 @@ object LatencySink {
     } finally w.close()
   }
 
-  /** Attach the latency sink to a streaming query result. */
-  def writeLatencyCsv(df: DataFrame, csvPath: String, creationCol: String,
-                      ingestionCol: String, checkpoint: String,
-                      thresholdMs: Long = DefaultThresholdMs)
-      : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
+  /** Feed `df`'s micro-batches to `sink` through `foreachBatch`. */
+  def attach(df: DataFrame, sink: BatchSink, checkpoint: String): DataStreamWriter[Row] =
     df.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        recordBatch(batch.toDF(), batchId, csvPath, creationCol, ingestionCol,
-                    thresholdMs = thresholdMs)
-      }
-
-  /** Attach the Q8 3-series sink to a streaming query result; returns the
-    * sink so the caller can `close()` it after the query stops (reference
-    * close() = final CSV row + flush, NexmarkQuery8.java:313-320).
-    */
-  def writeQ8LatencyCsv(df: DataFrame, csvPath: String, checkpoint: String)
-      : (org.apache.spark.sql.streaming.DataStreamWriter[Row], Q8CsvSink) = {
-    val sink = new Q8CsvSink(csvPath)
-    val w = df.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        sink.recordBatch(batch.toDF(), batchId)
-      }
-    (w, sink)
-  }
-
-  /** Attach the Q5b throttled cumulative sink; returns the sink for
-    * `close()` after the query stops. */
-  def writeQ5bLatencyCsv(df: DataFrame, csvPath: String, checkpoint: String,
-                         creationCol: String, ingestionCol: String)
-      : (org.apache.spark.sql.streaming.DataStreamWriter[Row], Q5bCsvSink) = {
-    val sink = new Q5bCsvSink(csvPath, creationCol, ingestionCol)
-    val w = df.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        sink.recordBatch(batch.toDF(), batchId)
-      }
-    (w, sink)
-  }
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) => sink.recordBatch(batch.toDF(), batchId) }
 }
 
 /** Buffered CSV appender reproducing the reference sinks' flush contract
@@ -210,7 +196,7 @@ object CsvAppender { val DefaultFlushBytes: Long = 8L * 1024 * 1024 }
   */
 private[sink] abstract class CumulativeCsvSink(csvPath: String, header: String,
                                                flushBytes: Long, now: () => Long,
-                                               subtask: Int) {
+                                               subtask: Int) extends BatchSink {
   import LatencySink.Stats
   protected def series: Seq[Stats]
   protected val appender = new CsvAppender(csvPath, header, flushBytes)
@@ -268,40 +254,24 @@ final class Q8CsvSink(csvPath: String,
   private val flight = new Stats
   override protected def series: Seq[Stats] = Seq(person, auction, flight)
 
-  /** count/sum/sumSq/min/max of `v` over rows matching `cond`. */
-  private def condStats(cond: org.apache.spark.sql.Column, v: org.apache.spark.sql.Column) =
-    Seq(count(when(cond, 1)), sum(when(cond, v)), sum(when(cond, v * v)),
-        min(when(cond, v)), max(when(cond, v)))
-
-  private def merge(st: Stats, r: Row, off: Int): Long = {
-    val n = r.getLong(off)
-    if (n > 0) st.add(n, r.getDouble(off + 1), r.getDouble(off + 2),
-                      r.getDouble(off + 3), r.getDouble(off + 4))
-    n
-  }
-
   def recordBatch(batch: DataFrame, batchId: Long): Unit = if (freshBatch(batchId)) {
     val nowMs = now()
-    val lat = batch.select(
-      col("personId"),
-      (lit(nowMs) - col("personCreationTimestamp")).cast("double").as("pLat"),
-      (lit(nowMs) - col("auctionCreationTimestamp")).cast("double").as("aLat"),
-      (lit(nowMs) - col("auctionIngestionTimestamp")).cast("double").as("fLat"))
+    def lat(c: String) = (lit(nowMs) - col(c)).cast("double")
     // `personId > 0` is the reference's own discriminator verbatim
     // (NexmarkQuery8.java:384): person id 0 is sign-ambiguous there too
     // and lands in the probe branch — kept for fidelity, not "fixed".
     val isPerson = col("personId") > 0
+    val pLat = lat("personCreationTimestamp")
+    val aLat = lat("auctionCreationTimestamp")
     // person: strict < threshold (:386); auction/flight: <= (:390-393)
-    val probeOk = !isPerson && col("aLat") <= thresholdMs
-    val aggCols = condStats(isPerson && col("pLat") < thresholdMs, col("pLat")) ++
-      condStats(probeOk, col("aLat")) ++ condStats(probeOk, col("fLat"))
-    val r = lat.agg(aggCols.head, aggCols.tail: _*).collect()(0)
-    merge(person, r, 0)
-    val probes = merge(auction, r, 5)
-    merge(flight, r, 10)
+    val probeOk = !isPerson && aLat <= thresholdMs
+    val stats = LatencySink.seriesStats(batch, Seq(
+      (isPerson && pLat < thresholdMs, pLat), (probeOk, aLat),
+      (probeOk, lat("auctionIngestionTimestamp"))))
+    series.zip(stats).foreach { case (st, b) => st.add(b) }
     doneBatch(batchId)
     // the reference's updateCSV runs on probe arrival only (:394)
-    if (probes > 0) appender.append(Seq(csvRow(nowMs)))
+    if (stats(1).count > 0) appender.append(Seq(csvRow(nowMs)))
   }
 }
 
@@ -338,24 +308,13 @@ final class Q5bCsvSink(csvPath: String,
 
   def recordBatch(batch: DataFrame, batchId: Long): Unit = if (freshBatch(batchId)) {
     val nowMs = now()
-    val ok = (lit(nowMs) - col(creationCol)).cast("double") <= thresholdMs
-    val r = batch.agg(
-      count(when(ok, 1)),
-      sum(when(ok, (lit(nowMs) - col(creationCol)).cast("double"))).as("bs"),
-      sum(when(ok, pow(lit(nowMs) - col(creationCol), 2))).as("bs2"),
-      min(when(ok, (lit(nowMs) - col(creationCol)).cast("double"))),
-      max(when(ok, (lit(nowMs) - col(creationCol)).cast("double"))),
-      sum(when(ok, (lit(nowMs) - col(ingestionCol)).cast("double"))),
-      sum(when(ok, pow(lit(nowMs) - col(ingestionCol), 2))),
-      min(when(ok, (lit(nowMs) - col(ingestionCol)).cast("double"))),
-      max(when(ok, (lit(nowMs) - col(ingestionCol)).cast("double")))).collect()(0)
-    val n = r.getLong(0)
-    if (n > 0) {
-      bid.add(n, r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4))
-      flightT.add(n, r.getDouble(5), r.getDouble(6), r.getDouble(7), r.getDouble(8))
-    }
+    def lat(c: String) = (lit(nowMs) - col(c)).cast("double")
+    // one threshold test on the bid latency gates both series (:348-354)
+    val ok = lat(creationCol) <= thresholdMs
+    val stats = LatencySink.seriesStats(batch, Seq((ok, lat(creationCol)), (ok, lat(ingestionCol))))
+    series.zip(stats).foreach { case (st, b) => st.add(b) }
     doneBatch(batchId)
-    if (n > 0 && nowMs - prevRowMs > minRowIntervalMs) { // :357-360
+    if (stats.head.count > 0 && nowMs - prevRowMs > minRowIntervalMs) { // :357-360
       appender.append(Seq(csvRow(nowMs)))
       prevRowMs = nowMs
     }

@@ -2666,12 +2666,13 @@ object Similarity extends QueryModule {
       .select(col("vec_id").as("query_id"), explode(col("top.cid")).as("cid"))
     val nFetch = Tables.tableRows(spark, dir, "embeddings")
     // candidate volume ≈ N·NProbe·√N (the build rule this entry encodes).
-    // Both sides grow with N, so the join is pinned to a shuffled hash
-    // join built on `assign`: left to size, AQE broadcast whichever side's
-    // shuffle finished first, and the final plan (and its exchange and
-    // job counts) differed run to run.
+    // Both sides grow with N, so the strategy is fixed from N, not left to
+    // AQE (which broadcast whichever side's shuffle finished first, so the
+    // final plan and its exchange and job counts differed run to run):
+    // `assign` (N rows of two longs) is the build side, broadcast up to
+    // [[Sizing.fetch]]'s row bound and a shuffled hash build above it.
     val pairs = Sizing.spreadShuffled(
-        probes.join(assign.hint("shuffle_hash"), "cid")
+        probes.join(Sizing.fetch(assign, nFetch), "cid")
           .filter(col("vec_id") =!= col("query_id"))
           .select(col("query_id"), col("vec_id")),
         nFetch * NProbe * math.max(1L, math.sqrt(nFetch.toDouble).toLong),

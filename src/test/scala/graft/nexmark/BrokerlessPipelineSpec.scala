@@ -18,10 +18,11 @@ import graft.nexmark.sink.Murmur3Partitioner
   * replaced by its storage model: one append-only log file per topic
   * partition, records stored in production order. Everything else is the
   * production path, not a spec reimplementation:
-  *   - the producer projection is [[NexmarkKafka.keyedForProduce]] — the
-  *     same key/value/partition DataFrame `writeEventsToKafka` sinks,
-  *     with the routing computed by the native codegen
-  *     `murmur3_partition` expression in the plan;
+  *   - the producer projection is [[NexmarkSources.keyedForProduce]] —
+  *     the same key/value/partition DataFrame `--q0`'s distributed
+  *     producer ([[NexmarkSources.produceToPartitionFiles]]) writes, with
+  *     the routing computed by the native codegen `murmur3_partition`
+  *     expression in the plan;
   *   - partition placement is asserted byte-exact against the scalar
   *     [[Murmur3Partitioner.partitionFor]] port for every record;
   *   - the consumer is a LIVE `readStream` (file-stream source over the
@@ -52,12 +53,13 @@ class BrokerlessPipelineSpec extends SparkSpec {
     val events = (0 until NumEvents).map(i => NexmarkGen.event(cfg, i.toLong))
 
     // ---- producer phase (K4): the production projection, plan-audited ----
-    val keyed = NexmarkKafka.keyedForProduce(events.toDS(), NumPartitions)
+    val keyed = NexmarkSources.keyedForProduce(events.toDS(), NumPartitions)
     assert(keyed.queryExecution.executedPlan.toString.contains("murmur3_partition"),
       "producer routing must be the native murmur3_partition expression in the plan")
-    // driver-side grouping preserves production order per partition (what
-    // Kafka's log guarantees); the distributed file write path is covered
-    // by --q0 + SinkAndSourceSpec
+    // driver-side grouping into time-ordered segments below preserves
+    // production order per partition (what Kafka's log guarantees); the
+    // distributed one-file-per-partition write, produceToPartitionFiles,
+    // is run by SinkAndSourceSpec's --q0 test
     val produced = keyed.collect()
     assert(produced.length == NumEvents)
 

@@ -41,8 +41,7 @@ class SinkAndSourceSpec extends SparkSpec {
       (base - 200L, base - 250L),
       (base - LatencySink.DefaultThresholdMs - 1L, base - 300L))
       .toDF("creation", "ingestion")
-    LatencySink.recordBatch(batch, batchId = 7L, csv, "creation", "ingestion",
-      now = () => base)
+    new LatencySink(csv, "creation", "ingestion", now = () => base).recordBatch(batch, batchId = 7L)
     val lines = scala.io.Source.fromFile(csv).getLines().toSeq
     assert(lines.head == LatencySink.CsvHeader)
     val creation = lines(1).split(",")
@@ -169,12 +168,12 @@ class SinkAndSourceSpec extends SparkSpec {
     import spark.implicits._
     val events = (0 until 900).map(i => NexmarkGen.event(cfg, i.toLong))
     val dir = Files.createTempDirectory("q0")
-    events.groupBy(e => Murmur3Partitioner.partitionFor(e.key, 4))
-      .foreach { case (part, es) =>
-        val bos = new java.io.ByteArrayOutputStream()
-        es.foreach(e => bos.write(TaggedCodec.encodeFramed(e)))
-        Files.write(Paths.get(dir.toString, s"events_p$part.bin"), bos.toByteArray)
-      }
+    NexmarkSources.produceToPartitionFiles(events.toDS(), numPartitions = 4, dir.toString)
+    // each partition file holds exactly its routed events, in production order
+    events.groupBy(e => Murmur3Partitioner.partitionFor(e.key, 4)).foreach { case (part, es) =>
+      val file = Files.readAllBytes(Paths.get(dir.toString, s"events_p$part.bin"))
+      assert(TaggedCodec.sliceFramed(file).map(TaggedCodec.decode).toSeq == es, s"partition $part")
+    }
     val decoded = spark.read.format("binaryFile").load(dir.toString)
       .select("content").as[Array[Byte]]
       .flatMap(c => TaggedCodec.sliceFramed(c).map(TaggedCodec.decode))
