@@ -157,7 +157,7 @@ object NexmarkMain {
       import spark.implicits._
       NexmarkSources.produceToPartitionFiles(
         spark.range(rows.toLong).map(NexmarkGen.event(cfg, _)), numPartitions = 4, dir)
-      val ev = spark.read.format("binaryFile").load(s"$dir/events_p*.bin")
+      val ev = spark.read.format("binaryFile").option("pathGlobFilter", "events_p*.bin").load(dir)
         .select("content").as[Array[Byte]]
         .flatMap(c => TaggedCodec.sliceFramed(c).map(TaggedCodec.decode))
       NexmarkQueries.q5HotAuctions(NexmarkQueries.bidsFromEvents(ev), "10 seconds").count()
@@ -180,7 +180,7 @@ object NexmarkMain {
     import spark.implicits._
     Files.write(Paths.get(dir, s"${name}_0.bin"),
       BinaryCodec.frameAll(records, perFrame)(encode).flatten.toArray)
-    decode(spark.read.format("binaryFile").load(s"$dir/${name}_*.bin")
+    decode(spark.read.format("binaryFile").option("pathGlobFilter", s"${name}_*.bin").load(dir)
       .select("content").as[Array[Byte]].flatMap(NexmarkSources.sliceFrames), System.currentTimeMillis())
   }
   private def personsViaFile(spark: SparkSession, dir: String, cfg: GenConfig, n: Int) =

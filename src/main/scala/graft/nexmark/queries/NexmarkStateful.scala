@@ -30,7 +30,19 @@ object NexmarkStateful {
 
   // ---- Q5: per-auction one-shot window aggregate (A1) ----
 
-  case class Q5Acc(maxPrice: Double, count: Long, lastTs: Long, lastIngest: Long)
+  /** NexmarkQuery5.java:444-483 accumulator: max price, bid count and the
+    * latest (timestamp, ingestionTimestamp). `add` is the per-bid fold
+    * (:461-480), `merge` the partial combine (:402-422); the stamps start
+    * at Long.MinValue so [[Q5Acc.Zero]] is the identity of both. */
+  case class Q5Acc(maxPrice: Double, count: Long, lastTs: Long, lastIngest: Long) {
+    def add(b: Bid): Q5Acc = Q5Acc(math.max(maxPrice, b.bid), count + 1,
+      math.max(lastTs, b.timestamp), math.max(lastIngest, b.ingestionTimestamp))
+    def merge(o: Q5Acc): Q5Acc = Q5Acc(math.max(maxPrice, o.maxPrice), count + o.count,
+      math.max(lastTs, o.lastTs), math.max(lastIngest, o.lastIngest))
+  }
+  object Q5Acc {
+    val Zero: Q5Acc = Q5Acc(Double.MinValue, 0L, Long.MinValue, Long.MinValue)
+  }
 
   /** NexmarkQuery5.java:201-251: accumulate max/count/latest per auctionId;
     * one event-time timer flushes and removes the accumulator.
@@ -55,15 +67,7 @@ object NexmarkStateful {
               auctionId, acc.maxPrice, acc.count, acc.lastTs, acc.lastIngest,
               state.getCurrentWatermarkMs()))
           } else {
-            var acc = state.getOption.getOrElse(Q5Acc(Double.MinValue, 0L, 0L, 0L))
-            rows.foreach { b =>
-              // NexmarkQuery5.java:461-480: max price, count, latest stamps
-              acc = Q5Acc(
-                math.max(acc.maxPrice, b.bid), acc.count + 1,
-                math.max(acc.lastTs, b.timestamp),
-                math.max(acc.lastIngest, b.ingestionTimestamp))
-            }
-            state.update(acc)
+            state.update(rows.foldLeft(state.getOption.getOrElse(Q5Acc.Zero))(_ add _))
             // absolute-duration timer quirk, clamped to the watermark floor
             state.setTimeoutTimestamp(
               math.max(windowDurationMs, state.getCurrentWatermarkMs() + 1))
@@ -96,14 +100,7 @@ object NexmarkStateful {
               auctionId, acc.maxPrice, acc.count, acc.lastTs, acc.lastIngest,
               System.currentTimeMillis()))
           } else {
-            var acc = state.getOption.getOrElse(Q5Acc(Double.MinValue, 0L, 0L, 0L))
-            rows.foreach { b =>
-              acc = Q5Acc(
-                math.max(acc.maxPrice, b.bid), acc.count + 1,
-                math.max(acc.lastTs, b.timestamp),
-                math.max(acc.lastIngest, b.ingestionTimestamp))
-            }
-            state.update(acc)
+            state.update(rows.foldLeft(state.getOption.getOrElse(Q5Acc.Zero))(_ add _))
             state.setTimeoutDuration(flushIntervalMs)
             Iterator.empty
           }
@@ -260,6 +257,19 @@ object NexmarkStateful {
   /** Tagged union of bids and auctions keyed by auctionId. */
   case class AB(auctionId: Long, isAuction: Boolean, end: Long,
                 bidder: Long, price: Double, ts: Long)
+
+  /** Bids and auctions as one [[AB]] stream, event time `ts` under a 2 s
+    * watermark: the input of both QX winning-bid ports. */
+  def bidsAndAuctions(bids: Dataset[Bid], auctions: Dataset[Auction]): Dataset[AB] = {
+    import bids.sparkSession.implicits._
+    val b = bids.map(x => AB(x.auctionId, isAuction = false, -1L, x.personId, x.bid, x.timestamp))
+    val a = auctions.map(x => AB(x.auctionId, isAuction = true, x.end, -1L, -1.0, x.timestamp))
+    b.unionByName(a).toDF
+      .withColumn("eventTime", timestamp_millis(col("ts")))
+      .withWatermark("eventTime", "2 seconds")
+      .as[AB]
+  }
+
   case class QXState(end: Long, hasAuction: Boolean,
                      bestPrice: Double, bestBidder: Long, bestTs: Long, hasBid: Boolean,
                      backupDeadlineMs: Long = Long.MaxValue)
@@ -292,13 +302,7 @@ object NexmarkStateful {
                  backupTimeoutMs: Long = QXBackupTimeoutMs,
                  now: () => Long = () => System.currentTimeMillis()): Dataset[WinningBid] = {
     import bids.sparkSession.implicits._
-    val b = bids.map(x => AB(x.auctionId, isAuction = false, -1L, x.personId, x.bid, x.timestamp))
-    val a = auctions.map(x => AB(x.auctionId, isAuction = true, x.end, -1L, -1.0, x.timestamp))
-    val withTime = b.unionByName(a).toDF
-      .withColumn("eventTime", timestamp_millis(col("ts")))
-      .withWatermark("eventTime", "2 seconds")
-      .as[AB]
-    withTime
+    bidsAndAuctions(bids, auctions)
       .groupByKey(_.auctionId)
       .flatMapGroupsWithState[QXState, WinningBid](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {

@@ -141,13 +141,7 @@ object NexmarkTws {
   def qxWinningBidsTws(bids: Dataset[Bid], auctions: Dataset[Auction],
                        purgeHorizonMs: Long = NexmarkStateful.QXBackupTimeoutMs): Dataset[WinningBid] = {
     import bids.sparkSession.implicits._
-    val b = bids.map(x => AB(x.auctionId, isAuction = false, -1L, x.personId, x.bid, x.timestamp))
-    val a = auctions.map(x => AB(x.auctionId, isAuction = true, x.end, -1L, -1.0, x.timestamp))
-    val withTime = b.unionByName(a).toDF
-      .withColumn("eventTime", timestamp_millis(col("ts")))
-      .withWatermark("eventTime", "2 seconds")
-      .as[AB]
-    withTime
+    NexmarkStateful.bidsAndAuctions(bids, auctions)
       .groupByKey(_.auctionId)
       .transformWithState(new QxWinningBidProcessor(purgeHorizonMs),
         TimeMode.EventTime(), OutputMode.Append(), Encoders.product[WinningBid])

@@ -3,6 +3,7 @@ package graft.nexmark.queries
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import graft.nexmark._
+import graft.nexmark.queries.NexmarkStateful.Q5Acc
 
 /** Typed-API ports of the remaining SURVEY §2.8 rows:
   *
@@ -19,24 +20,16 @@ import graft.nexmark._
   */
 object NexmarkTyped {
 
-  /** NexmarkQuery5.java:444-483 accumulator shape. */
-  case class Q4Acc(maxPrice: Double, count: Long, lastTs: Long, lastIngest: Long)
-
   /** NexmarkQuery5.java:402-422: add/merge keep max price, count, and the
-    * latest (timestamp, ingestionTimestamp).
+    * latest (timestamp, ingestionTimestamp) — the stateful ports' [[Q5Acc]].
     */
-  class Query4Aggregator extends Aggregator[Bid, Q4Acc, Query5Output] {
-    override def zero: Q4Acc = Q4Acc(Double.MinValue, 0L, Long.MinValue, Long.MinValue)
-    override def reduce(acc: Q4Acc, b: Bid): Q4Acc = Q4Acc(
-      math.max(acc.maxPrice, b.bid), acc.count + 1,
-      math.max(acc.lastTs, b.timestamp),
-      math.max(acc.lastIngest, b.ingestionTimestamp))
-    override def merge(a: Q4Acc, b: Q4Acc): Q4Acc = Q4Acc(
-      math.max(a.maxPrice, b.maxPrice), a.count + b.count,
-      math.max(a.lastTs, b.lastTs), math.max(a.lastIngest, b.lastIngest))
-    override def finish(acc: Q4Acc): Query5Output =
+  class Query4Aggregator extends Aggregator[Bid, Q5Acc, Query5Output] {
+    override def zero: Q5Acc = Q5Acc.Zero
+    override def reduce(acc: Q5Acc, b: Bid): Q5Acc = acc.add(b)
+    override def merge(a: Q5Acc, b: Q5Acc): Q5Acc = a.merge(b)
+    override def finish(acc: Q5Acc): Query5Output =
       Query5Output(-1L, acc.maxPrice, acc.count, acc.lastTs, acc.lastIngest, -1L)
-    override def bufferEncoder: Encoder[Q4Acc] = Encoders.product[Q4Acc]
+    override def bufferEncoder: Encoder[Q5Acc] = Encoders.product[Q5Acc]
     override def outputEncoder: Encoder[Query5Output] = Encoders.product[Query5Output]
   }
 

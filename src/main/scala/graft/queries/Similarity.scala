@@ -488,43 +488,70 @@ object Similarity extends QueryModule {
        |)""".stripMargin + RangeAuditSqlTail
   }
 
-  /** IVF-style ANN: assign every vector to its nearest of the deterministic
-    * coarse centroids; for each query probe the NProbe nearest cells and
-    * rank only vectors in those cells.
-    *
-    * Cell assignment is an argmax, so it runs as a `max_by` hash aggregate
-    * with map-side partial aggregation — NOT a `row_number` sort-window,
-    * which would shuffle+sort the full N×K vector×centroid similarity
-    * table. The probe set (top-NProbe cells per *query*) only touches the
-    * 1/QueryMod query subset, so the similarity map is recomputed for that
-    * branch instead of persisted: both branches are shuffle-free map work
-    * against broadcast centroids, and recomputing N×K/QueryMod rows is far
-    * cheaper than caching N×K rows across the whole job.
-    */
-  /** IVF candidate generation shared by [[knnIvf]] and [[knnIvfPq]]:
-    * (query_id, vec_id) pairs where vec_id sits in one of the query's
-    * NProbe nearest coarse cells (self excluded).
-    *
-    * Cell assignment is an argmax over (cos, -cid) = highest cos, ties to
-    * the lowest cid — same total order as the oracle's row_number. The
-    * struct ordering key puts a struct in the aggregation buffer, so this
-    * plans as a SortAggregate rather than a HashAggregate — still with
-    * map-side PARTIAL aggregation, so only K≪N×K pre-reduced rows per
-    * partition reach the shuffle (the property that matters at scale; the
-    * row_number window this replaced shuffled and sorted all N×K rows).
-    * This is a REVIEWED SortAggregate: the entries whose final plan
-    * carries it are explicitly allowlisted in PlanSweepSpec, which bans
-    * the node everywhere else.
-    * The probe set (top-NProbe cells per *query*) only touches the
-    * 1/QueryMod query subset, so the similarity map is recomputed for that
-    * branch instead of persisted: both branches are shuffle-free map work
-    * against broadcast centroids.
-    */
-  /** The deterministic pivot cells every IVF oracle is keyed to. */
+  /** The deterministic pivot cells every IVF oracle is keyed to (and the
+    * k-means seed cells). */
   private def pivotCentroids(e: DataFrame): DataFrame =
     e.filter(col("vec_id") % CentroidMod === 0)
       .select(col("vec_id").as("cid"), col("emb").as("cemb"))
 
+  /** Cosine `cos` of each row's `emb` column to the `cemb` of each centroid
+    * of `cent` (cid, cemb, partition columns), all columns of both sides
+    * kept. The centroids always broadcast: with `part` a point meets only
+    * the centroids sharing those columns (a USING join), with `on` those
+    * matching the condition, and with neither every centroid (a cross
+    * join). Every IVF cell decision ranks centroids by this projection.
+    */
+  private[graft] def centroidCos(pts: DataFrame, cent: DataFrame, emb: String = "emb",
+                                 part: Seq[String] = Nil, on: Option[Column] = None): DataFrame = {
+    val c = broadcast(cent)
+    on.map(pts.join(c, _)).getOrElse(if (part.isEmpty) pts.crossJoin(c) else pts.join(c, part))
+      .withColumn("cos", cosine(col(emb), col("cemb")))
+  }
+
+  /** Each vec_id's cell (vec_id, cid) over [[centroidCos]] rows: an
+    * argmax over (cos, -cid) = highest cos, ties to the lowest cid — same
+    * total order as the oracle's row_number. The struct ordering key puts
+    * a struct in the aggregation buffer, so this plans as a SortAggregate
+    * rather than a HashAggregate — still with map-side PARTIAL
+    * aggregation, so only K≪N×K pre-reduced rows per partition reach the
+    * shuffle (the property that matters at scale; the row_number window
+    * this replaced shuffled and sorted all N×K rows). This is a REVIEWED
+    * SortAggregate: the entries whose final plan carries it are
+    * explicitly allowlisted in PlanSweepSpec, which bans the node
+    * everywhere else.
+    */
+  private[graft] def nearestCell(sims: DataFrame): DataFrame =
+    sims.groupBy(col("vec_id"))
+      .agg(max_by(col("cid"), struct(col("cos"), negate(col("cid")))).as("cid"))
+
+  /** The `n` cells of highest cos per `key` over [[centroidCos]] rows,
+    * ordered cos desc, cid asc (the oracle's probe order), one (`as`, cid)
+    * row per cell; `ranked` adds each cell's 1-based probe rank as
+    * `np_min`. The K entries per group are sorted in the aggregate's output
+    * (ascending (-cos, cid)) and sliced to `n`: no sort-window, no shuffle
+    * of the K×queries similarity rows.
+    */
+  private[graft] def topCells(sims: DataFrame, n: Int, key: String = "vec_id",
+                              as: String = "query_id", ranked: Boolean = false): DataFrame = {
+    val top = sims.groupBy(col(key))
+      .agg(slice(array_sort(collect_list(struct(negate(col("cos")).as("ncos"), col("cid")))),
+                 1, n).as("top"))
+    if (ranked)
+      top.select(col(key).as(as), posexplode(col("top")).as(Seq("pos", "c")))
+        .select(col(as), col("c.cid").as("cid"), (col("pos") + 1).cast("long").as("np_min"))
+    else top.select(col(key).as(as), explode(col("top.cid")).as("cid"))
+  }
+
+  /** IVF-style ANN candidate generation shared by [[knnIvf]] and
+    * [[knnIvfPq]]: every vector is assigned to its nearest coarse cell, each
+    * query probes its NProbe nearest cells, and the output is the
+    * (query_id, vec_id) pairs where vec_id sits in a probed cell (self
+    * excluded). The probe set only touches the 1/QueryMod query subset, so
+    * the similarity map is recomputed for that branch instead of
+    * persisted: both branches are shuffle-free map work against broadcast
+    * centroids, and recomputing N×K/QueryMod rows is far cheaper than
+    * caching N×K rows across the whole job.
+    */
   private def ivfCandidates(e: DataFrame): DataFrame =
     ivfCandidates(e, pivotCentroids(e))
 
@@ -532,20 +559,8 @@ object Similarity extends QueryModule {
     ivfCandidates(e, cent, NProbe)
 
   private def ivfCandidates(e: DataFrame, cent: DataFrame, nprobe: Int): DataFrame = {
-    def simsOf(df: DataFrame): DataFrame = df
-      .select(col("vec_id"), col("emb"))
-      .crossJoin(broadcast(cent))
-      .withColumn("cos", cosine(col("emb"), col("cemb")))
-      .select(col("vec_id"), col("cid"), col("cos"))
-    val assign = simsOf(e).groupBy(col("vec_id"))
-      .agg(max_by(col("cid"), struct(col("cos"), negate(col("cid")))).as("cid"))
-    // top-NProbe cells per query: K entries per group, sorted in the agg
-    // output (ascending (-cos, cid) = cos desc, cid asc), sliced to NProbe.
-    val probes = simsOf(e.filter(col("vec_id") % QueryMod === 0))
-      .groupBy(col("vec_id"))
-      .agg(slice(array_sort(collect_list(struct(negate(col("cos")).as("ncos"), col("cid")))),
-                 1, nprobe).as("top"))
-      .select(col("vec_id").as("query_id"), explode(col("top.cid")).as("cid"))
+    val assign = nearestCell(centroidCos(e, cent))
+    val probes = topCells(centroidCos(e.filter(col("vec_id") % QueryMod === 0), cent), nprobe)
     probes.join(assign, "cid")
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"))
@@ -1582,17 +1597,16 @@ object Similarity extends QueryModule {
       .groupBy(col("cid"))
       .agg(expr("transform(array_sort(collect_list(struct(dim, coord))), s -> s.coord)").as("cemb"))
 
-  private def kmeansInit(e: DataFrame): DataFrame =
-    e.filter(col("vec_id") % CentroidMod === 0)
-      .select(col("vec_id").as("cid"), col("emb").as("cemb"))
+  /** The fixed-[[KmeansAssignRounds]] assignment (vec_id, cid, d2) the
+    * `s_kmeans` gate pins, seeded from the pivot cells. */
+  private def kmeansFixed(e: DataFrame): DataFrame =
+    (2 to KmeansAssignRounds).foldLeft(kmeansAssign(e, pivotCentroids(e))) { (assign, _) =>
+      kmeansAssign(e, kmeansMeanUpdate(e, assign))
+    }
 
-  def kmeans(spark: SparkSession, dir: String): DataFrame = {
-    val e = kmeansPrep(spark, dir)
-    var assign = kmeansAssign(e, kmeansInit(e))
-    for (_ <- 2 to KmeansAssignRounds) assign = kmeansAssign(e, kmeansMeanUpdate(e, assign))
-    assign.select(col("vec_id"), col("cid").as("cluster_id"),
+  def kmeans(spark: SparkSession, dir: String): DataFrame =
+    kmeansFixed(kmeansPrep(spark, dir)).select(col("vec_id"), col("cid").as("cluster_id"),
       round(col("d2"), 6).as("d6"))
-  }
 
   /** Per-round convergence trace of [[kmeansConverged]]: how many points
     * changed cluster entering this round, and the round's quantized
@@ -1629,7 +1643,7 @@ object Similarity extends QueryModule {
     require(maxRounds >= 1)
     val e = kmeansPrep(spark, dir)
     val iqCol = expr(s"SUM(CAST(ROUND(d2 * $KmeansQ) AS BIGINT))")
-    var assign = kmeansAssign(e, kmeansInit(e)).localCheckpoint(false)
+    var assign = kmeansAssign(e, pivotCentroids(e)).localCheckpoint(false)
     val first = assign.agg(count(lit(1)), iqCol).head
     val trace = scala.collection.mutable.ArrayBuffer(
       KmeansRound(1, first.getLong(0), first.getLong(1)))
@@ -1765,21 +1779,11 @@ object Similarity extends QueryModule {
   def probeCurve(spark: SparkSession, dir: String): DataFrame = {
     val e = vecs(spark, dir)
     val cent = pivotCentroids(e)
-    def simsOf(df: DataFrame): DataFrame = df
-      .select(col("vec_id"), col("emb"))
-      .crossJoin(broadcast(cent))
-      .withColumn("cos", cosine(col("emb"), col("cemb")))
-      .select(col("vec_id"), col("cid"), col("cos"))
-    val assign = simsOf(e).groupBy(col("vec_id"))
-      .agg(max_by(col("cid"), struct(col("cos"), negate(col("cid")))).as("cid"))
+    val assign = nearestCell(centroidCos(e, cent))
     val q = e.filter(col("vec_id") % QueryMod === 0)
       .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
-    val probes = simsOf(e.filter(col("vec_id") % QueryMod === 0))
-      .groupBy(col("vec_id"))
-      .agg(slice(array_sort(collect_list(struct(negate(col("cos")).as("ncos"), col("cid")))),
-                 1, MaxProbeCurve).as("top"))
-      .select(col("vec_id").as("query_id"), posexplode(col("top")).as(Seq("pos", "c")))
-      .select(col("query_id"), col("c.cid").as("cid"), (col("pos") + 1).cast("long").as("np_min"))
+    val probes = topCells(centroidCos(e.filter(col("vec_id") % QueryMod === 0), cent),
+      MaxProbeCurve, ranked = true)
     val scored = probes.join(assign, "cid")
       .filter(col("vec_id") =!= col("query_id"))
       .join(e.select(col("vec_id"), col("emb").as("cemb")), "vec_id")
@@ -1959,9 +1963,7 @@ object Similarity extends QueryModule {
     */
   def semanticDedup(spark: SparkSession, dir: String): DataFrame = {
     val e = kmeansPrep(spark, dir)
-    var assign = kmeansAssign(e, kmeansInit(e))
-    for (_ <- 2 to KmeansAssignRounds) assign = kmeansAssign(e, kmeansMeanUpdate(e, assign))
-    val m = assign.select(col("vec_id"), col("cid"))
+    val m = kmeansFixed(e).select(col("vec_id"), col("cid"))
       .join(e.select(col("vec_id"), col("emb")), "vec_id")
       .localCheckpoint(true)
     val pairs = m.select(col("cid"), col("vec_id").as("vec_a"), col("emb").as("qemb"))
@@ -2563,17 +2565,9 @@ object Similarity extends QueryModule {
     */
   def knnGraph(spark: SparkSession, dir: String): DataFrame = {
     val e = vecs(spark, dir)
-    val cent = pivotCentroids(e)
-    val sims = e.select(col("vec_id"), col("emb"))
-      .crossJoin(broadcast(cent))
-      .withColumn("cos", cosine(col("emb"), col("cemb")))
-      .select(col("vec_id"), col("cid"), col("cos"))
-    val assign = sims.groupBy(col("vec_id"))
-      .agg(max_by(col("cid"), struct(col("cos"), negate(col("cid")))).as("cid"))
-    val probes = sims.groupBy(col("vec_id"))
-      .agg(slice(array_sort(collect_list(struct(negate(col("cos")).as("ncos"), col("cid")))),
-                 1, NProbe).as("top"))
-      .select(col("vec_id").as("query_id"), explode(col("top.cid")).as("cid"))
+    val sims = centroidCos(e, pivotCentroids(e))
+    val assign = nearestCell(sims)
+    val probes = topCells(sims, NProbe)
     // pinned-cell occupancy is CentroidMod, so candidates ≈ N·NProbe·Mod
     // ([[Sizing.spreadShuffled]]: the scoring pass fans out over the
     // cores; keyed by query_id, it re-keys the DISTINCT's own exchange)
@@ -2654,16 +2648,9 @@ object Similarity extends QueryModule {
     val cent = e.crossJoin(broadcast(nFrame))
       .filter(expr("vec_id % greatest(CAST(FLOOR(SQRT(CAST(n AS DOUBLE))) AS BIGINT), CAST(1 AS BIGINT)) = 0"))
       .select(col("vec_id").as("cid"), col("emb").as("cemb"))
-    val sims = e.select(col("vec_id"), col("emb"))
-      .crossJoin(broadcast(cent))
-      .withColumn("cos", cosine(col("emb"), col("cemb")))
-      .select(col("vec_id"), col("cid"), col("cos"))
-    val assign = sims.groupBy(col("vec_id"))
-      .agg(max_by(col("cid"), struct(col("cos"), negate(col("cid")))).as("cid"))
-    val probes = sims.groupBy(col("vec_id"))
-      .agg(slice(array_sort(collect_list(struct(negate(col("cos")).as("ncos"), col("cid")))),
-                 1, NProbe).as("top"))
-      .select(col("vec_id").as("query_id"), explode(col("top.cid")).as("cid"))
+    val sims = centroidCos(e, cent)
+    val assign = nearestCell(sims)
+    val probes = topCells(sims, NProbe)
     val nFetch = Tables.tableRows(spark, dir, "embeddings")
     // candidate volume ≈ N·NProbe·√N (the build rule this entry encodes).
     // Both sides grow with N, so the strategy is fixed from N, not left to
@@ -2991,26 +2978,13 @@ object Similarity extends QueryModule {
     val isDelta = col("vec_id") % DeltaMod === DeltaRem
     val baseCent = e.filter(col("vec_id") % CentroidMod === 0 && !isDelta)
       .select(col("vec_id").as("cid"), col("emb").as("cemb"))
-    def assignOf(df: DataFrame): DataFrame = df
-      .select(col("vec_id"), col("emb"))
-      .crossJoin(broadcast(baseCent))
-      .withColumn("cos", cosine(col("emb"), col("cemb")))
-      .groupBy(col("vec_id"))
-      .agg(max_by(col("cid"), struct(col("cos"), negate(col("cid")))).as("cid"))
     // the ingest dataflow: yesterday's postings ∪ today's delta, both
     // keyed to the SAME (base) cell set
-    val postings = assignOf(e.filter(!isDelta))
-      .unionByName(assignOf(e.filter(isDelta)))
+    val postings = nearestCell(centroidCos(e.filter(!isDelta), baseCent))
+      .unionByName(nearestCell(centroidCos(e.filter(isDelta), baseCent)))
     val q = e.filter(col("vec_id") % QueryMod === 0)
       .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
-    val probes = e.filter(col("vec_id") % QueryMod === 0)
-      .select(col("vec_id"), col("emb"))
-      .crossJoin(broadcast(baseCent))
-      .withColumn("cos", cosine(col("emb"), col("cemb")))
-      .groupBy(col("vec_id"))
-      .agg(slice(array_sort(collect_list(struct(negate(col("cos")).as("ncos"), col("cid")))),
-                 1, NProbe).as("top"))
-      .select(col("vec_id").as("query_id"), explode(col("top.cid")).as("cid"))
+    val probes = topCells(centroidCos(e.filter(col("vec_id") % QueryMod === 0), baseCent), NProbe)
     val cands = probes.join(postings, "cid")
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"))
@@ -3137,23 +3111,10 @@ object Similarity extends QueryModule {
     val e = vecs(spark, dir)
     val tomb = tombstones(spark, dir)
     val cent = pivotCentroids(e)
-    def assignOf(df: DataFrame): DataFrame = df
-      .select(col("vec_id"), col("emb"))
-      .crossJoin(broadcast(cent))
-      .withColumn("cos", cosine(col("emb"), col("cemb")))
-      .groupBy(col("vec_id"))
-      .agg(max_by(col("cid"), struct(col("cos"), negate(col("cid")))).as("cid"))
-    val postings = assignOf(e) // the pre-delete index
+    val postings = nearestCell(centroidCos(e, cent)) // the pre-delete index
     val q = e.filter(col("vec_id") % QueryMod === 0)
       .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
-    val probes = e.filter(col("vec_id") % QueryMod === 0)
-      .select(col("vec_id"), col("emb"))
-      .crossJoin(broadcast(cent))
-      .withColumn("cos", cosine(col("emb"), col("cemb")))
-      .groupBy(col("vec_id"))
-      .agg(slice(array_sort(collect_list(struct(negate(col("cos")).as("ncos"), col("cid")))),
-                 1, NProbe).as("top"))
-      .select(col("vec_id").as("query_id"), explode(col("top.cid")).as("cid"))
+    val probes = topCells(centroidCos(e.filter(col("vec_id") % QueryMod === 0), cent), NProbe)
     val cands = probes.join(postings, "cid")
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"))
@@ -3275,19 +3236,15 @@ object Similarity extends QueryModule {
     * incremental-ingest union) joins on cid without reshuffling the
     * corpus: the "pay one shuffle at write time" lever ScalePlanSpec
     * proves for the relational tables, applied to the ANN index.
-    * Assignment is the same broadcast-centroid argmax as
-    * [[ivfCandidates]] (its SortAggregate lives in the build job, which
-    * is OUTSIDE every serve plan — the point of the split).
+    * Assignment is [[nearestCell]], as in [[ivfCandidates]] (its
+    * SortAggregate lives in the build job, which is OUTSIDE every serve
+    * plan — the point of the split).
     */
   private[graft] def buildIvfIndex(spark: SparkSession, dir: String): Unit = {
     val (centT, postT) = ivfIndexTables(dir)
     val e = vecs(spark, dir)
     val cent = pivotCentroids(e)
-    val assign = e.select(col("vec_id"), col("emb"))
-      .crossJoin(broadcast(cent))
-      .withColumn("cos", cosine(col("emb"), col("cemb")))
-      .groupBy(col("vec_id"))
-      .agg(max_by(col("cid"), struct(col("cos"), negate(col("cid")))).as("cid"))
+    val assign = nearestCell(centroidCos(e, cent))
     cent.write.mode("overwrite")
       .option("path", s"target/graft_index/${dir.replaceAll("[^A-Za-z0-9]", "_")}/centroids")
       .saveAsTable(centT)
@@ -3346,12 +3303,7 @@ object Similarity extends QueryModule {
     val cent = spark.table(centT)
     val q = vecs(spark, dir).filter(col("vec_id") % QueryMod === 0)
       .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
-    val probes = q.crossJoin(broadcast(cent))
-      .withColumn("cos", cosine(col("qemb"), col("cemb")))
-      .groupBy(col("query_id"))
-      .agg(slice(array_sort(collect_list(struct(negate(col("cos")).as("ncos"), col("cid")))),
-                 1, NProbe).as("top"))
-      .select(col("query_id"), explode(col("top.cid")).as("cid"))
+    val probes = topCells(centroidCos(q, cent, emb = "qemb"), NProbe, key = "query_id")
     spark.table(postT)
       .join(broadcast(probes), "cid")
       .filter(col("vec_id") =!= col("query_id"))
@@ -3623,10 +3575,9 @@ object Similarity extends QueryModule {
     val e = vecs(spark, dir).select(col("vec_id"), col("emb"))
     val q = e.filter(col("vec_id") % QueryMod === 0)
       .select(col("vec_id").as("query_id"), col("emb").as("qemb"))
-    val seedScored = q.crossJoin(broadcast(pivotCentroids(e)))
+    val seedScored = centroidCos(q, pivotCentroids(e), emb = "qemb")
       .filter(col("cid") =!= col("query_id"))
-      .select(col("query_id"), col("cid").as("vec_id"),
-        round(cosine(col("qemb"), col("cemb")), 6).as("cos6"))
+      .select(col("query_id"), col("cid").as("vec_id"), round(col("cos"), 6).as("cos6"))
     saltedTopN(seedScored, SeedN, col("cos6").desc_nulls_last, col("vec_id").asc)
       .select(col("query_id"), col("vec_id"), col("cos6"))
   }
@@ -3905,17 +3856,9 @@ object Similarity extends QueryModule {
     val partCent = e.join(broadcast(mn), "label")
       .filter(col("vec_id") % CentroidMod === 0 || col("vec_id") === col("mn"))
       .select(col("label"), col("vec_id").as("cid"), col("emb").as("cemb"))
-    def psimsOf(df: DataFrame): DataFrame = df
-      .join(broadcast(partCent), "label")
-      .withColumn("cos", cosine(col("emb"), col("cemb")))
-      .select(col("vec_id"), col("cid"), col("cos"))
-    val passign = psimsOf(e).groupBy(col("vec_id"))
-      .agg(max_by(col("cid"), struct(col("cos"), negate(col("cid")))).as("cid"))
-    val pprobes = psimsOf(e.filter(col("vec_id") % QueryMod === 0))
-      .groupBy(col("vec_id"))
-      .agg(slice(array_sort(collect_list(struct(negate(col("cos")).as("ncos"), col("cid")))),
-                 1, NProbe).as("top"))
-      .select(col("vec_id").as("query_id"), explode(col("top.cid")).as("cid"))
+    val passign = nearestCell(centroidCos(e, partCent, part = Seq("label")))
+    val pprobes = topCells(
+      centroidCos(e.filter(col("vec_id") % QueryMod === 0), partCent, part = Seq("label")), NProbe)
     // cids are label-disjoint, so the cid join already implies label match
     val partCands = pprobes.join(passign, "cid")
       .filter(col("vec_id") =!= col("query_id"))
@@ -4201,16 +4144,14 @@ object Similarity extends QueryModule {
     val bcent = bm.join(broadcast(bmn), "bkt")
       .filter(col("vec_id") % col("stride") === 0 || col("vec_id") === col("mn"))
       .select(col("bkt"), col("vec_id").as("cid"), col("emb").as("cemb"))
-    val bassign = bm.join(broadcast(bcent), "bkt")
-      .withColumn("cos", cosine(col("emb"), col("cemb")))
-      .groupBy(col("vec_id"))
-      .agg(max_by(col("cid"), struct(col("cos"), negate(col("cid")))).as("cid"))
-    val qprobes = qr.crossJoin(broadcast(stats))
+    val bassign = nearestCell(centroidCos(bm, bcent, part = Seq("bkt")))
+    val qBudget = qr.crossJoin(broadcast(stats))
       .withColumn("nov", expr("hi div w - lo div w + 1"))
       .withColumn("wb", expr(s"greatest($NProbe, ($FilteredNProbe + nov - 1) div nov)"))
-      .join(broadcast(bcent),
-        col("bkt") >= expr("lo div w") && col("bkt") <= expr("hi div w"))
-      .withColumn("cos", cosine(col("qemb"), col("cemb")))
+    // own probe-list aggregate, not topCells: the list is per (query,
+    // bucket) and its cut is the query's budget wb, a column, not one n
+    val qprobes = centroidCos(qBudget, bcent, emb = "qemb",
+        on = Some(col("bkt") >= expr("lo div w") && col("bkt") <= expr("hi div w")))
       .groupBy(col("query_id"), col("bkt"))
       .agg(array_sort(collect_list(struct(negate(col("cos")).as("ncos"), col("cid")))).as("top"),
         max(col("wb")).as("wb")) // wb is constant per query
@@ -4470,20 +4411,8 @@ object Similarity extends QueryModule {
     val segCands = (0 until SegMod).map { s =>
       val segCent = e.filter(col("vec_id") % (SegMod * CentroidMod) === s)
         .select(col("vec_id").as("cid"), col("emb").as("cemb"))
-      val assign = e.filter(col("vec_id") % SegMod === s)
-        .select(col("vec_id"), col("emb"))
-        .crossJoin(broadcast(segCent))
-        .withColumn("cos", cosine(col("emb"), col("cemb")))
-        .groupBy(col("vec_id"))
-        .agg(max_by(col("cid"), struct(col("cos"), negate(col("cid")))).as("cid"))
-      val probes = e.filter(col("vec_id") % QueryMod === 0)
-        .select(col("vec_id"), col("emb"))
-        .crossJoin(broadcast(segCent))
-        .withColumn("cos", cosine(col("emb"), col("cemb")))
-        .groupBy(col("vec_id"))
-        .agg(slice(array_sort(collect_list(struct(negate(col("cos")).as("ncos"), col("cid")))),
-                   1, NProbe).as("top"))
-        .select(col("vec_id").as("query_id"), explode(col("top.cid")).as("cid"))
+      val assign = nearestCell(centroidCos(e.filter(col("vec_id") % SegMod === s), segCent))
+      val probes = topCells(centroidCos(e.filter(col("vec_id") % QueryMod === 0), segCent), NProbe)
       probes.join(assign, "cid")
         .filter(col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id"))
@@ -4626,9 +4555,9 @@ object Similarity extends QueryModule {
     val cent = pivotCentroids(e)
     val emb = e.select(col("vec_id"), col("emb"))
     // (vec_id, cid, cos6c): each vector's cell + rounded cos to centroid
-    val members = emb
-      .crossJoin(broadcast(cent))
-      .withColumn("cos", cosine(col("emb"), col("cemb")))
+    // own argmax, not nearestCell: it carries the winner's rounded cos,
+    // which a join back to the cosines would add a stage to recover
+    val members = centroidCos(emb, cent)
       .groupBy(col("vec_id"))
       .agg(max_by(struct(col("cid"), round(col("cos"), 6).as("cos6c")),
                   struct(col("cos"), negate(col("cid")))).as("m"))
@@ -4756,18 +4685,8 @@ object Similarity extends QueryModule {
     val v = Tables.tableRows(spark, dir, "embeddings")
     val e = vecs(spark, dir)
     val cent = pivotCentroids(e)
-    def simsOf(df: DataFrame): DataFrame = df
-      .select(col("vec_id"), col("emb"))
-      .crossJoin(broadcast(cent))
-      .withColumn("cos", cosine(col("emb"), col("cemb")))
-      .select(col("vec_id"), col("cid"), col("cos"))
-    val probes = simsOf(e).groupBy(col("vec_id"))
-      .agg(slice(array_sort(collect_list(struct(negate(col("cos")).as("ncos"), col("cid")))),
-                 1, NProbe).as("top"))
-      .select(col("vec_id").as("qv"), explode(col("top.cid")).as("cid"))
-      .localCheckpoint(true)
-    val assign = simsOf(e).groupBy(col("vec_id"))
-      .agg(max_by(col("cid"), struct(col("cos"), negate(col("cid")))).as("cid"))
+    val probes = topCells(centroidCos(e, cent), NProbe, as = "qv").localCheckpoint(true)
+    val assign = nearestCell(centroidCos(e, cent))
     val cells = assign.join(e.select(col("vec_id"), col("emb").as("cemb")), "vec_id")
       .select(col("cid"), col("vec_id"), col("cemb"))
       .localCheckpoint(true)

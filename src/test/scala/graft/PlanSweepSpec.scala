@@ -52,25 +52,25 @@ class PlanSweepSpec extends SparkSpec {
     * max-then-join-back second pass shuffles the full N×K similarity
     * table, while the SortAggregate keeps map-side partials and ships
     * only one pre-reduced row per group (rationale in the
-    * `ivfCandidates` scaladoc, Similarity.scala). */
+    * `nearestCell` scaladoc, Similarity.scala). */
   private val sortAggAllowed: Map[String, String] = Map(
-    "s_knn_ivf" -> "IVF cell-assignment argmax over (cos, -cid) — ivfCandidates scaladoc",
+    "s_knn_ivf" -> "IVF cell-assignment argmax over (cos, -cid) — nearestCell scaladoc",
     "s_knn_ivfpq" -> "ivfCandidates assignment + PQ code argmin over (d2, code)",
     "s_knn_pq" -> "PQ code-assignment argmin over (d2, code)",
     "s_kmeans" -> "Lloyd's assignment argmin over (d2, cid)",
-    "s_knn_graph" -> "IVF cell-assignment argmax (same ivfCandidates rationale) over the full corpus",
+    "s_knn_graph" -> "IVF cell-assignment argmax (nearestCell rationale) over the full corpus",
     "s_knn_graph_scaled" -> "same build argmax as s_knn_graph, sqrt(N)-stride centroids",
     "s_ood_outliers" -> "contains the s_kmeans assignment subplan (Lloyd's argmin)",
-    "s_incremental_index" -> "base/delta cell-assignment argmax over (cos, -cid) — ivfCandidates rationale",
-    "s_index_delete" -> "cell-assignment argmax over (cos, -cid) — ivfCandidates rationale",
+    "s_incremental_index" -> "base/delta cell-assignment argmax over (cos, -cid) — nearestCell rationale",
+    "s_index_delete" -> "cell-assignment argmax over (cos, -cid) — nearestCell rationale",
     "s_knn_pagerank" -> "contains the knnGraph subplan (cell-assignment argmax)",
-    "s_hard_negatives" -> "contains the ivfCandidates assignment argmax (same rationale)",
+    "s_hard_negatives" -> "contains the ivfCandidates assignment argmax (nearestCell rationale)",
     "s_triplet_mine" -> "ivfCandidates assignment + per-anchor pos/neg argmax over (cos6, -vec_id)",
-    "s_knn_filtered" -> "contains the ivfCandidates assignment argmax (same rationale)",
-    "s_knn_range_filtered" -> "global ivfCandidates assignment argmax + per-bucket cell-assignment argmax over (cos, -cid) — same ivfCandidates rationale",
+    "s_knn_filtered" -> "contains the ivfCandidates assignment argmax (nearestCell rationale)",
+    "s_knn_range_filtered" -> "global ivfCandidates assignment argmax + per-bucket cell-assignment argmax over (cos, -cid) — nearestCell rationale",
     "s_serve_ndcg" -> "contains the knnIvf subplan (cell-assignment argmax) as the audited serve",
-    "s_index_merge" -> "per-segment + merged cell-assignment argmax over (cos, -cid) — ivfCandidates rationale",
-    "s_cell_split" -> "cell-assignment argmax over (cos, -cid) — ivfCandidates rationale (seed argmins are BIGINT-packed HashAggregates)",
+    "s_index_merge" -> "per-segment + merged cell-assignment argmax over (cos, -cid) — nearestCell rationale",
+    "s_cell_split" -> "cell-assignment argmax over (cos, -cid) carrying the rounded cos — nearestCell rationale (seed argmins are BIGINT-packed HashAggregates)",
     "s_opq_permute" -> "PQ code-assignment argmin over (d2, code) in BOTH layouts — same pqEncode node class as s_knn_pq")
 
   private val DefaultWidth = 8
