@@ -20,7 +20,8 @@ import org.apache.spark.sql.SparkSession
   * is the one place for them. Hadoop loads it into every `Configuration`,
   * so it also reaches sessions this factory did not build, such as the
   * benchmark's. It registers [[graft.io.LocalCheckpointFileManager]] for
-  * streaming checkpoints and pins `file:` to Hadoop's `LocalFileSystem`.
+  * streaming checkpoints and resolves `file:` to [[graft.io.NioLocalFileSystem]],
+  * Hadoop's `LocalFileSystem` with modes set through java.nio.
   */
 object GraftSession {
 

@@ -18,9 +18,11 @@ import org.apache.spark.sql.internal.SQLConf
   * and state-store commits wait on them. `FileSystem.rename` on a local
   * path is a `File.renameTo` and forks nothing.
   *
-  * `core-site.xml` also pins `file:` to Hadoop's `LocalFileSystem`,
-  * whose rename replaces an existing target, so `overwriteIfPossible`
-  * overwrites as Spark's default manager does.
+  * `core-site.xml` also resolves `file:` to [[NioLocalFileSystem]], a
+  * Hadoop `LocalFileSystem` (not Hive's `ProxyLocalFileSystem`, also on
+  * Spark's classpath): its rename replaces an existing target, so
+  * `overwriteIfPossible` overwrites as Spark's default manager does, and
+  * it creates each file without forking `chmod`.
   *
   * On every other file system it delegates to the manager Spark picks
   * with this class unregistered, so HDFS and object stores keep Spark's

@@ -219,9 +219,9 @@ object StreamingBench extends QueryModule {
     * and commits each of them EVERY micro-batch: ~220 commits of pure
     * overhead per operator at 32 partitions × 7 batches. Each commit
     * writes a delta file, its checksum file and their Hadoop `.crc`
-    * sidecars through [[graft.io.LocalCheckpointFileManager]], which
-    * renames them without forking a process; the `chmod` Hadoop forks per
-    * created file remains. Sizing stores to the actual parallelism is the
+    * sidecars through [[graft.io.LocalCheckpointFileManager]] and
+    * [[graft.io.NioLocalFileSystem]], which create and rename them without
+    * forking a process. Sizing stores to the actual parallelism is the
     * same knob a cluster deployment tunes (state store count ≈ cores, not
     * default-200). Restored after the run so batch queries in the same
     * session keep their own setting.

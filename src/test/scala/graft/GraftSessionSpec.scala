@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 /** The session factory and its scoped-conf helper, plus a structural guard
   * over `src/main`: sessions are built in one place, the thread count is
   * read in one place, partitions are sized in one place ([[Sizing]]), the
-  * checkpoint file manager is registered in one place (`core-site.xml`),
+  * checkpoint file manager and the `file:` file system are registered in
+  * one place (`core-site.xml`),
   * the nexmark generator is read in one place ([[graft.nexmark.NexmarkSources]]),
   * and no measurement-only stream/state knob or one-off probe main comes
   * back. The guard counts source text, so machine load cannot move
@@ -103,23 +104,31 @@ class GraftSessionSpec extends SparkSpec {
 
   private val CheckpointKey = "spark.sql.streaming.checkpointFileManagerClass"
 
-  test("the checkpoint file manager class is set once under src/main, in core-site.xml") {
+  /** Files under `src/main` that mention `key`, with how often. */
+  private def mainFilesSetting(key: String): Map[String, Int] = {
     val root = Paths.get("src", "main")
+    val r = java.util.regex.Pattern.quote(key).r
     val walk = Files.walk(root)
-    val hits =
-      try walk.iterator().asScala.filter(Files.isRegularFile(_)).map { p =>
-        root.relativize(p).toString ->
-          java.util.regex.Pattern.quote(CheckpointKey).r.findAllIn(Files.readString(p)).size
-      }.filter(_._2 > 0).toMap
-      finally walk.close()
-    assert(hits == Map("resources/core-site.xml" -> 1))
+    try walk.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => root.relativize(p).toString -> r.findAllIn(Files.readString(p)).size)
+      .filter(_._2 > 0).toMap
+    finally walk.close()
+  }
+
+  test("the checkpoint file manager class is set once under src/main, in core-site.xml") {
+    assert(mainFilesSetting(CheckpointKey) == Map("resources/core-site.xml" -> 1))
+  }
+
+  test("the file: file system class is set once under src/main, in core-site.xml") {
+    assert(mainFilesSetting("fs.file.impl") == Map("resources/core-site.xml" -> 1))
   }
 
   test("the spec session's Hadoop conf resolves the checkpoint file manager") {
     val conf = spark.sessionState.newHadoopConf()
     assert(conf.get(CheckpointKey) == classOf[graft.io.LocalCheckpointFileManager].getName)
-    // Hadoop's own local file system, not Hive's ProxyLocalFileSystem
-    assert(org.apache.hadoop.fs.FileSystem.get(java.net.URI.create("file:///"), conf).getClass ==
-      classOf[org.apache.hadoop.fs.LocalFileSystem])
+    // Hadoop's local file system with java.nio modes, not Hive's ProxyLocalFileSystem
+    val fs = org.apache.hadoop.fs.FileSystem.get(java.net.URI.create("file:///"), conf)
+    assert(fs.getClass == classOf[graft.io.NioLocalFileSystem])
+    assert(fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem])
   }
 }

@@ -23,9 +23,9 @@ class SpecAbstractFileSystem(uri: URI, conf: Configuration)
   * local and on a non-local file system, the atomic-publish contract
   * through the Hadoop conf every session sees (`core-site.xml`), that
   * Spark's file checksums still guard state files written through it, and
-  * that a streaming query on a local checkpoint starts no `readlink`
-  * process. Every check counts files, bytes or processes, so machine load
-  * cannot move it.
+  * that a streaming query on a local checkpoint and a parquet write start
+  * no process at all (no `readlink`, no `chmod`). Every check counts
+  * files, bytes or processes, so machine load cannot move it.
   */
 class CheckpointFileManagerSpec extends SparkSpec {
 
@@ -145,28 +145,16 @@ class CheckpointFileManagerSpec extends SparkSpec {
   }
 
   test("a 5-micro-batch q5 on a file: checkpoint starts no readlink process") {
-    import jdk.jfr.Recording
-    import jdk.jfr.consumer.RecordingFile
     val base = tmp("graftcfm_forks")
-    val recording = new Recording()
-    recording.enable("jdk.ProcessStart")
-    recording.start()
-    val committed =
-      try {
-        // a positive control, so an empty recording cannot pass
-        assert(new ProcessBuilder("true").start().waitFor() == 0)
-        runQ5(base.resolve("ckpt"), base.resolve("out"), rows = 500L, batches = 5)
-      } finally recording.stop()
-    val dump = base.resolve("forks.jfr")
-    recording.dump(dump)
-    recording.close()
-    val commands = RecordingFile.readAllEvents(dump).asScala
-      .filter(_.getEventType.getName == "jdk.ProcessStart")
-      .map(_.getString("command").trim.split("\\s+").head.split('/').last)
-      .groupBy(identity).view.mapValues(_.size).toMap
-    info(s"processes started: $commands; committed micro-batches: $committed")
+    val (committed, commands) = ProcessStarts.record {
+      val committed = runQ5(base.resolve("ckpt"), base.resolve("out"), rows = 500L, batches = 5)
+      // a batch parquet write goes through the same file: file system
+      spark.range(100).write.parquet(base.resolve("batch").toString)
+      committed
+    }
+    val byName = commands.groupBy(ProcessStarts.name).view.mapValues(_.size).toMap
+    info(s"processes started besides the control: $byName; committed micro-batches: $committed")
     assert(committed == 5)
-    assert(commands.getOrElse("true", 0) == 1, s"positive control not recorded: $commands")
-    assert(commands.getOrElse("readlink", 0) == 0, s"readlink processes were started: $commands")
+    assert(commands.isEmpty, s"processes were started: $byName\n${commands.mkString("\n")}")
   }
 }
