@@ -17,12 +17,12 @@ import graft.nexmark._
   */
 object NexmarkQueries {
 
-  /** Event-time column from the model's epoch-millis long. */
-  def withEventTime(df: DataFrame, tsCol: String = "timestamp"): DataFrame =
-    df.withColumn("eventTime", timestamp_millis(col(tsCol)))
-
-  private def watermarked(df: DataFrame, wm: String): DataFrame =
-    withEventTime(df).withWatermark("eventTime", wm)
+  /** `df` with the event-time column `eventTime` (the model's epoch-millis
+    * `tsCol`) and a watermark `wm` behind it: the one event-time watermark
+    * of every Nexmark and streaming pipeline. */
+  private[graft] def watermarked(df: DataFrame, wm: String,
+                                 tsCol: String = "timestamp"): DataFrame =
+    df.withColumn("eventTime", timestamp_millis(col(tsCol))).withWatermark("eventTime", wm)
 
   /** Q5 (A1/A2): per-auction windowed MAX(bid) + count + latest probe
     * timestamps (NexmarkQuery5.java:201-251; commented spec agg :402-422).

@@ -50,9 +50,7 @@ object NexmarkStateful {
   def q5Stateful(bids: Dataset[Bid], windowDurationMs: Long,
                  wm: String = "2 seconds"): Dataset[Query5Output] = {
     import bids.sparkSession.implicits._
-    val withTime = bids.toDF
-      .withColumn("eventTime", timestamp_millis(col("timestamp")))
-      .withWatermark("eventTime", wm)
+    val withTime = NexmarkQueries.watermarked(bids.toDF, wm)
       .as[Bid]
     withTime
       .groupByKey(_.auctionId)
@@ -84,9 +82,7 @@ object NexmarkStateful {
   def q5bStateful(bids: Dataset[Bid], flushIntervalMs: Long,
                   wm: String = "2 seconds"): Dataset[Query5Output] = {
     import bids.sparkSession.implicits._
-    val withTime = bids.toDF
-      .withColumn("eventTime", timestamp_millis(col("timestamp")))
-      .withWatermark("eventTime", wm)
+    val withTime = NexmarkQueries.watermarked(bids.toDF, wm)
       .as[Bid]
     withTime
       .groupByKey(_.auctionId)
@@ -195,9 +191,7 @@ object NexmarkStateful {
                       stateTtlMs: Option[Long] = None): Dataset[Query8Output] = {
     import elems.sparkSession.implicits._
     val probe = new ProbeCounters.Handle(ProbeCounters.freshId())
-    val withTime = elems.toDF
-      .withColumn("eventTime", timestamp_millis(col("creationTs")))
-      .withWatermark("eventTime", "2 seconds")
+    val withTime = NexmarkQueries.watermarked(elems.toDF, "2 seconds", "creationTs")
       .as[PA]
     val timeoutConf =
       if (stateTtlMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
@@ -264,9 +258,7 @@ object NexmarkStateful {
     import bids.sparkSession.implicits._
     val b = bids.map(x => AB(x.auctionId, isAuction = false, -1L, x.personId, x.bid, x.timestamp))
     val a = auctions.map(x => AB(x.auctionId, isAuction = true, x.end, -1L, -1.0, x.timestamp))
-    b.unionByName(a).toDF
-      .withColumn("eventTime", timestamp_millis(col("ts")))
-      .withWatermark("eventTime", "2 seconds")
+    NexmarkQueries.watermarked(b.unionByName(a).toDF, "2 seconds", "ts")
       .as[AB]
   }
 
@@ -414,9 +406,8 @@ object NexmarkStateful {
                      bids: Dataset[Bid], windowMs: Long,
                      tombstoneTtlMs: Option[Long] = None): Dataset[FunnelOut] = {
     import persons.sparkSession.implicits._
-    def wm(ds: Dataset[FEvent]): org.apache.spark.sql.DataFrame = ds.toDF
-      .withColumn("eventTime", timestamp_millis(col("ts")))
-      .withWatermark("eventTime", "2 seconds")
+    def wm(ds: Dataset[FEvent]): org.apache.spark.sql.DataFrame =
+      NexmarkQueries.watermarked(ds.toDF, "2 seconds", "ts")
     val p = wm(persons.map(x => FEvent(x.personId, 0, x.timestamp)))
     val a = wm(auctions.map(x => FEvent(x.personId, 1, x.timestamp)))
     val b = wm(bids.map(x => FEvent(x.personId, 2, x.timestamp)))

@@ -267,9 +267,7 @@ object NexmarkTws {
     * end. */
   def sessionsTws(bids: Dataset[Bid], gapMs: Long = 5000L): Dataset[Q11Session] = {
     import bids.sparkSession.implicits._
-    bids.toDF
-      .withColumn("eventTime", timestamp_millis(col("timestamp")))
-      .withWatermark("eventTime", "2 seconds")
+    NexmarkQueries.watermarked(bids.toDF, "2 seconds")
       .as[Bid]
       .groupByKey(_.personId)
       .transformWithState(new SessionWindowProcessor(gapMs),

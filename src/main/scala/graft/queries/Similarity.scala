@@ -542,6 +542,106 @@ object Similarity extends QueryModule {
     else top.select(col(key).as(as), explode(col("top.cid")).as("cid"))
   }
 
+  /** Column layout of one L2 nearest-centroid problem: points
+    * (vec_id, `part`…, `emb`, ssq) get one assignment per `key`, against
+    * centroids (`part`…, `id`, `cemb`, csq), one per `cell`; ssq and csq
+    * are self-dots. k-means clusters whole embeddings ([[KmeansL2]]), PQ
+    * each subspace's sub-vectors against its own codewords ([[PqL2]]).
+    */
+  private[graft] final case class L2Space(emb: String, cemb: String, id: String, part: Seq[String]) {
+    def key: Seq[String] = "vec_id" +: part
+    def cell: Seq[String] = part :+ id
+  }
+  private[graft] val KmeansL2 = L2Space("emb", "cemb", "cid", Nil)
+  private[graft] val PqL2 = L2Space("sub", "cwv", "code", Seq("j"))
+
+  /** Squared L2 distance `d2` of each point to each centroid of `cent`,
+    * all columns kept, as the oracles' pinned ((ssq − 2·x·c) + csq)
+    * ([[l2sqPre]]). The centroids always broadcast: a USING join on the
+    * partition columns, else a cross join. Every L2 centroid decision
+    * ranks centroids by this projection.
+    */
+  private[graft] def centroidL2(pts: DataFrame, cent: DataFrame, s: L2Space): DataFrame = {
+    val c = broadcast(cent)
+    (if (s.part.isEmpty) pts.crossJoin(c) else pts.join(c, s.part))
+      .withColumn("d2", l2sqPre(col("ssq"), col(s.emb), col(s.cemb), col("csq")))
+  }
+
+  /** Each key's nearest centroid over [[centroidL2]] rows, (key…, `id`,
+    * d2): lowest d2, ties to the lowest id (the oracles' row_number order).
+    * A reviewed SortAggregate, like [[nearestCell]]'s argmax.
+    */
+  private[graft] def nearestL2(d2s: DataFrame, s: L2Space): DataFrame =
+    d2s.groupBy(s.key.map(col): _*)
+      .agg(min_by(struct(col(s.id), col("d2")), struct(col("d2"), col(s.id))).as("a"))
+      .select(s.key.map(col) ++ Seq(col(s"a.${s.id}").as(s.id), col("a.d2").as("d2")): _*)
+
+  /** The Lloyd's update: the mean of each cell's points under `assign`,
+    * as a [[centroidL2]] centroid frame (cell…, `cemb`, csq). Coordinates
+    * are quantized to 2⁻²⁰ units ([[KmeansQ]]) and summed as exact
+    * BIGINTs, then divided back in a pinned order: bit-identical means in
+    * both engines. A cell that loses all its points drops out.
+    */
+  private[graft] def meanL2(pts: DataFrame, assign: DataFrame, s: L2Space): DataFrame =
+    assign.join(pts, s.key)
+      .select(s.cell.map(col) :+ posexplode(col(s.emb)).as(Seq("dim", "x")): _*)
+      // not pre-partitioned by cell: that would share one exchange between
+      // the two aggs but ship N×dim exploded rows instead of K×dim partials
+      .groupBy(s.cell.map(col) :+ col("dim"): _*)
+      .agg(expr(s"SUM(CAST(ROUND(x * $KmeansQ) AS BIGINT))").as("qsum"),
+           count(lit(1)).as("n"))
+      .withColumn("coord", expr(s"CAST(qsum AS DOUBLE) / CAST(n AS DOUBLE) / $KmeansQ"))
+      .groupBy(s.cell.map(col): _*)
+      .agg(expr("transform(array_sort(collect_list(struct(dim, coord))), s -> s.coord)").as(s.cemb))
+      .withColumn("csq", dp(col(s.cemb), col(s.cemb)))
+
+  /** One round of [[lloyd]]: the assignments changed entering it and its
+    * quantized inertia (exact BIGINT sum of round(d2 × 2²⁰)). */
+  private[graft] final case class LloydRound(round: Int, changed: Long, inertiaQ: Long)
+
+  /** The final assignment (key…, `id`, d2), its centroids (cell…, `cemb`, csq), the trace. */
+  private[graft] final case class Lloyd(assign: DataFrame, cents: DataFrame, trace: Seq[LloydRound])
+
+  /** Lloyd's from `init`: assign ([[centroidL2]], [[nearestL2]]) → mean
+    * update ([[meanL2]]) until no assignment changes. Quantized means are
+    * a pure function of the assignment, so that is an exact fixed point,
+    * and the returned centroids are the final assignment's own means.
+    * `maxRounds` bounds the assignment rounds (round 1 assigns to `init`)
+    * and fails loudly, like MaxCcRounds; it is not a tuning knob.
+    *
+    * Per round ONE driver action: the change count and the quantized
+    * inertia come from a single next⋈prev aggregate (1:1 on the key), and
+    * the LAZY per-round checkpoint is materialized by that same action —
+    * at 1 B vectors each saved action is a cluster job launch. The
+    * quantized mean minimizes inertia only up to the 2⁻²⁰ quantum, so
+    * inertia may wobble by ≤ 1 quantum per assignment between rounds.
+    */
+  private[graft] def lloyd(pts: DataFrame, init: DataFrame, s: L2Space, maxRounds: Int,
+                           what: String): Lloyd = {
+    require(maxRounds >= 1)
+    def assignTo(cent: DataFrame) = nearestL2(centroidL2(pts, cent, s), s).localCheckpoint(false)
+    val iqCol = expr(s"SUM(CAST(ROUND(d2 * $KmeansQ) AS BIGINT))")
+    val prev = "p" + s.id
+    var cents = init
+    var assign = assignTo(cents)
+    val first = assign.agg(count(lit(1)), iqCol).head
+    val trace = scala.collection.mutable.ArrayBuffer(
+      LloydRound(1, first.getLong(0), first.getLong(1)))
+    var changed = trace.head.changed
+    while (changed != 0 && trace.size < maxRounds) {
+      cents = meanL2(pts, assign, s)
+      val next = assignTo(cents)
+      val row = next.join(assign.select(s.key.map(col) :+ col(s.id).as(prev): _*), s.key)
+        .agg(sum((col(s.id) =!= col(prev)).cast("long")), iqCol).head
+      changed = row.getLong(0)
+      assign = next
+      trace += LloydRound(trace.size + 1, changed, row.getLong(1))
+    }
+    if (changed != 0) throw new IllegalStateException(
+      s"$what did not converge in $maxRounds rounds (last round moved $changed assignments)")
+    Lloyd(assign, cents, trace.toSeq)
+  }
+
   /** IVF-style ANN candidate generation shared by [[knnIvf]] and
     * [[knnIvfPq]]: every vector is assigned to its nearest coarse cell, each
     * query probes its NProbe nearest cells, and the output is the
@@ -591,7 +691,7 @@ object Similarity extends QueryModule {
 
   /** Convergence trace of the production k-means (round 1 = the
     * pivot-cell assignment), for training-quality audits. */
-  private[graft] def kmeansTrace(spark: SparkSession, dir: String): Seq[KmeansRound] =
+  private[graft] def kmeansTrace(spark: SparkSession, dir: String): Seq[LloydRound] =
     kmeansIterate(spark, dir, maxRounds = 30)._2
 
   /** Total (query, candidate) pairs the IVF probe would score — the
@@ -604,14 +704,11 @@ object Similarity extends QueryModule {
 
   /** Coarse centroids TRAINED by the convergent k-means (the production
     * reindex path) — the converged assignment's exact quantized means,
-    * keyed by cluster id. The pivot cells stay the cross-engine oracles;
-    * this is what a real IVF build would broadcast instead.
+    * (cid, cemb). The pivot cells stay the cross-engine oracles; this is
+    * what a real IVF build would broadcast instead.
     */
-  private[graft] def trainedCoarseCentroids(spark: SparkSession, dir: String): DataFrame = {
-    val e = kmeansPrep(spark, dir)
-    val (out, _) = kmeansIterate(spark, dir, maxRounds = 30)
-    kmeansMeanUpdate(e, out.select(col("vec_id"), col("cluster_id").as("cid")))
-  }
+  private[graft] def trainedCoarseCentroids(spark: SparkSession, dir: String): DataFrame =
+    kmeansLloyd(spark, dir, maxRounds = 30).cents.select(col("cid"), col("cemb"))
 
   /** Shared oracle CTE chain — the SQL twin of [[ivfCandidates]]
     * (cent → sims → assign → probes → cands over CTE `e`): interpolated
@@ -1174,15 +1271,12 @@ object Similarity extends QueryModule {
       .select(col("vec_id").as("code"), col("j"), col("sub").as("cwv"),
               col("ssq").as("csq"))
 
-  /** (vec_id, j, code): per (vector, subspace) argmin codeword — min over
-    * (d2, code) so ties break to the lowest code id, matching the oracle's
-    * row_number.
+  /** (vec_id, j, code, d2): per (vector, subspace) nearest codeword
+    * ([[nearestL2]]: ties to the lowest code id, matching the oracle's
+    * row_number) and its distance.
     */
   private def pqEncode(subs: DataFrame, cw: DataFrame): DataFrame =
-    subs.join(broadcast(cw), "j")
-      .withColumn("d2", l2sqPre(col("ssq"), col("sub"), col("cwv"), col("csq")))
-      .groupBy(col("vec_id"), col("j"))
-      .agg(min_by(col("code"), struct(col("d2"), col("code"))).as("code"))
+    nearestL2(centroidL2(subs, cw, PqL2), PqL2)
 
   def pqReconstruct(spark: SparkSession, dir: String): DataFrame = {
     val e = vecs(spark, dir)
@@ -1206,19 +1300,16 @@ object Similarity extends QueryModule {
 
   /** Per-subspace PQ codebook TRAINING — the production path next to the
     * deterministic pivot codebooks the cross-engine oracles pin
-    * ([[pqCodewords]]): Lloyd's over each subspace's 8-dim sub-vectors,
-    * initialized from the pivot codewords, run to assignment-fixed-point
-    * convergence exactly like [[kmeansIterate]].
+    * ([[pqCodewords]]): [[lloyd]] over each subspace's 8-dim sub-vectors,
+    * initialized from the pivot codewords, exactly as [[kmeansIterate]]
+    * runs it.
     *
-    * All PqM subspaces train in ONE loop: the cluster key is (j, code),
+    * All PqM subspaces train in ONE loop: the cell is (j, code) ([[PqL2]]),
     * so each round is a single broadcast-join assignment pass
-    * ([[pqEncode]] — the same argmin the encoder uses) plus one
-    * (j, code, dim) hash aggregate with the [[KmeansQ]] exact-integer
-    * mean — one Spark job per round regardless of M, not M loops.
-    * A codeword that loses all members is dropped (standard Lloyd's
-    * empty-cluster handling; K can only shrink, never invent codes).
-    * Convergence is the order-free assignment-change count == 0;
-    * `maxRounds` is a loud-failure guard.
+    * ([[pqEncode]]'s argmin) plus one (j, code, dim) hash aggregate — one
+    * Spark job per round regardless of M, not M loops. A codeword that
+    * loses all members is dropped. `maxRounds` bounds the assignment
+    * rounds and is a loud-failure guard.
     *
     * Returns (code, j, cwv, csq) in the exact shape [[pqEncode]] /
     * [[pqReconstructWith]] consume, so trained codebooks drop into the
@@ -1227,43 +1318,12 @@ object Similarity extends QueryModule {
     * against the pivot baseline.
     */
   def trainPqCodebooks(spark: SparkSession, dir: String,
-                       maxRounds: Int = 40): DataFrame =
-    trainPqCodebooksOn(pqSubsOf(spark, dir), maxRounds)
-
-  /** Training over a caller-supplied sub-vector view — lets the OPQ
-    * measurement train in the PERMUTED space (permute → train, the full
-    * OPQ-P pipeline) with the identical Lloyd's loop. */
-  private[graft] def trainPqCodebooksOn(rawSubs: DataFrame,
-                                        maxRounds: Int = 40): DataFrame = {
-    require(maxRounds >= 1)
-    val subs = rawSubs.localCheckpoint(true)
-    var cw = pqCodewords(subs).localCheckpoint(true)
-    var assign = pqEncode(subs, cw).localCheckpoint(true)
-    var changed = -1L
-    var r = 0
-    while (changed != 0 && r < maxRounds) {
-      r += 1
-      val means = assign.join(subs, Seq("vec_id", "j"))
-        .select(col("j"), col("code"), posexplode(col("sub")).as(Seq("dim", "x")))
-        .groupBy(col("j"), col("code"), col("dim"))
-        .agg(expr(s"SUM(CAST(ROUND(x * $KmeansQ) AS BIGINT))").as("qsum"),
-             count(lit(1)).as("n"))
-        .withColumn("coord", expr(s"CAST(qsum AS DOUBLE) / CAST(n AS DOUBLE) / $KmeansQ"))
-        .groupBy(col("j"), col("code"))
-        .agg(expr("transform(array_sort(collect_list(struct(dim, coord))), s -> s.coord)").as("cwv"))
-      val nextCw = means
-        .select(col("code"), col("j"), col("cwv"), dp(col("cwv"), col("cwv")).as("csq"))
-        .localCheckpoint(true)
-      val next = pqEncode(subs, nextCw).localCheckpoint(true)
-      changed = next
-        .join(assign.select(col("vec_id"), col("j"), col("code").as("pcode")), Seq("vec_id", "j"))
-        .filter(col("code") =!= col("pcode")).count()
-      assign = next
-      cw = nextCw
-    }
-    if (changed != 0) throw new IllegalStateException(
-      s"PQ codebook training did not converge in $maxRounds rounds (last round moved $changed assignments)")
-    cw
+                       maxRounds: Int = 40): DataFrame = {
+    val subs = pqSubsOf(spark, dir).localCheckpoint(true)
+    // materialized once: the final means would otherwise be re-aggregated
+    // by every consumer (encode, reconstruct, each serving query)
+    lloyd(subs, pqCodewords(subs), PqL2, maxRounds, "PQ codebook training")
+      .cents.select(col("code"), col("j"), col("cwv"), col("csq")).localCheckpoint(true)
   }
 
   def knnPq(spark: SparkSession, dir: String): DataFrame = {
@@ -1343,16 +1403,15 @@ object Similarity extends QueryModule {
     *
     * Scale shape: the energy pass is ONE hash agg over (dim, x) pairs
     * (map-side combine does the reduction — 64 groups); the permutation
-    * is a 64-element broadcast row; encode/reconstruct reuse the exact
+    * is a 64-element broadcast row; encode reuses the exact
     * [[pqSubs]]/[[pqEncode]] machinery (N × M × K broadcast-codebook map
-    * work, no shuffle beyond the final 8-group agg). At 1 B vectors the
-    * added cost over plain PQ is the one energy agg — the re-layout rides
-    * the encode pass it was going to pay anyway.
+    * work; the error mass sums the d2 the argmin carries, no shuffle
+    * beyond the final 8-group agg). At 1 B vectors the added cost over
+    * plain PQ is the one energy agg — the re-layout rides the encode pass
+    * it was going to pay anyway.
     */
-  /** (dimE, ranked, pe): exact-integer per-dim energies, the rank→slot
-    * deal, and the permuted-layout embedding view — shared by
-    * [[opqPermute]] and the OPQ gain probe (permute → train → encode). */
-  private def opqLayout(e: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+  def opqPermute(spark: SparkSession, dir: String): DataFrame = {
+    val e = vecs(spark, dir)
     val dims = PqM * PqSubDim
     val dimE = e.select(posexplode(col("emb")).as(Seq("dim", "x")))
       .groupBy(col("dim"))
@@ -1370,20 +1429,10 @@ object Similarity extends QueryModule {
       .select(col("vec_id"),
         expr(s"transform(sequence(0, ${dims - 1}), i -> element_at(emb, element_at(pm, i + 1) + 1))")
           .as("emb"))
-    (dimE, ranked, pe)
-  }
-
-  def opqPermute(spark: SparkSession, dir: String): DataFrame = {
-    val e = vecs(spark, dir)
-    val (dimE, ranked, pe) = opqLayout(e)
     // per-subspace exact reconstruction-error mass for a layout
     def mseBySub(ev: DataFrame): DataFrame = {
       val subs = pqSubs(ev)
-      val cw = pqCodewords(subs)
-      pqEncode(subs, cw)
-        .join(broadcast(cw), Seq("j", "code"))
-        .join(subs.select(col("vec_id"), col("j"), col("sub"), col("ssq")), Seq("vec_id", "j"))
-        .withColumn("d2", l2sqPre(col("ssq"), col("sub"), col("cwv"), col("csq")))
+      pqEncode(subs, pqCodewords(subs))
         .groupBy(col("j"))
         .agg(expr("SUM(CAST(ROUND(d2 * 1000000) AS BIGINT))").as("mse_q"))
     }
@@ -1483,11 +1532,9 @@ object Similarity extends QueryModule {
     val subs = pqSubs(e)
     val cw = pqCodewords(subs)
     val codes = pqEncode(subs, cw)
-    val lut = subs.filter(col("vec_id") % QueryMod === 0)
-      .withColumnRenamed("vec_id", "query_id")
-      .join(broadcast(cw), "j")
-      .withColumn("pd", l2sqPre(col("ssq"), col("sub"), col("cwv"), col("csq")))
-      .select(col("query_id"), col("j"), col("code"), col("pd"))
+    val lut = centroidL2(subs.filter(col("vec_id") % QueryMod === 0)
+      .withColumnRenamed("vec_id", "query_id"), cw, PqL2)
+      .select(col("query_id"), col("j"), col("code"), col("d2").as("pd"))
     val scored = ivfCandidates(e)
       .join(codes, "vec_id")
       .join(broadcast(lut), Seq("query_id", "j", "code"))
@@ -1528,14 +1575,9 @@ object Similarity extends QueryModule {
     * unrolls the same two), emitting each vector's final cluster and
     * rounded distance.
     *
-    * Cross-engine exactness: the mean update is the classic float-sum
-    * order trap, so coordinates are quantized to integer units of 2⁻²⁰
-    * and summed EXACTLY (order-free BIGINT sum, the Det.cents pattern),
-    * then divided back in a pinned order — centroid arrays come out
-    * bit-identical in both engines, and distances reuse the pinned
-    * ((ssq − 2·a·b) + csq) composition. Assignment argmin is a min_by
-    * hash aggregate (map-side partials, no sort-window), ties to the
-    * lowest cid.
+    * Cross-engine exactness: [[meanL2]]'s quantized means and
+    * [[centroidL2]]'s pinned distances are bit-identical in both engines;
+    * [[nearestL2]] breaks ties to the lowest cid.
     *
     * Scale: centroids broadcast both rounds; assignment is a shuffle-free
     * narrow map over N×K; the mean update is one hash agg on (cid, dim)
@@ -1548,138 +1590,56 @@ object Similarity extends QueryModule {
   /** Vectors prepped for k-means rounds: self-dot precomputed, checkpointed
     * once (reused by every assignment round and mean update). */
   private def kmeansPrep(spark: SparkSession, dir: String): DataFrame =
-    // r16 probe, REJECTED: hash-partitioning by vec_id before the
-    // checkpoint (guide §2.4 one-exchange-shared-across-rounds) does NOT
-    // survive localCheckpoint — the LogicalRDD re-plans with
-    // ENSURE_REQUIREMENTS exchanges on every vec_id-keyed consumer, so
-    // the extra exchange bought nothing (A/B at sf0.1: s_kmeans_conv
-    // 8.33 → 8.03 s, inside noise; plan inspected).
-    // r17 probe, also REJECTED: a rows-aware BLOCK fan-out before the
-    // checkpoint (the layout survives even though partitioning metadata
-    // does not). A/B at sf0.1 was flat-to-negative inside the ±20% noise
-    // band (s_kmeans_conv 8.7 fan-out vs 9.6/8.1 identity) — the
-    // per-round kernels are already sub-0.1 s single-task, so extra
-    // blocks only add per-stage task overhead. Kept as-is.
+    // Neither hash-partitioned by vec_id first (localCheckpoint drops the
+    // partitioning, so every vec_id-keyed consumer re-exchanges anyway) nor
+    // fanned out to more blocks (the per-round kernels are sub-0.1 s single
+    // tasks): both measured flat at sf0.1.
     vecs(spark, dir).select(col("vec_id"), col("emb"))
       .withColumn("ssq", dp(col("emb"), col("emb")))
       .localCheckpoint(true)
 
-  // r17 probe, REJECTED: assignment as a narrow broadcast-argmin map
-  // (centroids collect_list'ed into one array row, per-vector argmin via
-  // an aggregate(transform(...)) fold — guide §2.4, removes the N×K
-  // exchange+hash-agg per round). Measured at sf0.1: s_kmeans_conv
-  // 7.1 → 9.3-10.2 s — the HOFs are CodegenFallback, so the K dot
-  // products per vector run interpreted at 3-5× the CPU of this codegen'd
-  // crossjoin+min_by, and the collect_list broadcast build costs the same
-  // job the removed exchange did. Kept as the codegen shape.
-  private def kmeansAssign(e: DataFrame, cents: DataFrame): DataFrame = {
-    val c = cents.withColumn("csq", dp(col("cemb"), col("cemb")))
-    e.crossJoin(broadcast(c))
-      .withColumn("d2", l2sqPre(col("ssq"), col("emb"), col("cemb"), col("csq")))
-      .groupBy(col("vec_id"))
-      .agg(min_by(struct(col("cid"), col("d2")), struct(col("d2"), col("cid"))).as("a"))
-      .select(col("vec_id"), col("a.cid").as("cid"), col("a.d2").as("d2"))
-  }
+  /** The k-means seed: the pivot cells as a [[centroidL2]] centroid frame. */
+  private def kmeansSeed(e: DataFrame): DataFrame =
+    pivotCentroids(e).withColumn("csq", dp(col("cemb"), col("cemb")))
 
-  private def kmeansMeanUpdate(e: DataFrame, assign: DataFrame): DataFrame =
-    assign.join(e, "vec_id")
-      .select(col("cid"), posexplode(col("emb")).as(Seq("dim", "x")))
-      // r17 probe, REJECTED: pre-partitioning by cid would let both aggs
-      // share one exchange (hash(cid) satisfies both clusterings), but it
-      // would also move the exchange BELOW the partial aggregation — N×dim
-      // exploded rows through the shuffle instead of K×dim map-side
-      // partials (guide §2.3 "aggregate before you shuffle" outweighs the
-      // saved exchange: the second exchange carries only K×dim rows).
-      .groupBy(col("cid"), col("dim"))
-      .agg(expr(s"SUM(CAST(ROUND(x * $KmeansQ) AS BIGINT))").as("qsum"),
-           count(lit(1)).as("n"))
-      .withColumn("coord", expr(s"CAST(qsum AS DOUBLE) / CAST(n AS DOUBLE) / $KmeansQ"))
-      .groupBy(col("cid"))
-      .agg(expr("transform(array_sort(collect_list(struct(dim, coord))), s -> s.coord)").as("cemb"))
+  // Not a narrow broadcast-argmin map over one collected centroid array:
+  // its HOFs are CodegenFallback, so the K dots per vector run interpreted
+  // (s_kmeans_conv 7.1 → 9.3-10.2 s at sf0.1 when tried).
+  private def kmeansAssign(e: DataFrame, cents: DataFrame): DataFrame =
+    nearestL2(centroidL2(e, cents, KmeansL2), KmeansL2)
 
   /** The fixed-[[KmeansAssignRounds]] assignment (vec_id, cid, d2) the
     * `s_kmeans` gate pins, seeded from the pivot cells. */
   private def kmeansFixed(e: DataFrame): DataFrame =
-    (2 to KmeansAssignRounds).foldLeft(kmeansAssign(e, pivotCentroids(e))) { (assign, _) =>
-      kmeansAssign(e, kmeansMeanUpdate(e, assign))
+    (2 to KmeansAssignRounds).foldLeft(kmeansAssign(e, kmeansSeed(e))) { (assign, _) =>
+      kmeansAssign(e, meanL2(e, assign, KmeansL2))
     }
+
+  /** (vec_id, cluster_id, d6): the k-means entries' output shape. */
+  private def kmeansOut(assign: DataFrame): DataFrame =
+    assign.select(col("vec_id"), col("cid").as("cluster_id"), round(col("d2"), 6).as("d6"))
 
   def kmeans(spark: SparkSession, dir: String): DataFrame =
-    kmeansFixed(kmeansPrep(spark, dir)).select(col("vec_id"), col("cid").as("cluster_id"),
-      round(col("d2"), 6).as("d6"))
+    kmeansOut(kmeansFixed(kmeansPrep(spark, dir)))
 
-  /** Per-round convergence trace of [[kmeansConverged]]: how many points
-    * changed cluster entering this round, and the round's quantized
-    * inertia (exact order-free BIGINT sum of round(d2 × 2²⁰)). */
-  private[graft] final case class KmeansRound(round: Int, changed: Long, inertiaQ: Long)
-
-  /** Lloyd's to (near-)convergence — the production variant next to the
-    * fixed-2-round cross-engine gate ([[kmeans]], oracle `s_kmeans`):
-    * iterate assign → mean-update until the ccIterate-style scalar
-    * convergence check fires — assignment-change count == 0, an order-free
-    * exact test (quantized centroids are a pure function of the
-    * assignment, so an unchanged assignment IS a fixed point: the next
-    * round would recompute identical centroids, distances and argmins).
-    * `maxRounds` is a loud-failure guard like MaxCcRounds, not a tuning
-    * knob.
-    *
-    * Per round: one broadcast-crossjoin assignment pass, one (cid, dim)
-    * hash-agg mean update, and ONE fused scalar action — the
-    * change count and the quantized inertia come out of a single
-    * next⋈prev aggregate (1:1 join on vec_id, so SUM over the join =
-    * SUM over next), and because the per-round checkpoint is LAZY, that
-    * same action is also what materializes the round's assignment
-    * blocks. One driver round-trip per round instead of three — at 17
-    * rounds the difference is measurable (s_kmeans_conv 10.2 → see
-    * BASELINE.md), and at 1 B vectors each saved action is a full
-    * cluster job launch. Quantized inertia is tracked for the trace;
-    * Lloyd's decreases true inertia monotonically, but the QUANTIZED
-    * mean is the exact minimizer only up to the 2⁻²⁰ coordinate
-    * quantum, so per-round inertia may wobble by ≤ 1 quantum per point
-    * (KmeansSpec asserts exactly that bound).
-    */
-  private[graft] def kmeansIterate(spark: SparkSession, dir: String,
-                                     maxRounds: Int): (DataFrame, Seq[KmeansRound]) = {
-    require(maxRounds >= 1)
+  /** [[lloyd]] over the embeddings from the pivot cells: the production
+    * variant of the fixed-2-round gate [[kmeans]]. */
+  private def kmeansLloyd(spark: SparkSession, dir: String, maxRounds: Int): Lloyd = {
     val e = kmeansPrep(spark, dir)
-    val iqCol = expr(s"SUM(CAST(ROUND(d2 * $KmeansQ) AS BIGINT))")
-    var assign = kmeansAssign(e, pivotCentroids(e)).localCheckpoint(false)
-    val first = assign.agg(count(lit(1)), iqCol).head
-    val trace = scala.collection.mutable.ArrayBuffer(
-      KmeansRound(1, first.getLong(0), first.getLong(1)))
-    var r = 1
-    var changed = trace.head.changed
-    while (changed != 0 && r < maxRounds) {
-      r += 1
-      val next = kmeansAssign(e, kmeansMeanUpdate(e, assign)).localCheckpoint(false)
-      val row = next.join(assign.select(col("vec_id"), col("cid").as("pcid")), "vec_id")
-        .agg(sum((col("cid") =!= col("pcid")).cast("long")), iqCol).head
-      changed = row.getLong(0)
-      assign = next
-      trace += KmeansRound(r, changed, row.getLong(1))
-    }
-    if (changed != 0) throw new IllegalStateException(
-      s"k-means did not converge in $maxRounds rounds (last round moved $changed points)")
-    (assign.select(col("vec_id"), col("cid").as("cluster_id"),
-       round(col("d2"), 6).as("d6")), trace.toSeq)
+    lloyd(e, kmeansSeed(e), KmeansL2, maxRounds, "k-means")
   }
 
-  /** [[kmeansIterate]] with the default round guard. 100 (was 30
-    * through r12): the r13 geometry-preserving ScaleUp replaced the
-    * clique fixture — whose replicas snapped to their parents in <= 17
-    * rounds — with interpolant chords, real Lloyd's geometry with the
-    * classic slow tail (probed: sf1 moves <= 20 points/round from round
-    * ~50 and converges at 76 — a per-round trace on the interpolant
-    * fixture of BASELINE.md §Round-13: geometry-preserving embedding
-    * ScaleUp). Still a
-    * loud-failure guard against cycling, not a tuning knob. */
-  def kmeansConverged(spark: SparkSession, dir: String): DataFrame =
-    kmeansIterate(spark, dir, maxRounds = 100)._1
+  /** [[kmeansLloyd]]'s assignment as (vec_id, cluster_id, d6), and its trace. */
+  private[graft] def kmeansIterate(spark: SparkSession, dir: String,
+                                     maxRounds: Int): (DataFrame, Seq[LloydRound]) = {
+    val l = kmeansLloyd(spark, dir, maxRounds)
+    (kmeansOut(l.assign), l.trace)
+  }
 
   /** Unroll depth of the `s_kmeans_conv` oracle: the max converged round
     * count across the probed scale factors (8 / 7 / 17 at
     * sf0.001 / 0.01 / 0.1; 76 at the sf1 interpolant fixture, see
-    * [[kmeansConverged]]). Rounds past convergence are EXACT no-ops —
+    * [[kmeansConvEntry]]). Rounds past convergence are EXACT no-ops —
     * an unchanged assignment reproduces identical quantized centroids,
     * distances and argmins — so one unroll depth serves every sf whose
     * convergence is at most this deep, and [[kmeansConvEntry]] fails
@@ -1692,8 +1652,11 @@ object Similarity extends QueryModule {
   private val KmeansConvRounds =
     Map("0.001" -> 8, "0.01" -> 7, "0.1" -> 17, "1" -> 76)
 
-  /** `s_kmeans_conv`: [[kmeansConverged]] with the converged round count
-    * pinned against [[KmeansConvRounds]] (and the oracle's unroll depth). */
+  /** `s_kmeans_conv`: [[kmeansIterate]] with the converged round count
+    * pinned against [[KmeansConvRounds]] (and the oracle's unroll depth).
+    * The round guard is 100: the sf1 interpolant fixture has Lloyd's
+    * classic slow tail (<= 20 points/round from round ~50, converged at
+    * 76; BASELINE.md §Round-13: geometry-preserving embedding ScaleUp). */
   def kmeansConvEntry(spark: SparkSession, dir: String): DataFrame = {
     val (out, trace) = kmeansIterate(spark, dir, maxRounds = 100)
     require(trace.size <= KmeansConvUnroll,

@@ -597,9 +597,7 @@ object StreamingBench extends QueryModule {
     val corpusFp = in.batch("corpus")
       .select(md5(col("auctionId").cast("string")).as("fp"))
       .distinct()
-    val guarded = in.stream[Bid]("bids").toDF
-      .withColumn("eventTime", timestamp_millis(col("timestamp")))
-      .withWatermark("eventTime", "2 seconds")
+    val guarded = NexmarkQueries.watermarked(in.stream[Bid]("bids").toDF, "2 seconds")
       .withColumn("fp", md5(col("auctionId").cast("string")))
       .dropDuplicates("fp")
       .join(broadcast(corpusFp.withColumn("in_corpus", lit(1))), Seq("fp"), "left")
@@ -728,9 +726,7 @@ object StreamingBench extends QueryModule {
     val postings = (0 until nb).map(b =>
       posted.filter(col("band") === b)
         .select(col("bkey").as(s"bk_$b"), col("cands").as(s"cands_$b")))
-    var s = bids
-      .withColumn("eventTime", timestamp_millis(col("timestamp")))
-      .withWatermark("eventTime", "2 seconds")
+    var s = NexmarkQueries.watermarked(bids, "2 seconds")
       .dropDuplicates("auctionId")
       .withColumn("toks", expr(nearToksExpr("auctionId")))
       .withColumn("bks", expr("minhash_bands(toks)"))
@@ -1114,9 +1110,7 @@ object StreamingBench extends QueryModule {
   private def streamQuantileProfile(in: Inputs): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.{Window => W}
-    val hist = in.stream[Bid]("bids").toDF
-      .withColumn("eventTime", timestamp_millis(col("timestamp")))
-      .withWatermark("eventTime", "2 seconds")
+    val hist = NexmarkQueries.watermarked(in.stream[Bid]("bids").toDF, "2 seconds")
       .withColumn("k", expr(
         "length(bin(greatest(CAST(ROUND(bid * 100) AS BIGINT), 1)))"))
       .groupBy(window(col("eventTime"), "5 seconds"), col("k"))
@@ -1218,9 +1212,7 @@ object StreamingBench extends QueryModule {
     * pin 1-batch == 4-batch over its own bounded fixture). */
   private[graft] def qualityGateStream(bids: DataFrame, gate: DataFrame, d: Long): DataFrame = {
     import org.apache.spark.sql.functions._
-    bids
-      .withColumn("eventTime", timestamp_millis(col("timestamp")))
-      .withWatermark("eventTime", "2 seconds")
+    NexmarkQueries.watermarked(bids, "2 seconds")
       .withColumn("doc_id", pmod(col("auctionId"), lit(d)))
       .join(broadcast(gate), Seq("doc_id"))
       .groupBy(window(col("eventTime"), "5 seconds"), col("source"))
@@ -1303,9 +1295,7 @@ object StreamingBench extends QueryModule {
   private def streamKnnServe(in: Inputs): DataFrame = {
     import org.apache.spark.sql.functions._
     val (qembs, probes, cells, v) = Similarity.ivfServeStatics(in.spark, in.dir)
-    val served = in.stream[Bid]("bids").toDF
-      .withColumn("eventTime", timestamp_millis(col("timestamp")))
-      .withWatermark("eventTime", "2 seconds")
+    val served = NexmarkQueries.watermarked(in.stream[Bid]("bids").toDF, "2 seconds")
       .dropDuplicates("auctionId", "eventTime")
       .withColumn("qv", pmod(col("auctionId"), lit(v)))
       .join(broadcast(qembs), Seq("qv"))
@@ -1430,9 +1420,7 @@ object StreamingBench extends QueryModule {
     * 1-batch == 4-batch): windowed per-key change-log compaction. */
   private[graft] def upsertCompact(changes: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
-    changes
-      .withColumn("eventTime", timestamp_millis(col("timestamp")))
-      .withWatermark("eventTime", "2 seconds")
+    NexmarkQueries.watermarked(changes, "2 seconds")
       .withColumn("op",
         when(pmod(col("personId"), lit(10)) === 0, lit("delete")).otherwise(lit("upsert")))
       .groupBy(window(col("eventTime"), "5 seconds"), col("auctionId"))

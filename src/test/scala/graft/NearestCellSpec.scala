@@ -18,7 +18,8 @@ import graft.queries.Similarity
   *
   * Plus a source guard: the cell argmax and the probe-list aggregate are
   * written once each in Similarity.scala (besides the two documented
-  * exceptions), and the centroid broadcast only in centroidCos.
+  * exceptions), and the centroid broadcast only in centroidCos and its L2
+  * twin centroidL2.
   */
 class NearestCellSpec extends SparkSpec {
   import spark.implicits._
@@ -114,8 +115,11 @@ class NearestCellSpec extends SparkSpec {
     // topCells + knnRangeFiltered's budget-sliced list
     assert(count(java.util.regex.Pattern.quote(
       """collect_list(struct(negate(col("cos")).as("ncos"), col("cid")))""")) == 2)
-    // the only centroid broadcast is centroidCos's
-    assert(count("""broadcast\((\w*[cC]ent\w*|pivotCentroids\(\w+\))\)""") == 1)
+    // the only centroid broadcasts are the two projections': centroidCos
+    // (cosine) and centroidL2 (L2)
+    val sites = """broadcast\((\w*[cC]ent\w*|pivotCentroids\(\w+\))\)""".r.findAllMatchIn(src)
+      .map(m => """def (\w+)""".r.findAllMatchIn(src.take(m.start)).toSeq.last.group(1)).toSeq
+    assert(sites.sorted == Seq("centroidCos", "centroidL2"))
     assert(!src.contains("kmeansInit"))
   }
 }

@@ -44,7 +44,7 @@ class PlanSweepSpec extends SparkSpec {
     * minimal — adding a name here is a reviewed decision, not a
     * convenience. The 18 below are every entry that plans one of the
     * documented argmin/argmax aggregates of the IVF/PQ/k-means family
-    * (cell assignment, PQ code assignment, Lloyd's assignment), directly
+    * (cell assignment, PQ code and k-means assignment), directly
     * or inside a subplan it shares. Their ordering key is a (double, id)
     * pair: a struct in the agg buffer is immutable, so HashAggregate is
     * impossible, and the
@@ -52,15 +52,15 @@ class PlanSweepSpec extends SparkSpec {
     * max-then-join-back second pass shuffles the full N×K similarity
     * table, while the SortAggregate keeps map-side partials and ships
     * only one pre-reduced row per group (rationale in the
-    * `nearestCell` scaladoc, Similarity.scala). */
+    * `nearestCell` and `nearestL2` scaladocs, Similarity.scala). */
   private val sortAggAllowed: Map[String, String] = Map(
     "s_knn_ivf" -> "IVF cell-assignment argmax over (cos, -cid) — nearestCell scaladoc",
-    "s_knn_ivfpq" -> "ivfCandidates assignment + PQ code argmin over (d2, code)",
-    "s_knn_pq" -> "PQ code-assignment argmin over (d2, code)",
-    "s_kmeans" -> "Lloyd's assignment argmin over (d2, cid)",
+    "s_knn_ivfpq" -> "ivfCandidates assignment + PQ code argmin over (d2, code) — nearestL2 rationale",
+    "s_knn_pq" -> "PQ code-assignment argmin over (d2, code) — nearestL2 rationale",
+    "s_kmeans" -> "k-means assignment argmin over (d2, cid) — nearestL2 rationale",
     "s_knn_graph" -> "IVF cell-assignment argmax (nearestCell rationale) over the full corpus",
     "s_knn_graph_scaled" -> "same build argmax as s_knn_graph, sqrt(N)-stride centroids",
-    "s_ood_outliers" -> "contains the s_kmeans assignment subplan (Lloyd's argmin)",
+    "s_ood_outliers" -> "contains the s_kmeans assignment subplan (nearestL2 argmin)",
     "s_incremental_index" -> "base/delta cell-assignment argmax over (cos, -cid) — nearestCell rationale",
     "s_index_delete" -> "cell-assignment argmax over (cos, -cid) — nearestCell rationale",
     "s_knn_pagerank" -> "contains the knnGraph subplan (cell-assignment argmax)",
@@ -71,7 +71,7 @@ class PlanSweepSpec extends SparkSpec {
     "s_serve_ndcg" -> "contains the knnIvf subplan (cell-assignment argmax) as the audited serve",
     "s_index_merge" -> "per-segment + merged cell-assignment argmax over (cos, -cid) — nearestCell rationale",
     "s_cell_split" -> "cell-assignment argmax over (cos, -cid) carrying the rounded cos — nearestCell rationale (seed argmins are BIGINT-packed HashAggregates)",
-    "s_opq_permute" -> "PQ code-assignment argmin over (d2, code) in BOTH layouts — same pqEncode node class as s_knn_pq")
+    "s_opq_permute" -> "PQ code-assignment argmin over (d2, code) in BOTH layouts — nearestL2 rationale, as s_knn_pq")
 
   private val DefaultWidth = 8
 
