@@ -183,6 +183,46 @@ object NexmarkGen {
     sb.toString
   }
 
+  // ---- per-field builders: `person`, `auction` and the DSv2 source's
+  // rows (which build a string field only when it is read) share them ----
+
+  /** "first last" (beans/NewPersonEvent0.java:71-82). Sized: the shape is
+    * kept (consumers split on the space; parts are space-free a-z), at
+    * 6 + 1 + 7 = the reference's mean. */
+  def personName(cfg: GenConfig, eventId: Long): String =
+    if (cfg.sizedPayloads) letters(cfg, eventId, 10, 6) + " " + letters(cfg, eventId, 11, 7)
+    else pick(Dictionaries.Firstnames, cfg, eventId, 10) + " " +
+      pick(Dictionaries.Lastnames, cfg, eventId, 11)
+  def personEmail(cfg: GenConfig, eventId: Long): String =
+    if (cfg.sizedPayloads) randomString(cfg, eventId, 12, 9)
+    else pick(Dictionaries.Firstnames, cfg, eventId, 10) + "." +
+      pick(Dictionaries.Lastnames, cfg, eventId, 11) + "@" +
+      pick(Dictionaries.EmailDomains, cfg, eventId, 12)
+  def personCity(cfg: GenConfig, eventId: Long): String =
+    if (cfg.sizedPayloads) randomString(cfg, eventId, 13, 7)
+    else pick(Dictionaries.Cities, cfg, eventId, 13)
+  def personCountry(cfg: GenConfig, eventId: Long): String =
+    if (cfg.sizedPayloads) randomString(cfg, eventId, 14, 9)
+    else pick(Dictionaries.Countries, cfg, eventId, 14)
+  def personProvince(cfg: GenConfig, eventId: Long): String =
+    if (cfg.sizedPayloads) randomString(cfg, eventId, 15, 9)
+    else pick(Dictionaries.EmailDomains, cfg, eventId, 15)
+  def personZipcode(cfg: GenConfig, eventId: Long): String = "10587" // NewPersonEvent0.java:81
+  def personHomepage(cfg: GenConfig, eventId: Long): String =
+    if (cfg.sizedPayloads) randomString(cfg, eventId, 16, 6)
+    else pick(Dictionaries.Firstnames, cfg, eventId, 16)
+  def personCreditcard(cfg: GenConfig, eventId: Long): String = "00000000000" // NewPersonEvent0.java:80
+
+  def auctionItem(cfg: GenConfig, eventId: Long): Long = nextLong(cfg, eventId, 6, 1000000L)
+  def auctionInitialPrice(cfg: GenConfig, eventId: Long): Double =
+    nextInt(cfg, eventId, 7, 10000000).toDouble
+  def auctionCategory(cfg: GenConfig, eventId: Long): Long = nextInt(cfg, eventId, 8, 10).toLong
+  /** An auction ends this long after it starts (AuctionEvent0.java:76-86). */
+  val AuctionDurationMs = 10000L
+  /** 20-char name, 200-char description (RandomStrings.java:8-9). */
+  def auctionName(cfg: GenConfig, eventId: Long): String = randomString(cfg, eventId, 0, 20)
+  def auctionDescr(cfg: GenConfig, eventId: Long): String = randomString(cfg, eventId, 1, 200)
+
   /** beans/NewPersonEvent0.java:71-82. With [[GenConfig.sizedPayloads]],
     * textual fields switch to deterministic random strings at the
     * reference dictionaries' mean lengths (see the GenConfig field doc) —
@@ -190,56 +230,34 @@ object NexmarkGen {
     */
   def person(cfg: GenConfig, eventId: Long): Person = {
     val ts = eventTimestamp(cfg, eventId)
-    if (cfg.sizedPayloads)
-      Person(
-        timestamp = ts,
-        personId = personId(cfg, eventId),
-        // "first last" shape preserved (consumers split on the space;
-        // parts are space-free a-z): 6 + 1 + 7 = the reference's mean
-        name = letters(cfg, eventId, 10, 6) + " " + letters(cfg, eventId, 11, 7),
-        email = randomString(cfg, eventId, 12, 9),
-        city = randomString(cfg, eventId, 13, 7),
-        country = randomString(cfg, eventId, 14, 9),
-        province = randomString(cfg, eventId, 15, 9),
-        zipcode = "10587", // NewPersonEvent0.java:81
-        homepage = randomString(cfg, eventId, 16, 6),
-        creditcard = "00000000000", // NewPersonEvent0.java:80
-        ingestionTimestamp = ts)
-    else {
-      val first = pick(Dictionaries.Firstnames, cfg, eventId, 10)
-      val last = pick(Dictionaries.Lastnames, cfg, eventId, 11)
-      val domain = pick(Dictionaries.EmailDomains, cfg, eventId, 12)
-      Person(
-        timestamp = ts,
-        personId = personId(cfg, eventId),
-        name = s"$first $last",
-        email = s"$first.$last@$domain",
-        city = pick(Dictionaries.Cities, cfg, eventId, 13),
-        country = pick(Dictionaries.Countries, cfg, eventId, 14),
-        province = pick(Dictionaries.EmailDomains, cfg, eventId, 15),
-        zipcode = "10587", // NewPersonEvent0.java:81
-        homepage = pick(Dictionaries.Firstnames, cfg, eventId, 16),
-        creditcard = "00000000000", // NewPersonEvent0.java:80
-        ingestionTimestamp = ts)
-    }
+    Person(
+      timestamp = ts,
+      personId = personId(cfg, eventId),
+      name = personName(cfg, eventId),
+      email = personEmail(cfg, eventId),
+      city = personCity(cfg, eventId),
+      country = personCountry(cfg, eventId),
+      province = personProvince(cfg, eventId),
+      zipcode = personZipcode(cfg, eventId),
+      homepage = personHomepage(cfg, eventId),
+      creditcard = personCreditcard(cfg, eventId),
+      ingestionTimestamp = ts)
   }
 
-  /** NexmarkAuctionSource.java:69 + AuctionEvent0.init (AuctionEvent0.java:76-86):
-    * end = ts + 10s; 20-char name, 200-char description.
-    */
+  /** NexmarkAuctionSource.java:69 + AuctionEvent0.init (AuctionEvent0.java:76-86). */
   def auction(cfg: GenConfig, eventId: Long): Auction = {
     val ts = eventTimestamp(cfg, eventId)
     Auction(
       timestamp = ts,
       auctionId = auctionId(cfg, eventId),
       personId = auctionSeller(cfg, eventId),
-      itemId = nextLong(cfg, eventId, 6, 1000000L),
-      initialPrice = nextInt(cfg, eventId, 7, 10000000).toDouble,
+      itemId = auctionItem(cfg, eventId),
+      initialPrice = auctionInitialPrice(cfg, eventId),
       start = ts,
-      end = ts + 10000L,
-      categoryId = nextInt(cfg, eventId, 8, 10).toLong,
-      name = randomString(cfg, eventId, 0, 20),
-      descr = randomString(cfg, eventId, 1, 200),
+      end = ts + AuctionDurationMs,
+      categoryId = auctionCategory(cfg, eventId),
+      name = auctionName(cfg, eventId),
+      descr = auctionDescr(cfg, eventId),
       ingestionTimestamp = ts)
   }
 

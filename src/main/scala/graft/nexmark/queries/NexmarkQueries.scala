@@ -113,6 +113,10 @@ object NexmarkQueries {
     * (JoiningNewUsersWithAuctionsCoGroupFunction, :118-147; ties on
     * ingestion → the later creation). Built as one union aggregate
     * ([[perPersonWindows]]); `startCol` names the window-start column.
+    * The auction pick is `max_by_keys(creation, ingestion, creation)`
+    * ([[graft.spark.MaxByKeys]]), whose primitive buffer slots keep the
+    * aggregate a HashAggregate; person rows carry null keys and are
+    * skipped by it.
     */
   private def newUsers(persons: Dataset[Person], auctions: Dataset[Auction], win: Column => Column,
                        wm: String, startCol: String = "windowStartMs"): DataFrame = {
@@ -121,8 +125,8 @@ object NexmarkQueries {
     perPersonWindows(persons.toDF, auctions.toDF, Seq("timestamp", "ingestionTimestamp"), win, wm)(
       max(when(isPerson, col("timestamp"))).as("personCreation"),
       max(when(isPerson, col("ingestionTimestamp"))).as("personIngestion"),
-      max_by(auction(col("timestamp")),
-             auction(struct(col("ingestionTimestamp"), col("timestamp")))).as("auctionCreation"),
+      call_function("max_by_keys", auction(col("timestamp")),
+                    auction(col("ingestionTimestamp")), auction(col("timestamp"))).as("auctionCreation"),
       max(auction(col("ingestionTimestamp"))).as("auctionIngestion"))
       .select(unix_millis(col("win.start")).as(startCol), col("personId"),
               col("personCreation"), col("personIngestion"),

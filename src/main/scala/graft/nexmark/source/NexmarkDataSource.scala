@@ -2,7 +2,7 @@ package graft.nexmark.source
 
 import java.util
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{BaseGenericInternalRow, GenericInternalRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -98,25 +98,63 @@ object NexmarkDataSource {
     rowsPerBatch = m.getOrDefault("rowsPerBatch", "1000").toLong,
     sizedPayloads = m.getOrDefault("sizedPayloads", "false").toBoolean)
 
+  /** The row of event `eventId` of `entity`, in its schema's order. The
+    * numeric fields are computed here; each string field is built by its
+    * [[NexmarkGen]] builder (the one `person`/`auction` use) the first time
+    * it is read, so a query that reads 3 of 11 columns never builds the
+    * names, addresses or 220 characters of auction text it drops — the
+    * row-level counterpart of column pruning. Bids carry no strings.
+    */
   def rowOf(entity: String, cfg: GenConfig, eventId: Long): InternalRow = entity match {
     case "persons" =>
-      val p = NexmarkGen.person(cfg, eventId)
-      new GenericInternalRow(Array[Any](
-        p.timestamp, p.personId, UTF8String.fromString(p.name),
-        UTF8String.fromString(p.email), UTF8String.fromString(p.city),
-        UTF8String.fromString(p.country), UTF8String.fromString(p.province),
-        UTF8String.fromString(p.zipcode), UTF8String.fromString(p.homepage),
-        UTF8String.fromString(p.creditcard), p.ingestionTimestamp))
+      val ts = NexmarkGen.eventTimestamp(cfg, eventId)
+      new GenRow(cfg, eventId, Array[Any](
+        ts, NexmarkGen.personId(cfg, eventId), PersonName, PersonEmail, PersonCity,
+        PersonCountry, PersonProvince, PersonZipcode, PersonHomepage, PersonCreditcard, ts))
     case "auctions" =>
-      val a = NexmarkGen.auction(cfg, eventId)
-      new GenericInternalRow(Array[Any](
-        a.timestamp, a.auctionId, a.personId, a.itemId, a.initialPrice,
-        a.start, a.end, a.categoryId, UTF8String.fromString(a.name),
-        UTF8String.fromString(a.descr), a.ingestionTimestamp))
+      val ts = NexmarkGen.eventTimestamp(cfg, eventId)
+      new GenRow(cfg, eventId, Array[Any](
+        ts, NexmarkGen.auctionId(cfg, eventId), NexmarkGen.auctionSeller(cfg, eventId),
+        NexmarkGen.auctionItem(cfg, eventId), NexmarkGen.auctionInitialPrice(cfg, eventId),
+        ts, ts + NexmarkGen.AuctionDurationMs, NexmarkGen.auctionCategory(cfg, eventId),
+        AuctionName, AuctionDescr, ts))
     case _ =>
       val b = NexmarkGen.bid(cfg, eventId)
       new GenericInternalRow(Array[Any](
         b.ingestionTimestamp, b.timestamp, b.auctionId, b.personId, b.bidId, b.bid))
+  }
+
+  /** A string field's builder, held in its slot of a [[GenRow]] until read. */
+  private final class Text(val build: (GenConfig, Long) => String)
+  private val PersonName = new Text(NexmarkGen.personName)
+  private val PersonEmail = new Text(NexmarkGen.personEmail)
+  private val PersonCity = new Text(NexmarkGen.personCity)
+  private val PersonCountry = new Text(NexmarkGen.personCountry)
+  private val PersonProvince = new Text(NexmarkGen.personProvince)
+  private val PersonZipcode = new Text(NexmarkGen.personZipcode)
+  private val PersonHomepage = new Text(NexmarkGen.personHomepage)
+  private val PersonCreditcard = new Text(NexmarkGen.personCreditcard)
+  private val AuctionName = new Text(NexmarkGen.auctionName)
+  private val AuctionDescr = new Text(NexmarkGen.auctionDescr)
+
+  /** A generated row: each slot holds its value, or the [[Text]] that
+    * builds it, replaced by the value on first read. Read-only, and no
+    * field is null, so `isNullAt` builds nothing.
+    */
+  private final class GenRow(cfg: GenConfig, eventId: Long, values: Array[Any])
+      extends BaseGenericInternalRow {
+    override def numFields: Int = values.length
+    override protected def genericGet(i: Int): Any = values(i) match {
+      case t: Text =>
+        val v = UTF8String.fromString(t.build(cfg, eventId))
+        values(i) = v
+        v
+      case v => v
+    }
+    override def isNullAt(i: Int): Boolean = false
+    override def setNullAt(i: Int): Unit = throw new UnsupportedOperationException("read-only row")
+    override def update(i: Int, value: Any): Unit =
+      throw new UnsupportedOperationException("read-only row")
   }
 }
 

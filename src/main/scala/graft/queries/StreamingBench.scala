@@ -306,7 +306,7 @@ object StreamingBench extends QueryModule {
     * watermarked sources → the global watermark is the MIN of the two
     * per-source (max − 2000) watermarks; windows emit iff end ≤ that.
     * The argmax ordering (ingestion DESC, creation DESC) mirrors the
-    * Spark side's max_by(creation, struct(ingestion, creation)).
+    * Spark side's max_by_keys(creation, ingestion, creation).
     */
   private val streamQ8JoinSql: String =
     s"""WITH p AS (SELECT * FROM ${inPath("stream_q8_join", "persons")}),

@@ -101,6 +101,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(children.size == 1, "channel_sigs takes exactly 1 argument")
         ChannelSigs(children.head)
       }))
+    ext.injectFunction((
+      FunctionIdentifier("max_by_keys"),
+      MaxByKeys.info,
+      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
+        require(children.size >= 2, "max_by_keys takes (value, k1, ..., kn)")
+        MaxByKeys(children.head, children.tail)
+      }))
     // Spark's internal bloom-filter machinery (the expressions behind
     // runtime row-group filtering), exposed as named SQL functions for the
     // bloom-prefilter decontamination path. Spark does not register these

@@ -1,9 +1,14 @@
 package graft
 
-import graft.nexmark.SparkSpec
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import graft.nexmark.{Auction, GenConfig, NexmarkSources, Person, SparkSpec}
+import graft.nexmark.queries.NexmarkQueries
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.aggregate.SortAggregateExec
 import org.apache.spark.sql.execution.joins.CartesianProductExec
+import org.apache.spark.sql.execution.streaming.operators.stateful.StateStoreSaveExec
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+import org.apache.spark.sql.streaming.Trigger
 
 /** Table-driven plan-pin sweep over EVERY batch entry in
   * [[SparkEntry.queries]] (VERDICT r8 Next #2). ScalePlanSpec pins ~20
@@ -33,7 +38,8 @@ import org.apache.spark.sql.execution.joins.CartesianProductExec
   * EXECUTE the streaming topology and return a parquet read of the
   * results, so the returned frame's plan says nothing about the stateful
   * topology — those plans are pinned where they are built
-  * (StreamingMultiBatchSpec, RocksDBStateSpec, NexmarkStreamingSpec).
+  * (StreamingMultiBatchSpec, RocksDBStateSpec, NexmarkStreamingSpec), and
+  * the Q8 flavors' aggregate by the streaming test below.
   * Subquery plans are included via collectWithSubqueries.
   */
 class PlanSweepSpec extends SparkSpec {
@@ -46,8 +52,10 @@ class PlanSweepSpec extends SparkSpec {
     * documented argmin/argmax aggregates of the IVF/PQ/k-means family
     * (cell assignment, PQ code and k-means assignment), directly
     * or inside a subplan it shares. Their ordering key is a (double, id)
-    * pair: a struct in the agg buffer is immutable, so HashAggregate is
-    * impossible, and the
+    * pair in a struct, and a struct in the agg buffer is immutable, so
+    * they plan SortAggregate; the `max_by_keys` kernel
+    * ([[graft.spark.MaxByKeys]], one primitive buffer slot per key) is
+    * the hash-aggregated replacement they can move to. The other
     * alternatives are strictly worse at scale — a row_number window or a
     * max-then-join-back second pass shuffles the full N×K similarity
     * table, while the SortAggregate keeps map-side partials and ships
@@ -104,5 +112,29 @@ class PlanSweepSpec extends SparkSpec {
     }
     assert(violations.isEmpty,
       s"\nplan sweep violations (${violations.size}):\n  " + violations.mkString("\n  "))
+  }
+
+  test("streaming Q8, tumbling and sliding: no SortAggregate, no Sort in any micro-batch plan") {
+    import spark.implicits._
+    val cfg = GenConfig(eventsPerSecond = 100L)
+    def side(entity: String, rows: Long): DataFrame =
+      NexmarkSources.entityStreamDsv2(spark, entity, cfg, 2, rows, rows / 2)
+    val flavors = Seq[(String, (DataFrame, DataFrame) => DataFrame)](
+      "q8" -> ((p, a) => NexmarkQueries.q8NewUsers(p.as[Person], a.as[Auction], "5 seconds")),
+      "q8sliding" -> ((p, a) =>
+        NexmarkQueries.q8NewUsersSliding(p.as[Person], a.as[Auction], "5 seconds", "1 second")))
+    val sorts = flavors.flatMap { case (name, q) =>
+      val run = q(side("persons", 200), side("auctions", 800)).writeStream
+        .format("noop").outputMode("append").trigger(Trigger.AvailableNow()).start()
+      try assert(run.awaitTermination(120000), s"$name did not drain in 120 s")
+      finally run.stop()
+      val plan = run.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      assert(plan.collect { case s: StateStoreSaveExec => s }.size == 1, s"$name: $plan")
+      plan.collect {
+        case s: SortAggregateExec => s"$name: SortAggregate"
+        case s: SortExec => s"$name: Sort"
+      }
+    }
+    assert(sorts.isEmpty, sorts.mkString("\n"))
   }
 }

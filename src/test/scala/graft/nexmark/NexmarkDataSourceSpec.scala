@@ -1,7 +1,12 @@
 package graft.nexmark
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
+import graft.nexmark.source.NexmarkDataSource
 
 /** DSv2 `format("nexmark")` source: per-partition subtask strides, schema
   * per entity, bounded micro-batch streaming with admission control.
@@ -33,6 +38,48 @@ class NexmarkDataSourceSpec extends SparkSpec {
         .map(b => (b.timestamp, b.auctionId, b.personId, b.bid))
     }.toSet
     assert(got == want)
+  }
+
+  /** The row of the eagerly built `Person`/`Auction`/`Bid`, strings and all. */
+  private def eagerRow(entity: String, cfg: GenConfig, id: Long): InternalRow = {
+    val p: Product = entity match {
+      case "persons" => NexmarkGen.person(cfg, id)
+      case "auctions" => NexmarkGen.auction(cfg, id)
+      case _ => NexmarkGen.bid(cfg, id)
+    }
+    new GenericInternalRow(p.productIterator.map {
+      case s: String => UTF8String.fromString(s)
+      case v => v
+    }.toArray[Any])
+  }
+
+  test("rowOf equals the eagerly built entity, field by field, whichever fields are read") {
+    val ids = (0L until 90L) ++ (1L to 40L).map(e => e * e * e * 9L + e % 9) ++
+      Seq(123456789L, 9L * 100000000L + 8L)
+    for {
+      entity <- Seq("persons", "auctions", "bids")
+      sized <- Seq(false, true)
+      cfg <- Seq(GenConfig(sizedPayloads = sized),
+                 GenConfig(seed = 7L, subtask = 2, parallelism = 3, eventsPerSecond = 250L,
+                           sizedPayloads = sized))
+    } {
+      val schema = NexmarkDataSource.schemaFor(entity)
+      val proj = UnsafeProjection.create(schema)
+      val numeric = schema.fields.indices.filter(schema(_).dataType != StringType)
+      for (id <- ids) {
+        val want = proj(eagerRow(entity, cfg, id)).copy()
+        val got = proj(NexmarkDataSource.rowOf(entity, cfg, id))
+        for ((f, i) <- schema.fields.zipWithIndex)
+          assert(got.get(i, f.dataType) == want.get(i, f.dataType),
+            s"$entity sized=$sized $cfg id $id: ${f.name}")
+        // a row whose strings are never read still carries the same numbers
+        val fresh = NexmarkDataSource.rowOf(entity, cfg, id)
+        for (i <- numeric)
+          assert(fresh.get(i, schema(i).dataType) == want.get(i, schema(i).dataType),
+            s"$entity sized=$sized id $id: numeric ${schema(i).name}")
+        assert(schema.fields.indices.forall(!fresh.isNullAt(_)))
+      }
+    }
   }
 
   test("unknown entity is rejected") {
